@@ -53,19 +53,6 @@ object Scratch {
       fetcher,
       post = fc => println(s"SUBMIT → $fc"),
       now = Instant.parse("2026-08-12T05:30:00Z"))
-
-    // same feed through the DataSource V2 surface, with the time
-    // filter pushed into the source (see scan description in explain)
-    val dir = java.nio.file.Files.createTempDirectory("inreach-demo")
-    java.nio.file.Files.writeString(dir.resolve("demo-share.kml"), fixtureKml)
-    val v2 = spark.read.format("inreach")
-      .option("shares", "demo-share")
-      .option("now", "2026-08-12T05:30:00Z")
-      .option("fixtureDir", dir.toString)
-      .load()
-      .filter(org.apache.spark.sql.functions.col("whenRaw") >= "2026-08-12T05:05:00Z")
-    println(s"DSV2 rows after pushdown filter = ${v2.count()}")
-    v2.explain()
     spark.stop()
   }
 }

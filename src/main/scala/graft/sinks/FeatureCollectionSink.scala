@@ -7,14 +7,13 @@ import org.apache.spark.sql.DataFrame
   *
   * The reference POSTs one FeatureCollection per run to the CloudTAK
   * ETL API (`task.ts:182`, env contract `README.md:15-22`). Here the
-  * serialization is a DataFrame transformation (timestamps rendered
-  * as millisecond ISO-8601 `Z`, matching `toISOString()`,
-  * `task.ts:122`); the POST itself is an injectable effect so tests
-  * stay networkless.
-  *
-  * Scale note: a single-POST sink is inherently a driver-side
-  * collect — fine for the reference's tiny payloads. For engine-scale
-  * output use [[writeParquet]] / [[writeJson]] (distributed writers).
+  * per-feature serialization is a DataFrame transformation (timestamps
+  * rendered as millisecond ISO-8601 `Z`, matching `toISOString()`,
+  * `task.ts:122`); its output is written to
+  * [[graft.sinks.v2.FeatureCollectionDataSource]]
+  * (`format("featurecollection")`), which assembles the one document
+  * and performs the POST through an injectable effect so tests stay
+  * networkless.
   */
 object FeatureCollectionSink {
 
@@ -27,23 +26,4 @@ object FeatureCollectionSink {
     val opts = Map("timestampFormat" -> IsoMillis)
     features.select(to_json(struct(features.columns.map(col): _*), opts).as("feature"))
   }
-
-  /** Assemble the full FeatureCollection JSON document on the driver
-    * (reference `task.ts:172-180`; empty feeds contribute nothing). */
-  def collectFeatureCollection(features: DataFrame): String = {
-    val rows = toFeatureJson(features).collect().map(_.getString(0))
-    s"""{"type":"FeatureCollection","features":[${rows.mkString(",")}]}"""
-  }
-
-  /** Submit = render + effect. Injectable `post` mirrors
-    * `this.submit(fc)` (`task.ts:182`). */
-  def submit(features: DataFrame)(post: String => Unit): Unit =
-    post(collectFeatureCollection(features))
-
-  /** Distributed sinks for engine-scale output. */
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-
-  def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
 }

@@ -10,10 +10,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import java.util
 
-/** DataSource V2 WRITE path for the FeatureCollection sink — the
-  * distributed upgrade of [[graft.sinks.FeatureCollectionSink]]'s
-  * driver-side `collect()` (reference semantics: ONE FeatureCollection
-  * POST per run, `task.ts:172-182`):
+/** The FeatureCollection sink, the one sink path [[graft.Pipeline]]
+  * writes through (reference semantics: ONE FeatureCollection POST per
+  * run, `task.ts:172-182`):
   *
   * {{{
   * FeatureCollectionSink.toFeatureJson(features)
@@ -34,14 +33,14 @@ import java.util
   * Input contract: exactly one string column (the pre-rendered feature
   * JSON from `toFeatureJson`). Effects: `targetPath` writes the
   * document to a file; `postId` looks up a programmatic effect
-  * registered in [[FeatureCollectionDataSource.posts]] (tests register
-  * collectors; production registers the HTTP client at startup —
-  * closures cannot ride string options).
+  * registered in [[FeatureCollectionDataSource.posts]] (closures
+  * cannot ride string options; `Pipeline.run` registers its `post`
+  * under a per-call id and removes it after the write).
   *
   * Scale note: the assembled document is one string on the driver —
   * appropriate for the reference's payloads (single POST is the API's
-  * contract). Corpus-scale output belongs in the distributed file
-  * sinks, not here.
+  * contract). Corpus-scale output belongs in Spark's distributed file
+  * writers, not here.
   */
 final class FeatureCollectionDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "featurecollection"

@@ -1,27 +1,20 @@
 package graft.sources
 
-import graft.model.{RawPlacemark, Share}
-import org.apache.spark.sql.{Dataset, SparkSession}
-
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 import java.util.Base64
-import scala.util.{Failure, Success, Try}
 
-/** The inReach HTTP/KML source (SURVEY.md §2.1 S1–S8).
-  *
-  * Shape: the (tiny, driver-known) share list is parallelized one
-  * share per partition — the reference's I/O-parallel fan-out +
-  * `Promise.all` barrier (`task.ts:66-68,177`) becomes a stage of
-  * parallel Spark tasks with the barrier at the next shuffle.
+/** The inReach feed's pure helpers and its fetch seam (SURVEY.md §2.1
+  * S1–S8). The source itself is [[graft.sources.v2.InReachDataSource]]
+  * (`format("inreach")`).
   *
   * The 30-minute lookback (`task.ts:80-82`) is a source-level
   * predicate pushdown: it ships to the server as the `d1` query param
   * rather than filtering after fetch.
   *
-  * `fetcher` is the networkless test seam (SURVEY.md §7.1): production
+  * `Fetcher` is the networkless test seam (SURVEY.md §7.1): production
   * uses [[InReachSource.httpFetcher]], tests inject KML strings.
   * Fetchers must be Serializable — they run inside executor tasks.
   */
@@ -57,40 +50,5 @@ object InReachSource {
     val builder = HttpRequest.newBuilder(URI.create(url)).GET()
     password.foreach(p => builder.header("Authorization", basicAuth(p)))
     client.send(builder.build(), HttpResponse.BodyHandlers.ofString()).body()
-  }
-
-  /** shares → raw placemark rows. One share per partition; per-share
-    * failure isolation (fetch or parse error → 0 rows + stderr
-    * warning, never a job failure — reference `task.ts:165-168`,
-    * CHANGELOG "Increased fault tolerance").
-    *
-    * `debug` is the reference's DEBUG toggle (`task.ts:190-192`):
-    * per-share fetch/parse diagnostics on stderr, off by default. */
-  def read(
-      spark: SparkSession,
-      shares: Seq[Share],
-      fetcher: Fetcher,
-      now: Instant,
-      lookbackMinutes: Long = 30,
-      debug: Boolean = false): Dataset[RawPlacemark] = {
-    import spark.implicits._
-    val seed = spark.createDataset(shares)
-      .repartition(math.max(shares.size, 1))
-    seed.flatMap { share =>
-      val shareId = normalizeShareId(share.ShareId)
-      val callSign = share.CallSign.getOrElse(shareId) // task.ts:75
-      Try {
-        val body = fetcher(feedUrl(shareId, now, lookbackMinutes), share.Password)
-        val rows = KmlParser.parse(body, shareId, callSign)
-        if (debug) System.err.println(
-          s"FEED-DEBUG: $callSign: fetched ${body.length} chars, parsed ${rows.size} placemarks")
-        rows
-      } match {
-        case Success(rows) => rows
-        case Failure(err) =>
-          System.err.println(s"FEED: $callSign: $err") // task.ts:166
-          Seq.empty[RawPlacemark]
-      }
-    }
   }
 }

@@ -16,9 +16,8 @@ import java.util
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-/** DataSource V2 surface for the inReach KML feed — the idiomatic
-  * upgrade of [[graft.sources.InReachSource]] (SURVEY.md §2.1 S4,
-  * §7.3 "custom DataSource V2, optional"):
+/** The inReach KML feed source (SURVEY.md §2.1 S4, §7.3), the one
+  * source path [[graft.Pipeline]] reads through:
   *
   * {{{
   * spark.read.format("inreach")
@@ -36,19 +35,23 @@ import scala.util.Try
   *   `share.<id>.callsign` options (`<id>` = normalized ShareId,
   *   matched case-insensitively): the password rides the partition to
   *   the executor and becomes the basic-auth header (`task.ts:84-87`);
-  *   a missing callsign defaults to the ShareId (`task.ts:75`) —
-  *   exactly the [[graft.sources.InReachSource.read]] contract;
+  *   a missing callsign defaults to the ShareId (`task.ts:75`);
   * - `SupportsPushDownFilters`: a `whenRaw ≥ t` filter tightens the
   *   server-side `d1` lookback parameter (`task.ts:80-82`) — genuine
   *   source-level predicate pushdown, visible in `explain` as
   *   `PushedFilters`;
   * - per-share failure isolation: fetch/parse errors yield an empty
   *   partition plus a warning, never a failed stage (`task.ts:165-168`);
-  * - test seam: `option("fixtureDir", dir)` reads `<dir>/<shareId>.kml`
-  *   instead of HTTP (keeps CI networkless). If `<dir>/<shareId>.password`
-  *   exists, the share's configured password must match its contents —
-  *   the fixture-mode analog of the server's 401 on a bad credential,
-  *   so the auth plumbing is testable end-to-end without a network;
+  * - fetch seam: `option("fetcher", id)` names an
+  *   [[graft.sources.InReachSource.Fetcher]] registered in
+  *   [[InReachDataSource.fetchers]] (closures cannot ride string
+  *   options); without it the source fetches over HTTP with
+  *   [[graft.sources.InReachSource.httpFetcher]]. The id is resolved
+  *   once, when Spark builds the table at `load()`, so the entry may be
+  *   removed as soon as `load()` returns and the DataFrame still
+  *   re-executes. The fetcher rides every `InputPartition`, so it is
+  *   serialized once per partition, not once per stage: a fetcher must
+  *   not capture large data;
   * - `option("debug", "true")`: per-share fetch/parse log lines on
   *   stderr (the reference's DEBUG toggle, `task.ts:190-192`).
   */
@@ -71,20 +74,32 @@ object InReachDataSource {
     StructField("coordinatesRaw", StringType, nullable = true),
     StructField("whenRaw", StringType, nullable = true),
     StructField("extended", MapType(StringType, StringType), nullable = false)))
+
+  /** Programmatic fetchers by id, named by the `fetcher` option (see
+    * class doc); mirrors [[graft.sinks.v2.FeatureCollectionDataSource.posts]]. */
+  val fetchers = new java.util.concurrent.ConcurrentHashMap[String, InReachSource.Fetcher]()
 }
 
 final class InReachTable(options: CaseInsensitiveStringMap)
     extends Table with SupportsRead {
+  /** Resolved here, at `load()`, and carried from then on. */
+  private val fetcher: InReachSource.Fetcher =
+    Option(options.get("fetcher")).fold(InReachSource.httpFetcher) { id =>
+      val f = InReachDataSource.fetchers.get(id)
+      require(f != null, s"inreach: no fetcher registered under '$id' in InReachDataSource.fetchers")
+      f
+    }
   override def name(): String = "inreach"
   override def schema(): StructType = InReachDataSource.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
     new InReachScanBuilder(new CaseInsensitiveStringMap(
-      (options.asScala ++ opts.asScala).asJava))
+      (options.asScala ++ opts.asScala).asJava), fetcher)
 }
 
-final class InReachScanBuilder(options: CaseInsensitiveStringMap)
+final class InReachScanBuilder(options: CaseInsensitiveStringMap,
+                               fetcher: InReachSource.Fetcher)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
 
@@ -121,8 +136,7 @@ final class InReachScanBuilder(options: CaseInsensitiveStringMap)
 
   /** shares CSV + per-share `share.<id>.callsign` / `share.<id>.password`
     * options (CaseInsensitiveStringMap lookups are case-insensitive)
-    * assembled into the same [[graft.model.Share]] rows the
-    * mapPartitions source consumes. */
+    * assembled into [[graft.model.Share]] rows. */
   private def shareSpecs: Seq[graft.model.Share] =
     Option(options.get("shares")).toSeq
       .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
@@ -137,14 +151,14 @@ final class InReachScanBuilder(options: CaseInsensitiveStringMap)
     shares = shareSpecs,
     lookbackMinutes = Option(options.get("lookbackMinutes")).map(_.toLong).getOrElse(30L),
     nowIso = Option(options.get("now")),
-    fixtureDir = Option(options.get("fixtureDir")),
+    fetcher = fetcher,
     pushedTime = pushedTime.map(_.toString),
     debug = options.getBoolean("debug", false),
     required = required)
 }
 
 final class InReachScan(shares: Seq[graft.model.Share], lookbackMinutes: Long,
-                        nowIso: Option[String], fixtureDir: Option[String],
+                        nowIso: Option[String], fetcher: InReachSource.Fetcher,
                         pushedTime: Option[String], debug: Boolean,
                         required: StructType) extends Scan with Batch {
   override def readSchema(): StructType = required
@@ -154,7 +168,7 @@ final class InReachScan(shares: Seq[graft.model.Share], lookbackMinutes: Long,
       s"readSchema=${required.fieldNames.mkString(",")})"
 
   override def planInputPartitions(): Array[InputPartition] =
-    shares.map(s => InReachPartition(s, lookbackMinutes, nowIso, fixtureDir,
+    shares.map(s => InReachPartition(s, lookbackMinutes, nowIso, fetcher,
       pushedTime, debug, required.fieldNames): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -169,7 +183,7 @@ final class InReachScan(shares: Seq[graft.model.Share], lookbackMinutes: Long,
     * in-memory Map. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new InReachMicroBatchStream(shares, lookbackMinutes, nowIso, fixtureDir,
+    new InReachMicroBatchStream(shares, lookbackMinutes, nowIso, fetcher,
       pushedTime, debug, required)
 }
 
@@ -180,7 +194,7 @@ final class InReachScan(shares: Seq[graft.model.Share], lookbackMinutes: Long,
   * buffer). Supports Trigger.AvailableNow (one round, then stop). */
 final class InReachMicroBatchStream(shares: Seq[graft.model.Share],
                                     lookbackMinutes: Long, nowIso: Option[String],
-                                    fixtureDir: Option[String],
+                                    fetcher: InReachSource.Fetcher,
                                     pushedTime: Option[String], debug: Boolean,
                                     required: StructType)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
@@ -224,7 +238,7 @@ final class InReachMicroBatchStream(shares: Seq[graft.model.Share],
   override def reportLatestOffset(): Offset = RoundOffset(round)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    shares.map(s => InReachPartition(s, lookbackMinutes, nowIso, fixtureDir,
+    shares.map(s => InReachPartition(s, lookbackMinutes, nowIso, fetcher,
       pushedTime, debug, required.fieldNames): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -235,7 +249,7 @@ final class InReachMicroBatchStream(shares: Seq[graft.model.Share],
 }
 
 final case class InReachPartition(share: graft.model.Share, lookbackMinutes: Long,
-                                  nowIso: Option[String], fixtureDir: Option[String],
+                                  nowIso: Option[String], fetcher: InReachSource.Fetcher,
                                   pushedTime: Option[String], debug: Boolean,
                                   requiredFields: Array[String]) extends InputPartition
 
@@ -249,6 +263,8 @@ final class InReachReaderFactory extends PartitionReaderFactory {
 final class InReachPartitionReader(p: InReachPartition)
     extends PartitionReader[InternalRow] {
 
+  private val utf8: Any => Any = s => UTF8String.fromString(s.asInstanceOf[String])
+
   private val rows: Iterator[InternalRow] = {
     val shareId = InReachSource.normalizeShareId(p.share.ShareId)
     val callSign = p.share.CallSign.getOrElse(shareId) // task.ts:75
@@ -261,32 +277,12 @@ final class InReachPartitionReader(p: InReachPartition)
     val effectiveLookbackMin =
       math.max(0L, (now.toEpochMilli - effectiveStart.toEpochMilli) / 60000L)
     Try {
-      val body = p.fixtureDir match {
-        case Some(dir) =>
-          // fixture-mode auth: a sidecar password file plays the
-          // server — wrong/missing credential behaves like a 401
-          val pwFile = new java.io.File(dir, s"$shareId.password")
-          if (pwFile.exists()) {
-            val want = new String(
-              java.nio.file.Files.readAllBytes(pwFile.toPath), "UTF-8").trim
-            if (!p.share.Password.contains(want))
-              throw new RuntimeException(s"401 Unauthorized: $shareId")
-          }
-          val f = new java.io.File(dir, s"$shareId.kml")
-          if (f.exists()) new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-          else ""
-        case None =>
-          InReachSource.httpFetcher(
-            InReachSource.feedUrl(shareId, now, effectiveLookbackMin),
-            p.share.Password) // basic-auth header, task.ts:84-87
-      }
+      val body = p.fetcher(
+        InReachSource.feedUrl(shareId, now, effectiveLookbackMin),
+        p.share.Password) // basic-auth header, task.ts:84-87
       if (p.debug) System.err.println( // reference DEBUG, task.ts:190-192
         s"FEED-DEBUG: $callSign: fetched ${body.length} chars (d1 start $effectiveStart)")
-      // mimic the server's ≥-inclusive d1 bound in both fetch modes so
-      // fixture-driven tests observe the same rows production would
       KmlParser.parse(body, shareId, callSign)
-        .filter(_.whenRaw.forall(w =>
-          Try(!Instant.parse(w).isBefore(effectiveStart)).getOrElse(true)))
     }.fold(
       err => { System.err.println(s"FEED: $callSign: $err"); Iterator.empty },
       placemarks => placemarks.iterator.map { r =>
@@ -297,10 +293,7 @@ final class InReachPartitionReader(p: InReachPartition)
           case "callSign" => UTF8String.fromString(r.callSign)
           case "coordinatesRaw" => r.coordinatesRaw.map(UTF8String.fromString).orNull
           case "whenRaw" => r.whenRaw.map(UTF8String.fromString).orNull
-          case "extended" =>
-            val keys = r.extended.keys.toArray.map(k => UTF8String.fromString(k): Any)
-            val vals = r.extended.values.toArray.map(v => UTF8String.fromString(v): Any)
-            ArrayBasedMapData(keys, vals)
+          case "extended" => ArrayBasedMapData(r.extended, utf8, utf8)
         }
         InternalRow(values: _*)
       })

@@ -1,9 +1,9 @@
 package graft
 
 import graft.model.{EngineConfig, Share}
-import graft.operators.FeatureProjection
-import graft.sinks.FeatureCollectionSink
+import graft.sinks.v2.FeatureCollectionDataSource
 import graft.sources.InReachSource
+import graft.sources.v2.InReachDataSource
 import org.apache.spark.sql.functions._
 
 import java.time.Instant
@@ -44,10 +44,14 @@ object PipelineFixtures extends Serializable {
       placemark("222", "2026-08-12T05:05:00Z")),
     "beta" -> doc(placemark("333", "2026-08-12T05:20:00Z")))
 
-  val fetcher: InReachSource.Fetcher = (url, _) => {
-    val shareId = url.split("/Feed/Share/")(1).split("\\?")(0)
-    feeds(shareId)
-  }
+  def shareIdOf(url: String): String = url.split("/Feed/Share/")(1).split("\\?")(0)
+
+  /** Serves `feeds` by ShareId; an unknown share throws, as a failed
+    * fetch would. */
+  def serving(feeds: Map[String, String]): InReachSource.Fetcher =
+    (url, _) => feeds(shareIdOf(url))
+
+  val fetcher: InReachSource.Fetcher = serving(feeds)
 
   val brokenFetcher: InReachSource.Fetcher = (url, pw) =>
     if (url.contains("alpha")) throw new RuntimeException("HTTP 500")
@@ -94,12 +98,15 @@ class PipelineSpec extends SparkSpec {
 
   test("FeatureCollection JSON golden shape with ISO-millis timestamps") {
     val one = EngineConfig(Seq(Share("beta", CallSign = Some("BETA"))))
-    val fc = FeatureCollectionSink.collectFeatureCollection(
-      Pipeline.features(spark, one, fetcher, now))
+    var fc: String = null
+    Pipeline.run(spark, one, fetcher, post = d => fc = d, now = now)
     assert(fc.startsWith("""{"type":"FeatureCollection","features":["""))
     assert(fc.contains(""""id":"inreach-333""""))
     assert(fc.contains(""""time":"2026-08-12T05:20:00.000Z""""))
     assert(fc.contains(""""coordinates":[-105.123,39.456,1650.0]"""))
+    // no shares: one empty collection is still posted
+    Pipeline.run(spark, EngineConfig(Seq.empty), fetcher, post = d => fc = d, now = now)
+    assert(fc == """{"type":"FeatureCollection","features":[]}""")
   }
 
   test("share normalization forms (task.ts:70-74)") {
@@ -119,5 +126,42 @@ class PipelineSpec extends SparkSpec {
     val f: InReachSource.Fetcher = (_, _) => noPoint
     val out = Pipeline.features(spark, EngineConfig(Seq(Share("s"))), f, now)
     assert(out.select("id").collect().map(_.getString(0)).toSeq == Seq("inreach-444"))
+  }
+
+  test("a share listed twice must carry the same CallSign and Password") {
+    val err = intercept[IllegalArgumentException](Pipeline.features(spark, EngineConfig(Seq(
+      Share("beta", CallSign = Some("B1")),
+      Share("https://share.garmin.com/beta", CallSign = Some("B2")))), fetcher, now))
+    assert(err.getMessage.contains("share 'beta'"), err.getMessage)
+    intercept[IllegalArgumentException](Pipeline.features(spark, EngineConfig(Seq(
+      Share("beta", Password = Some("x")), Share("share.garmin.com/beta"))), fetcher, now))
+    // the same settings twice are fine: both fetches dedup to one feature
+    val twice = Pipeline.features(spark, EngineConfig(Seq(
+      Share("beta", CallSign = Some("BETA")),
+      Share("https://share.garmin.com/beta", CallSign = Some("BETA")))), fetcher, now)
+    assert(twice.select("id").collect().map(_.getString(0)).toSeq == Seq("inreach-333"))
+  }
+
+  test("features re-execute after the fetcher entry is gone; run leaves both registries empty") {
+    val out = Pipeline.features(spark, config, fetcher, now)
+    assert(InReachDataSource.fetchers.isEmpty)
+    def ids() = out.select("id").collect().map(_.getString(0)).sorted.toSeq
+    assert(ids() == Seq("inreach-111", "inreach-222", "inreach-333"))
+    assert(ids() == Seq("inreach-111", "inreach-222", "inreach-333"))
+    Pipeline.run(spark, config, fetcher, post = _ => (), now = now)
+    assert(InReachDataSource.fetchers.isEmpty)
+    assert(FeatureCollectionDataSource.posts.isEmpty)
+  }
+
+  test("a share password appears in neither the query execution nor explain output") {
+    val secret = "pw-s3cr3t-7731"
+    val out = Pipeline.features(spark,
+      EngineConfig(Seq(Share("alpha", Password = Some(secret)))), fetcher, now)
+    val qe = out.queryExecution.toString
+    val explained = new java.io.ByteArrayOutputStream
+    Console.withOut(explained)(out.explain(true))
+    assert(qe.contains("inreach") && explained.toString.contains("inreach"))
+    assert(!qe.contains(secret), qe)
+    assert(!explained.toString.contains(secret), explained.toString)
   }
 }

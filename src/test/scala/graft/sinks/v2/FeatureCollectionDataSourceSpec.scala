@@ -13,9 +13,15 @@ class FeatureCollectionDataSourceSpec extends SparkSpec {
     ("inreach-3", 0.0, "2026-08-12T05:14:00.000Z")
   ).toDF("id", "speed", "time")
 
+  private val Head = """{"type":"FeatureCollection","features":["""
+
   test("V2 sink document equals the driver-side collect path, byte for byte") {
+    // the document the former driver-side collect path produced
+    val want = Head +
+      """{"id":"inreach-1","speed":9.5,"time":"2026-08-12T05:10:00.000Z"},""" +
+      """{"id":"inreach-2","speed":1.25,"time":"2026-08-12T05:12:00.000Z"},""" +
+      """{"id":"inreach-3","speed":0.0,"time":"2026-08-12T05:14:00.000Z"}]}"""
     val json = FeatureCollectionSink.toFeatureJson(features)
-    val want = FeatureCollectionSink.collectFeatureCollection(features)
     val out = java.nio.file.Files.createTempDirectory("fc-sink")
       .resolve("fc.json").toString
     json.write.format("featurecollection")
@@ -27,8 +33,8 @@ class FeatureCollectionDataSourceSpec extends SparkSpec {
 
   test("V2 sink: distributed fragments assemble in partition order; empty partitions skipped") {
     val json = FeatureCollectionSink.toFeatureJson(features).repartition(8)
-    val want = FeatureCollectionSink.collectFeatureCollection(
-      features.repartition(8))
+    // collect() concatenates partitions in partition order
+    val want = json.collect().map(_.getString(0)).mkString(Head, ",", "]}")
     var posted: String = null
     FeatureCollectionDataSource.posts.put("spec", s => posted = s)
     try {

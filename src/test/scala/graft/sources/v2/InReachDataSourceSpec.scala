@@ -1,140 +1,158 @@
 package graft.sources.v2
 
 import graft.{PipelineFixtures, SparkSpec}
+import graft.sources.InReachSource
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
 
 class InReachDataSourceSpec extends SparkSpec {
 
-  def writeFixtures(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("inreach-fixtures").toFile
-    PipelineFixtures.feeds.foreach { case (shareId, kml) =>
-      java.nio.file.Files.writeString(
-        new java.io.File(dir, s"$shareId.kml").toPath, kml)
-    }
-    dir.getAbsolutePath
+  /** Registers `f` in [[InReachDataSource.fetchers]] for the duration
+    * of `body`, which gets the id to pass as the `fetcher` option. */
+  def withFetcher[T](f: InReachSource.Fetcher = PipelineFixtures.fetcher)(body: String => T): T = {
+    val id = s"spec-${java.util.UUID.randomUUID()}"
+    InReachDataSource.fetchers.put(id, f)
+    try body(id) finally InReachDataSource.fetchers.remove(id)
   }
 
   test("spark.read.format(inreach): one partition per share, rows parsed") {
-    val dir = writeFixtures()
-    val df = spark.read.format("inreach")
-      .option("shares", "alpha,beta")
-      .option("now", "2026-08-12T05:30:00Z")
-      .option("fixtureDir", dir)
-      .load()
-    assert(df.schema.fieldNames.toSeq ==
-      Seq("shareId", "callSign", "coordinatesRaw", "whenRaw", "extended"))
-    assert(df.count() == 4) // 3 placemarks in alpha + 1 in beta
-    assert(df.rdd.getNumPartitions == 2)
-    val imeis = df.select(element_at(col("extended"), "IMEI")).collect()
-      .map(_.getString(0)).sorted
-    assert(imeis.toSeq == Seq("111", "111", "222", "333"))
+    withFetcher() { id =>
+      val df = spark.read.format("inreach")
+        .option("shares", "alpha,beta")
+        .option("now", "2026-08-12T05:30:00Z")
+        .option("fetcher", id)
+        .load()
+      assert(df.schema.fieldNames.toSeq ==
+        Seq("shareId", "callSign", "coordinatesRaw", "whenRaw", "extended"))
+      assert(df.count() == 4) // 3 placemarks in alpha + 1 in beta
+      assert(df.rdd.getNumPartitions == 2)
+      val imeis = df.select(element_at(col("extended"), "IMEI")).collect()
+        .map(_.getString(0)).sorted
+      assert(imeis.toSeq == Seq("111", "111", "222", "333"))
+    }
+  }
+
+  test("an unknown fetcher id fails at load() and names the id") {
+    val err = intercept[IllegalArgumentException] {
+      spark.read.format("inreach")
+        .option("shares", "alpha")
+        .option("fetcher", "no-such-fetcher")
+        .load()
+    }
+    assert(err.getMessage.contains("no fetcher registered under 'no-such-fetcher'"),
+      err.getMessage)
   }
 
   test("time filter appears as PushedFilters in the physical plan") {
-    val dir = writeFixtures()
-    val df = spark.read.format("inreach")
-      .option("shares", "alpha")
-      .option("now", "2026-08-12T05:30:00Z")
-      .option("fixtureDir", dir)
-      .load()
-      .filter(col("whenRaw") >= "2026-08-12T05:06:00Z")
-    val physical = df.queryExecution.executedPlan.toString
-    assert(physical.contains("pushedTime=Some(2026-08-12T05:06:00Z)"),
-      s"no pushdown in plan:\n$physical")
-    // Spark re-applies the filter on top: rows at/after 05:06 remain
-    val whens = df.select("whenRaw").collect().map(_.getString(0)).sorted
-    assert(whens.toSeq == Seq("2026-08-12T05:10:00Z"))
+    withFetcher() { id =>
+      val df = spark.read.format("inreach")
+        .option("shares", "alpha")
+        .option("now", "2026-08-12T05:30:00Z")
+        .option("fetcher", id)
+        .load()
+        .filter(col("whenRaw") >= "2026-08-12T05:06:00Z")
+      val physical = df.queryExecution.executedPlan.toString
+      assert(physical.contains("pushedTime=Some(2026-08-12T05:06:00Z)"),
+        s"no pushdown in plan:\n$physical")
+      // Spark re-applies the filter on top: rows at/after 05:06 remain
+      val whens = df.select("whenRaw").collect().map(_.getString(0)).sorted
+      assert(whens.toSeq == Seq("2026-08-12T05:10:00Z"))
+    }
   }
 
   test("column pruning reaches the scan: ReadSchema drops unselected fields") {
-    val dir = writeFixtures()
-    val df = spark.read.format("inreach")
-      .option("shares", "alpha,beta")
-      .option("now", "2026-08-12T05:30:00Z")
-      .option("fixtureDir", dir)
-      .load()
-      .select("whenRaw")
-    // the scan's description advertises its pruned read schema
-    val physical = df.queryExecution.executedPlan.toString
-    assert(physical.contains("readSchema=whenRaw"),
-      s"scan not pruned to whenRaw:\n$physical")
-    assert(!physical.contains("readSchema=shareId,callSign"),
-      s"scan still reads full schema:\n$physical")
-    // and the projected rows are correct
-    assert(df.collect().map(_.getString(0)).count(_ != null) == 4)
+    withFetcher() { id =>
+      val df = spark.read.format("inreach")
+        .option("shares", "alpha,beta")
+        .option("now", "2026-08-12T05:30:00Z")
+        .option("fetcher", id)
+        .load()
+        .select("whenRaw")
+      // the scan's description advertises its pruned read schema
+      val physical = df.queryExecution.executedPlan.toString
+      assert(physical.contains("readSchema=whenRaw"),
+        s"scan not pruned to whenRaw:\n$physical")
+      assert(!physical.contains("readSchema=shareId,callSign"),
+        s"scan still reads full schema:\n$physical")
+      // and the projected rows are correct
+      assert(df.collect().map(_.getString(0)).count(_ != null) == 4)
+    }
   }
 
   test("missing fixture file behaves as empty feed, not a failure") {
-    val df = spark.read.format("inreach")
-      .option("shares", "alpha,ghost")
-      .option("now", "2026-08-12T05:30:00Z")
-      .option("fixtureDir", writeFixtures())
-      .load()
-    assert(df.filter(col("shareId") === "ghost").count() == 0)
-    assert(df.count() == 3) // alpha's 3 placemarks; ghost contributes none
+    // the fixture fetcher has no "ghost" feed: its fetch throws
+    withFetcher() { id =>
+      val df = spark.read.format("inreach")
+        .option("shares", "alpha,ghost")
+        .option("now", "2026-08-12T05:30:00Z")
+        .option("fetcher", id)
+        .load()
+      assert(df.filter(col("shareId") === "ghost").count() == 0)
+      assert(df.count() == 3) // alpha's 3 placemarks; ghost contributes none
+    }
   }
 
   test("per-share password and callsign plumb through to the partition reader") {
-    val dir = writeFixtures()
-    // sidecar password file = the fixture-mode server credential
-    java.nio.file.Files.writeString(
-      new java.io.File(dir, "alpha.password").toPath, "hunter2")
-    // correct password + explicit callsign: rows parse with the callsign
-    val authed = spark.read.format("inreach")
-      .option("shares", "alpha")
-      .option("share.alpha.password", "hunter2")
-      .option("share.alpha.callsign", "Alpha Team")
-      .option("now", "2026-08-12T05:30:00Z")
-      .option("fixtureDir", dir)
-      .load()
-    assert(authed.count() == 3)
-    assert(authed.select("callSign").distinct().collect()
-      .map(_.getString(0)).toSeq == Seq("Alpha Team"))
-    // wrong password: 401 → empty feed (per-share isolation), no failure
-    val denied = spark.read.format("inreach")
-      .option("shares", "alpha")
-      .option("share.alpha.password", "wrong")
-      .option("now", "2026-08-12T05:30:00Z")
-      .option("fixtureDir", dir)
-      .load()
-    assert(denied.count() == 0)
+    // plays the server: a wrong or missing credential is a 401
+    val guarded: InReachSource.Fetcher = (url, pw) =>
+      if (pw.contains("hunter2")) PipelineFixtures.fetcher(url, pw)
+      else throw new RuntimeException("HTTP 401 Unauthorized")
+    withFetcher(guarded) { id =>
+      // correct password + explicit callsign: rows parse with the callsign
+      val authed = spark.read.format("inreach")
+        .option("shares", "alpha")
+        .option("share.alpha.password", "hunter2")
+        .option("share.alpha.callsign", "Alpha Team")
+        .option("now", "2026-08-12T05:30:00Z")
+        .option("fetcher", id)
+        .load()
+      assert(authed.count() == 3)
+      assert(authed.select("callSign").distinct().collect()
+        .map(_.getString(0)).toSeq == Seq("Alpha Team"))
+      // wrong password: 401 → empty feed (per-share isolation), no failure
+      val denied = spark.read.format("inreach")
+        .option("shares", "alpha")
+        .option("share.alpha.password", "wrong")
+        .option("now", "2026-08-12T05:30:00Z")
+        .option("fetcher", id)
+        .load()
+      assert(denied.count() == 0)
+    }
     // no callsign option: defaults to the shareId (task.ts:75)
-    val defaulted = spark.read.format("inreach")
-      .option("shares", "beta")
-      .option("now", "2026-08-12T05:30:00Z")
-      .option("fixtureDir", dir)
-      .load()
-    assert(defaulted.select("callSign").distinct().collect()
-      .map(_.getString(0)).toSeq == Seq("beta"))
+    withFetcher() { id =>
+      val defaulted = spark.read.format("inreach")
+        .option("shares", "beta")
+        .option("now", "2026-08-12T05:30:00Z")
+        .option("fetcher", id)
+        .load()
+      assert(defaulted.select("callSign").distinct().collect()
+        .map(_.getString(0)).toSeq == Seq("beta"))
+    }
   }
 
   test("readStream.format(inreach): each microbatch is one fetch round; re-fetch sees feed updates") {
-    val dir = writeFixtures()
-    def runOnce(tag: String): Array[org.apache.spark.sql.Row] = {
-      val q = spark.readStream.format("inreach")
-        .option("shares", "alpha,beta")
-        .option("now", "2026-08-12T05:30:00Z")
-        .option("fixtureDir", dir)
-        .load()
-        .writeStream.format("memory").queryName(s"inreach_stream_$tag")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination(120000)
-      q.stop()
-      spark.table(s"inreach_stream_$tag").collect()
-    }
-    val first = runOnce("a")
+    def runOnce(tag: String, feeds: Map[String, String]): Array[org.apache.spark.sql.Row] =
+      withFetcher(PipelineFixtures.serving(feeds)) { id =>
+        val q = spark.readStream.format("inreach")
+          .option("shares", "alpha,beta")
+          .option("now", "2026-08-12T05:30:00Z")
+          .option("fetcher", id)
+          .load()
+          .writeStream.format("memory").queryName(s"inreach_stream_$tag")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination(120000)
+        q.stop()
+        spark.table(s"inreach_stream_$tag").collect()
+      }
+    val first = runOnce("a", PipelineFixtures.feeds)
     assert(first.length == 4, s"expected 4 placemarks, got ${first.length}")
     // the feed moves: beta now reports a second placemark — the next
     // round (fresh query = the reference's next scheduled run) sees it
-    val betaKml = java.nio.file.Files.readString(
-      new java.io.File(dir, "beta.kml").toPath)
-    val extra = betaKml.replace("</Folder>",
-      graft.PipelineFixtures.placemark("444", "2026-08-12T05:25:00Z") + "</Folder>")
-    java.nio.file.Files.writeString(new java.io.File(dir, "beta.kml").toPath, extra)
-    val second = runOnce("b")
+    val extra = PipelineFixtures.feeds("beta").replace("</Folder>",
+      PipelineFixtures.placemark("444", "2026-08-12T05:25:00Z") + "</Folder>")
+    val second = runOnce("b", PipelineFixtures.feeds.updated("beta", extra))
     assert(second.length == 5, s"re-fetch missed the new placemark: ${second.length}")
   }
 
@@ -143,7 +161,7 @@ class InReachDataSourceSpec extends SparkSpec {
     // `start` while the rebuilt stream's counter is back at 0 — the
     // reported end must seed from start, not restart at 1
     def stream() = new InReachMicroBatchStream(
-      Seq(graft.model.Share("alpha")), 30L, None, None, None, false,
+      Seq(graft.model.Share("alpha")), 30L, None, InReachSource.httpFetcher, None, false,
       InReachDataSource.schema)
     val st = stream()
     val end = st.latestOffset(st.deserializeOffset("5"), null)
@@ -167,17 +185,16 @@ class InReachDataSourceSpec extends SparkSpec {
     import graft.operators.FeatureProjection
     import graft.streaming.StreamingOps
     import spark.implicits._
-    val dir = writeFixtures()
     // chk/table shared across runs: the SAME streaming query resumed —
     // latest-per-key state must survive the restart (the reference's
     // cross-run dedup, which its in-memory Map could never do)
     val chk = java.nio.file.Files.createTempDirectory("stream-chk").toString
     val latest = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-    def runOnce(): Unit = {
+    def runOnce(feeds: Map[String, String]): Unit = withFetcher(PipelineFixtures.serving(feeds)) { id =>
       val raw = spark.readStream.format("inreach")
         .option("shares", "alpha,beta")
         .option("now", "2026-08-12T05:30:00Z")
-        .option("fixtureDir", dir)
+        .option("fetcher", id)
         .load()
       val features = FeatureProjection.project(raw.as[graft.model.RawPlacemark])
         .select(col("id"),
@@ -196,7 +213,7 @@ class InReachDataSourceSpec extends SparkSpec {
         .start()
       q.awaitTermination(120000); q.stop()
     }
-    runOnce()
+    runOnce(PipelineFixtures.feeds)
     val t0510 = java.time.Instant.parse("2026-08-12T05:10:00Z").toEpochMilli
     // per-run dedup: device 111 reported twice, later timestamp wins
     assert(latest.get("inreach-111") == t0510)
@@ -204,22 +221,22 @@ class InReachDataSourceSpec extends SparkSpec {
       Set("inreach-111", "inreach-222", "inreach-333"))
     // the feed moves BACKWARD for device 111 (a stale re-delivery):
     // cross-run state must keep the newer position from run 1
-    val alphaKml = graft.PipelineFixtures.doc(
-      graft.PipelineFixtures.placemark("111", "2026-08-12T05:02:00Z", lon = -99.0))
-    java.nio.file.Files.writeString(new java.io.File(dir, "alpha.kml").toPath, alphaKml)
-    runOnce()
+    val alphaKml = PipelineFixtures.doc(
+      PipelineFixtures.placemark("111", "2026-08-12T05:02:00Z", lon = -99.0))
+    runOnce(PipelineFixtures.feeds.updated("alpha", alphaKml))
     assert(latest.get("inreach-111") == t0510,
       s"stale re-delivery overwrote newer state: ${latest.get("inreach-111")}")
   }
 
   test("full pipeline composes over the DSv2 source") {
     import graft.operators.{Dedup, FeatureProjection}
-    val dir = writeFixtures()
-    val raw = spark.read.format("inreach")
-      .option("shares", "alpha,beta")
-      .option("now", "2026-08-12T05:30:00Z")
-      .option("fixtureDir", dir)
-      .load()
+    val raw = withFetcher() { id =>
+      spark.read.format("inreach")
+        .option("shares", "alpha,beta")
+        .option("now", "2026-08-12T05:30:00Z")
+        .option("fetcher", id)
+        .load()
+    }
     // project expects Dataset[RawPlacemark]-shaped columns
     import spark.implicits._
     val features = FeatureProjection.project(raw.as[graft.model.RawPlacemark])
