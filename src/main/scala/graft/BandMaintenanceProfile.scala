@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{FuzzyDedup, Layout}
 
@@ -41,17 +40,7 @@ object BandMaintenanceProfile {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val waves = args.lift(1).map(_.toInt).getOrElse(20)
     val passes = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val wh = java.nio.file.Files.createTempDirectory("graft-bmaint-wh")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", wh.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     spark.range(1000000).selectExpr("sum(id)").collect() // JIT warm
 
     val tbl = "graft_bmaint_idx"
@@ -136,7 +125,6 @@ object BandMaintenanceProfile {
       try spark.sql(s"DROP TABLE IF EXISTS $tbl")
       catch { case _: Throwable => () }
       try spark.stop() catch { case _: Throwable => () }
-      TempDirs.rmTree(wh)
     }
   }
 }

@@ -134,32 +134,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // default: one shuffle partition per core (the sf0.1 sweet
-      // spot). SPARK_GRAFT_SHUFFLE overrides for scaled corpora —
-      // partitions must grow with data or sorts spill (the k=30
-      // q314/q324 lesson, SCALING.md round 9); a real cluster scales
-      // this with executors automatically
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries timestamp[ns]; read as int64 nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bucketed-join queries saveAsTable; keep their files in tmp
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // ~256 "No Partition Defined" warnings per run, all from
-    // documented bounded-relation windows (bucket series, tests-sized
-    // BH-FDR, block-level packing, global top-k) — correct plans,
-    // noisy artifacts; silence just that logger
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession.local(cpus)
     // warm codegen/JIT infrastructure so the first timed query isn't
     // charged for JVM startup; touch one parquet footer so the
     // alphabetically-first query isn't charged for reader/codec init
@@ -212,9 +188,8 @@ object Bench {
     // never be judged against — nor overwrite — the 32-core record
     // (round-14: the driver's 8-core run drift-diverted against the
     // 32-core prior and clobbered BENCH_detail_drift.json).
-    val cpusN = cpus.toIntOption.getOrElse(-1)
     val (cleanDetailPath, _) =
-      detailRoute(sfDir, cpusN, false, false, false, false, None)
+      detailRoute(sfDir, cpus, false, false, false, false, None)
     val priorRef: Map[String, Double] = try {
       val p = java.nio.file.Paths.get(cleanDetailPath)
       if (java.nio.file.Files.exists(p)) {
@@ -225,7 +200,7 @@ object Bench {
         val priorCpus = """"cpus":\s*(\d+)""".r
           .findFirstMatchIn(txt).map(_.group(1).toInt).getOrElse(MainCpus)
         val sameSf = sfRe.findFirstMatchIn(txt).exists(_.group(1) == sfDir) &&
-          priorCpus == cpusN
+          priorCpus == cpus
         val idx = txt.indexOf("\"queries_sec\"")
         val m =
           if (sameSf && idx >= 0)
@@ -373,7 +348,7 @@ object Bench {
       detail ++= s"""  "n_registered": ${SparkEntry.queries.size},\n"""
       // core count at capture time: the variance/drift guard priors
       // are only valid between same-cpus captures (see detailRoute)
-      detail ++= s"""  "cpus": $cpusN,\n"""
+      detail ++= s"""  "cpus": $cpus,\n"""
       detail ++= s"""  "canary_sec": ${ms(canarySec)},\n"""
       detail ++= s"""  "pcanary_sec": ${ms(pcanarySec)},\n"""
       detail ++= s"""  "shared_median_ratio": ${
@@ -402,7 +377,7 @@ object Bench {
       // BenchArtifactSpec: a subset/errored/contended run at a
       // non-canonical corpus also diverts, composing both suffixes —
       // only an env override is silent, being deliberate)
-      val (detailPath, divertWhy) = detailRoute(sfDir, cpusN, only.nonEmpty,
+      val (detailPath, divertWhy) = detailRoute(sfDir, cpus, only.nonEmpty,
         errs.nonEmpty, contended.nonEmpty, hasDrift,
         sys.env.get("GRAFT_BENCH_DETAIL"))
       divertWhy.foreach { why =>

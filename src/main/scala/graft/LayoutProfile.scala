@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
@@ -51,17 +51,7 @@ object LayoutProfile {
     val buckets = args.lift(3).getOrElse("16")
       .split(",").map(_.trim.toInt).toSeq.distinct
     buckets.foreach(b => require(b > 0, s"bucket count $b must be > 0"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val wh = java.nio.file.Files.createTempDirectory("graft-layout-wh")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", wh.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     spark.range(1000000).selectExpr("sum(id)").collect() // JIT warm
 
     val idxTmp = java.nio.file.Files.createTempDirectory("graft-layout")
@@ -177,7 +167,6 @@ object LayoutProfile {
       }
       try spark.stop() catch { case _: Throwable => () }
       TempDirs.rmTree(idxTmp)
-      TempDirs.rmTree(wh)
     }
   }
 }

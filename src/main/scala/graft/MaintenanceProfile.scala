@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Layout, Similarity}
 
@@ -37,17 +37,7 @@ object MaintenanceProfile {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val waves = args.lift(1).map(_.toInt).getOrElse(20)
     val passes = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val wh = java.nio.file.Files.createTempDirectory("graft-maint-wh")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", wh.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     spark.range(1000000).selectExpr("sum(id)").collect() // JIT warm
 
     val tbl = "graft_maint_idx"
@@ -152,7 +142,6 @@ object MaintenanceProfile {
       try spark.sql(s"DROP TABLE IF EXISTS $tbl")
       catch { case _: Throwable => () }
       try spark.stop() catch { case _: Throwable => () }
-      TempDirs.rmTree(wh)
     }
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Measurement tooling (optimization rounds, guide §1.2/§7.2): dump
@@ -8,9 +7,10 @@ import java.nio.file.{Files, Paths}
   * committable evidence (`plans/rNN/<query>_{before,after}.txt`).
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]
-  * Writes <outDir>/<query>_<suffix>.txt. Session config mirrors Bench
-  * exactly (same master/shuffle/warehouse posture) so the dumped plan
-  * is the plan the bench executes. Streaming queries (which need a
+  * Writes <outDir>/<query>_<suffix>.txt. The session comes from
+  * [[GraftSession.local]], as Bench's does, so under the same
+  * `SPARK_GRAFT_CPUS`/`SPARK_GRAFT_SHUFFLE` the dumped plan is the
+  * plan the bench executes. Streaming queries (which need a
   * started StreamingQuery to have a plan) are skipped with a note —
   * their micro-batch plans are pinned in PlanShapeSpec instead. */
 object PlanDump {
@@ -21,18 +21,7 @@ object PlanDump {
     }
     val sfDir = args(0); val outDir = args(1); val suffix = args(2)
     val only = args.lift(3).map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     def keep(name: String): Boolean =
       only.forall(o => o.contains(name) || o.contains(name.takeWhile(_ != '_')))

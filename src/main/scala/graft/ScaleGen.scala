@@ -162,15 +162,7 @@ object ScaleGen {
     // k, and label/doc strides never collide. k=300 exists for the
     // q326 serve extrapolation point (SCALING.md round 11).
     require(k >= 1 && k <= 300, s"k=$k out of [1, 300]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     def read(t: String) = spark.read.parquet(s"$srcDir/$t.parquet")
     // single-FILE layout, exactly like the driver testdata: the
@@ -190,10 +182,7 @@ object ScaleGen {
       }
       Files.move(part, Paths.get(s"$outDir/$t.parquet"),
         StandardCopyOption.REPLACE_EXISTING)
-      Using.resource(Files.walk(Paths.get(tmp))) { s =>
-        s.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.deleteIfExists(p))
-      }
+      TempDirs.rmTree(Paths.get(tmp))
     }
     val docs = read("documents")
     write(scaleDocuments(docs, k, stride(docs, "doc_id", 10)), "documents")

@@ -2,7 +2,6 @@ package graft
 
 import graft.model.{EngineConfig, Share}
 import graft.sources.InReachSource
-import org.apache.spark.sql.SparkSession
 
 import java.time.Instant
 
@@ -41,11 +40,7 @@ object Scratch {
       |</Folder></Document></kml>""".stripMargin
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val fetcher: InReachSource.Fetcher = (_, _) => fixtureKml
     Pipeline.run(
       spark,

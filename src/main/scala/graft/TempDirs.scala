@@ -1,17 +1,36 @@
 package graft
 
-/** Shared recursive temp-dir delete for the measurement mains and
-  * specs (one copy — the review-r13 dedup; SparkEntry's shutdown
-  * sweep and ScaleGen's Using.resource walk are the other two
-  * sanctioned deleters). Closes the Files.walk stream (an unclosed
-  * walk holds directory handles until GC) and never throws: cleanup
-  * in a finally must not mask the real failure. */
+import java.nio.file.{Files, Path}
+
+/** The one owner of graft's scratch directories: session warehouses,
+  * staged stream sources, materialized pipeline products and spec
+  * scratch all come from [[create]], and one shutdown hook deletes
+  * every one of them at JVM exit. `deleteOnExit` only removes EMPTY
+  * dirs (parquet products would accrete under java.io.tmpdir across
+  * JVM runs), and a hook PER dir would accrete one thread object per
+  * bench pass over a long session. */
 private[graft] object TempDirs {
-  def rmTree(p: java.nio.file.Path): Unit =
+  private val registry = new java.util.concurrent.ConcurrentLinkedQueue[Path]
+  Runtime.getRuntime.addShutdownHook(new Thread(() => registry.forEach(rmTree(_))))
+
+  /** A fresh temp dir under java.io.tmpdir, deleted at JVM exit. */
+  def create(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    registry.add(d)
+    d
+  }
+
+  /** True when `p` came from [[create]] and is swept at exit. */
+  def owns(p: Path): Boolean = registry.contains(p)
+
+  /** Recursive delete. Closes the Files.walk stream (an unclosed walk
+    * holds directory handles until GC) and never throws: cleanup in a
+    * finally must not mask the real failure. */
+  def rmTree(p: Path): Unit =
     try {
-      val s = java.nio.file.Files.walk(p)
+      val s = Files.walk(p)
       try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => try { java.nio.file.Files.deleteIfExists(f); () }
+        .forEach(f => try { Files.deleteIfExists(f); () }
           catch { case _: Throwable => () })
       finally s.close()
     } catch { case _: Throwable => () }

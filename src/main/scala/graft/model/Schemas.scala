@@ -6,11 +6,13 @@ import org.apache.spark.sql.types._
   *
   * Derived from the reference's Feature construction (reference
   * `task.ts:115-149`) and its declared output schema (`task.ts:42-53`);
-  * see /root/repo/SURVEY.md §1.3 for the full mapping rationale.
+  * see SURVEY.md §1.3 for the full mapping rationale.
   *
-  * Everything is expressed twice: as case classes (for `Dataset[T]`
-  * type-safety where it pays) and as `StructType` constants (the
-  * explicit, never-inferred schema contract — SURVEY.md §1.4).
+  * The pipeline's inputs are case classes (the share config, and the
+  * raw placemark the source emits as a `Dataset[RawPlacemark]`). Its
+  * output, the GeoJSON Feature row, is published once, as the explicit
+  * `StructType` in [[Schemas]] (the never-inferred schema contract —
+  * SURVEY.md §1.4), and PipelineSpec ties it to what the pipeline emits.
   */
 
 /** Input config relation: one row per Garmin MapShare feed
@@ -28,55 +30,6 @@ final case class EngineConfig(
   require(shares != null, "No INREACH_MAP_SHARES Provided")
 }
 
-/** `properties.links[i]` element (reference `task.ts:124-131`). */
-final case class Link(
-    uid: String,
-    relation: String,
-    mime: String,
-    url: String,
-    remarks: String)
-
-/** `properties.metadata` (reference `task.ts:132-143`; declared
-  * output schema `task.ts:42-53`). Optionality mirrors the TypeBox
-  * declaration: Id/Name/DeviceType/DeviceId required, rest optional. */
-final case class Metadata(
-    inreachId: String,
-    inreachName: String,
-    inreachDeviceType: String,
-    inreachIMEI: Option[String],
-    inreachIncidentId: Option[String],
-    inreachValidFix: Option[String],
-    inreachText: Option[String],
-    inreachEvent: Option[String],
-    inreachDeviceId: String,
-    inreachReceive: java.sql.Timestamp)
-
-/** GeoJSON geometry (reference `task.ts:145-148`). Coordinates are
-  * lon,lat[,alt] in KML order (`task.ts:105-107`). */
-final case class Geometry(
-    `type`: String,
-    coordinates: Seq[Double])
-
-/** `properties` struct (reference `task.ts:118-144`). Timestamps are
-  * typed (TimestampType) internally; the reference's ISO-8601 strings
-  * are rendered only at the sink boundary (SURVEY.md §1.2). */
-final case class Properties(
-    course: Double,
-    speed: Double,
-    callsign: String,
-    time: java.sql.Timestamp,
-    start: java.sql.Timestamp,
-    links: Seq[Link],
-    metadata: Metadata)
-
-/** The pipeline row type: a GeoJSON Point Feature
-  * (reference `task.ts:115-149`). */
-final case class Feature(
-    id: String,
-    `type`: String,
-    properties: Properties,
-    geometry: Geometry)
-
 /** Raw placemark extracted from a KML document before projection:
   * the fields the reference dereferences (`task.ts:102-112`), plus
   * feed provenance (ShareId/CallSign ride along — SURVEY.md §2.3's
@@ -88,9 +41,13 @@ final case class RawPlacemark(
     whenRaw: Option[String],          // TimeStamp/when text (task.ts:122)
     extended: Map[String, String])    // ExtendedData pivot (task.ts:109-112)
 
+/** Explicit output StructType (SURVEY.md §1.3), published by
+  * `Pipeline.capabilities` (§1.4). Optionality mirrors the reference's
+  * TypeBox declaration. Timestamps are typed internally; the
+  * reference's ISO-8601 strings are rendered only at the sink boundary
+  * (SURVEY.md §1.2). */
 object Schemas {
-  /** Explicit output StructType (SURVEY.md §1.3). Kept in sync with
-    * the case classes above; used for schema publication (§1.4). */
+  // `properties.links[i]` (reference `task.ts:124-131`)
   val link: StructType = StructType(Seq(
     StructField("uid", StringType, nullable = false),
     StructField("relation", StringType, nullable = false),
@@ -98,6 +55,8 @@ object Schemas {
     StructField("url", StringType, nullable = false),
     StructField("remarks", StringType, nullable = false)))
 
+  // `properties.metadata` (reference `task.ts:132-143`, declared output
+  // schema `task.ts:42-53`)
   val metadata: StructType = StructType(Seq(
     StructField("inreachId", StringType, nullable = false),
     StructField("inreachName", StringType, nullable = false),
@@ -110,6 +69,7 @@ object Schemas {
     StructField("inreachDeviceId", StringType, nullable = false),
     StructField("inreachReceive", TimestampType, nullable = true)))
 
+  // reference `task.ts:118-144`
   val properties: StructType = StructType(Seq(
     StructField("course", DoubleType, nullable = true),
     StructField("speed", DoubleType, nullable = true),
@@ -119,10 +79,12 @@ object Schemas {
     StructField("links", ArrayType(link, containsNull = false), nullable = false),
     StructField("metadata", metadata, nullable = false)))
 
+  // GeoJSON Point, lon,lat[,alt] in KML order (reference `task.ts:105-107, 145-148`)
   val geometry: StructType = StructType(Seq(
     StructField("type", StringType, nullable = false),
     StructField("coordinates", ArrayType(DoubleType, containsNull = false), nullable = false)))
 
+  // the pipeline's output row (reference `task.ts:115-149`)
   val feature: StructType = StructType(Seq(
     StructField("id", StringType, nullable = false),
     StructField("type", StringType, nullable = false),

@@ -109,6 +109,20 @@ class PipelineSpec extends SparkSpec {
     assert(fc == """{"type":"FeatureCollection","features":[]}""")
   }
 
+  test("the published output schema is the schema the pipeline emits") {
+    import org.apache.spark.sql.types._
+    def loose(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f => StructField(f.name, loose(f.dataType))))
+      case a: ArrayType => ArrayType(loose(a.elementType))
+      case m: MapType => MapType(loose(m.keyType), loose(m.valueType))
+      case other => other
+    }
+    val published = DataType.fromJson(Pipeline.capabilities("output"))
+    val emitted = Pipeline.features(spark, config, fetcher, now).schema
+    assert(loose(published) == loose(emitted),
+      s"published ${published.simpleString}\nemitted ${emitted.simpleString}")
+  }
+
   test("share normalization forms (task.ts:70-74)") {
     assert(InReachSource.normalizeShareId("https://share.garmin.com/xyz") == "xyz")
     assert(InReachSource.normalizeShareId("share.garmin.com/xyz") == "xyz")

@@ -5,21 +5,13 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs. One JVM-wide session (getOrCreate)
-  * keeps the suite fast; UTC + small shuffle partitions mirror the
-  * harness config (Verify.scala). */
+  * keeps the suite fast. It comes from the mains' own factory, so the
+  * specs run Bench's and Verify's config; only the core count is pinned,
+  * at 4, because PlanShapeSpec pins plans at 4 shuffle partitions. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .getOrCreate()
+  lazy val session: SparkSession = GraftSession.local(4)
 }

@@ -23,7 +23,7 @@ class TsShimSpec extends SparkSpec {
     // the driver's testdata ships each table as a SINGLE parquet file
     // (q197 symlinks it into its stream source dir) — mirror that
     def writeSingle(d: org.apache.spark.sql.DataFrame, prefix: String) = {
-      val dir = java.nio.file.Files.createTempDirectory(prefix)
+      val dir = TempDirs.create(prefix)
       val tmp = dir.resolve("_w")
       d.coalesce(1).write.parquet(tmp.toString)
       val part = tmp.toFile.listFiles()

@@ -392,7 +392,7 @@ class FuzzyDedupSpec extends SparkSpec {
     import org.apache.spark.sql.streaming.Trigger
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val old = corpus.filter(col("doc_id") % 20 < 18)
-    val srcDir = java.nio.file.Files.createTempDirectory("probe-feed")
+    val srcDir = graft.TempDirs.create("probe-feed")
       .resolve("feed").toString
     corpus.filter(col("doc_id") % 20 >= 18).coalesce(1)
       .write.mode("overwrite").parquet(srcDir)

@@ -93,7 +93,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("ivfPqServe from a MATERIALIZED index equals ivfPqSearch bit-for-bit") {
     val queries = emb.filter($"vec_id" % 25 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq-idx").toString
+    val dir = graft.TempDirs.create("ivfpq-idx").toString
     // parquet round-trip on purpose: the standing-product read path
     // (array<double> seed vectors, float cast on serve) must land on
     // the fused build+serve's exact output, ranks and cosines included
@@ -171,7 +171,7 @@ class SimilaritySpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "cand_id", "cos").collect()
         .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val srcDir = java.nio.file.Files.createTempDirectory("vec-feed")
+    val srcDir = graft.TempDirs.create("vec-feed")
       .resolve("feed").toString
     fresh.coalesce(1).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream
@@ -205,7 +205,7 @@ class SimilaritySpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getSeq[Long](1).toList,
         r.getSeq[Long](2).toList)).toSet
-    val srcDir = java.nio.file.Files.createTempDirectory("enc-feed")
+    val srcDir = graft.TempDirs.create("enc-feed")
       .resolve("feed").toString
     fresh.coalesce(1).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream
@@ -884,7 +884,7 @@ class SimilaritySpec extends SparkSpec {
     // property the production story swaps layouts on.
     val e01 = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val idx = Similarity.ivfPqIndex(e01, numCells = 64).cache()
-    val tmp = java.nio.file.Files.createTempDirectory("xlayout")
+    val tmp = graft.TempDirs.create("xlayout")
     try {
       val partPath = tmp.resolve("part").toString
       idx.write.mode("overwrite").partitionBy("part", "c").parquet(partPath)

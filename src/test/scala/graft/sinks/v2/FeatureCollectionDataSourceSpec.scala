@@ -22,7 +22,7 @@ class FeatureCollectionDataSourceSpec extends SparkSpec {
       """{"id":"inreach-2","speed":1.25,"time":"2026-08-12T05:12:00.000Z"},""" +
       """{"id":"inreach-3","speed":0.0,"time":"2026-08-12T05:14:00.000Z"}]}"""
     val json = FeatureCollectionSink.toFeatureJson(features)
-    val out = java.nio.file.Files.createTempDirectory("fc-sink")
+    val out = graft.TempDirs.create("fc-sink")
       .resolve("fc.json").toString
     json.write.format("featurecollection")
       .option("targetPath", out).mode("overwrite").save()

@@ -188,7 +188,7 @@ class InReachDataSourceSpec extends SparkSpec {
     // chk/table shared across runs: the SAME streaming query resumed —
     // latest-per-key state must survive the restart (the reference's
     // cross-run dedup, which its in-memory Map could never do)
-    val chk = java.nio.file.Files.createTempDirectory("stream-chk").toString
+    val chk = graft.TempDirs.create("stream-chk").toString
     val latest = new java.util.concurrent.ConcurrentHashMap[String, Long]()
     def runOnce(feeds: Map[String, String]): Unit = withFetcher(PipelineFixtures.serving(feeds)) { id =>
       val raw = spark.readStream.format("inreach")

@@ -92,8 +92,8 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("file-based readStream: windowed agg over a parquet directory source") {
-    val dir = java.nio.file.Files.createTempDirectory("stream-src")
-    val out = java.nio.file.Files.createTempDirectory("stream-sink")
+    val dir = graft.TempDirs.create("stream-src")
+    val out = graft.TempDirs.create("stream-sink")
     def t(m: Int) = java.sql.Timestamp.valueOf(f"2026-08-12 05:$m%02d:00")
     Seq((t(0), "click", 1.0), (t(10), "click", 2.0), (t(40), "view", 4.0))
       .toDF("ts", "event_type", "value")
@@ -346,7 +346,7 @@ class StreamingOpsSpec extends SparkSpec {
     val batch2 = Seq((2L, 20L, 3L, "del", Option.empty[String]),
       (1L, 20L, 4L, "upd", Option("silver")),
       (4L, 20L, 5L, "del", Option.empty[String]))
-    val dir = java.nio.file.Files.createTempDirectory("scd1-stream").toString
+    val dir = graft.TempDirs.create("scd1-stream").toString
     val input = MemoryStream[(Long, Long, Long, String, Option[String])]
     val changes = input.toDF().toDF("k", "v", "tie", "op", "c")
     val (writer, handle) = StreamingOps.scd1Stream(changes, base, "k",
@@ -399,7 +399,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("scd1Stream: restart skips and deletes a partial (no _SUCCESS) generation") {
     implicit val sqlCtx = spark.sqlContext
     val base = Seq((1L, "a", "red")).toDF("k", "name", "colr")
-    val dir = java.nio.file.Files.createTempDirectory("scd1-partial").toString
+    val dir = graft.TempDirs.create("scd1-partial").toString
     val input = MemoryStream[(Long, Long, Long, String, Option[String])]
     val (writer, _) = StreamingOps.scd1Stream(
       input.toDF().toDF("k", "v", "tie", "op", "c"), base, "k",
