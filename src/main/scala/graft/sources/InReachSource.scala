@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.io.IOException
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.format.DateTimeFormatter
@@ -44,11 +45,18 @@ object InReachSource {
     "Basic " + Base64.getEncoder.encodeToString((":" + password).getBytes("UTF-8"))
 
   /** Production fetcher (java.net.http). Defined as a static method so
-    * the closure that captures it stays serializable. */
+    * the closure that captures it stays serializable. A non-2xx status
+    * throws (`HTTP <code> for share feed`, naming neither the URL nor
+    * the credentials), so a 401 or 500 error page never reaches the
+    * parser; the source's failure isolation turns it into an empty
+    * partition plus a `FEED:` line. */
   val httpFetcher: Fetcher = (url: String, password: Option[String]) => {
     val client = HttpClient.newHttpClient()
     val builder = HttpRequest.newBuilder(URI.create(url)).GET()
     password.foreach(p => builder.header("Authorization", basicAuth(p)))
-    client.send(builder.build(), HttpResponse.BodyHandlers.ofString()).body()
+    val response = client.send(builder.build(), HttpResponse.BodyHandlers.ofString())
+    if (response.statusCode / 100 != 2)
+      throw new IOException(s"HTTP ${response.statusCode} for share feed")
+    response.body()
   }
 }

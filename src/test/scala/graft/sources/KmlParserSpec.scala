@@ -2,6 +2,9 @@ package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
+
 /** Pins the reference's guard semantics (task.ts:95-112); fixture
   * shapes from FIXTURES.md §A1. Pure — no Spark session. */
 class KmlParserSpec extends AnyFunSuite {
@@ -72,5 +75,72 @@ class KmlParserSpec extends AnyFunSuite {
     val rows = KmlParser.parse(kml(fullPlacemark + pm2), "s", "c")
     assert(rows.map(_.extended("IMEI")) ==
       Seq("300434030000000", "300434030000001"))
+  }
+
+  test("names match on the local part; text keeps CDATA, entities and whitespace") {
+    val body =
+      """<k:kml xmlns:k="http://www.opengis.net/kml/2.2"><k:Document><k:Folder>
+        |<k:Placemark><k:Point><k:coordinates> 1,<![CDATA[2]]> </k:coordinates></k:Point>
+        |<gx:TimeStamp><when>a&amp;b&lt;<b>c</b></when></gx:TimeStamp>
+        |<ExtendedData><Data name="A"><value>x</value></Data><Data k:name="B"><value>y</value></Data>
+        |<Data><value>z</value></Data><Data name="A"><value>last</value><value>2nd</value></Data>
+        |<Data name="C"/></ExtendedData></k:Placemark>
+        |</k:Folder></k:Document></k:kml>""".stripMargin
+    val rows = KmlParser.parse(body, "s", "c")
+    assert(rows.size == 1)
+    assert(rows.head.coordinatesRaw.contains(" 1,2 "))
+    assert(rows.head.whenRaw.contains("a&b<c"))
+    assert(rows.head.extended == Map("A" -> "last", "C" -> ""))
+  }
+
+  test("only the first Document, its first Folder and direct Placemarks are read") {
+    val pm = """<Placemark><Point><coordinates>1,2</coordinates></Point></Placemark>"""
+    val body = s"""<kml><Document><Folder>$pm<Placemark/><Placemark><Point/></Placemark>
+                  |<Other>$pm</Other></Folder><Folder>$pm</Folder></Document>
+                  |<Document><Folder>$pm</Folder></Document></kml>""".stripMargin
+    val rows = KmlParser.parse(body, "s", "c")
+    assert(rows.map(_.coordinatesRaw) == Seq(Some("1,2"), None, Some("")))
+  }
+
+  test("a bare Document root is accepted; any other root has no Document") {
+    assert(KmlParser.parse("<Document><Folder><Placemark/></Folder></Document>", "s", "c").size == 1)
+    intercept[KmlParser.KmlDocumentNotFound] {
+      KmlParser.parse("<Folder><Document/></Folder>", "s", "c")
+    }
+  }
+
+  test("truncated or trailing-garbage body throws instead of returning a partial feed") {
+    val body = kml(fullPlacemark + fullPlacemark)
+    intercept[Exception](KmlParser.parse(body.dropRight(20), "s", "c"))
+    intercept[Exception](KmlParser.parse(body + "garbage", "s", "c"))
+    intercept[Exception](KmlParser.parse(body + "<kml/>", "s", "c"))
+    assert(KmlParser.parse(body + "\n<!-- trailing comment -->\n", "s", "c").size == 2)
+  }
+
+  test("deeply nested skipped markup does not overflow the stack") {
+    val deep = "<x>" * 100000 + "</x>" * 100000
+    val pm = s"<Placemark><description>$deep</description><Point><coordinates>1,2</coordinates></Point></Placemark>"
+    assert(KmlParser.parse(kml(pm), "s", "c").map(_.coordinatesRaw) == Seq(Some("1,2")))
+  }
+
+  test("a plain DOCTYPE is rejected") {
+    val body = kml(fullPlacemark)
+    assert(KmlParser.parse(body, "s", "c").size == 1)
+    intercept[Exception](KmlParser.parse(body.replaceFirst("\\?>", "?><!DOCTYPE kml>"), "s", "c"))
+  }
+
+  test("an external entity (XXE) is rejected without reading the file") {
+    val secret = Files.createTempFile("kml-xxe", ".txt")
+    try {
+      Files.write(secret, "xxe-secret-4711".getBytes(UTF_8))
+      val body =
+        s"""<?xml version="1.0"?>
+           |<!DOCTYPE kml [<!ENTITY x SYSTEM "${secret.toUri}">]>
+           |<kml><Document><Folder><Placemark>
+           |<Point><coordinates>&x;</coordinates></Point>
+           |</Placemark></Folder></Document></kml>""".stripMargin
+      val err = intercept[Exception](KmlParser.parse(body, "s", "c"))
+      assert(!String.valueOf(err.getMessage).contains("xxe-secret-4711"))
+    } finally Files.delete(secret)
   }
 }
