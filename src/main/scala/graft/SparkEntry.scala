@@ -5671,6 +5671,89 @@ object SparkEntry {
           s"($y2 <= $py AND $py < $y1)) AND $dir THEN 1 ELSE 0 END)"
       }.mkString(" + ")
 
+  /** q114's synthetic user–item graph: `raw` edges (user_id,
+    * event_id % 150) on every 13th event, the simple undirected edges
+    * `und` and the node degrees `deg`. */
+  private val eventGraphDegCtes: String =
+    """raw AS (SELECT user_id AS a, event_id % 150 AS b FROM events
+      |  WHERE user_id IS NOT NULL AND event_id IS NOT NULL AND event_id % 13 = 0),
+      |und AS (SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v FROM raw WHERE a <> b),
+      |deg AS (SELECT node, count(*)::BIGINT AS dg FROM
+      |  (SELECT u AS node FROM und UNION ALL SELECT v FROM und) GROUP BY 1)""".stripMargin
+
+  /** [[eventGraphDegCtes]] plus the degree-ordered orientation `o` and
+    * its wedges `w(x, y, z)` — the triangle chain of q114/q387/q389. */
+  private val triangleWedgeCtes: String =
+    s"""$eventGraphDegCtes,
+      |dd AS (SELECT u, v, du.dg AS du, dv.dg AS dv FROM und
+      |  JOIN deg du ON und.u = du.node JOIN deg dv ON und.v = dv.node),
+      |o AS (SELECT CASE WHEN (du < dv) OR (du = dv AND u < v) THEN u ELSE v END AS x,
+      |             CASE WHEN (du < dv) OR (du = dv AND u < v) THEN v ELSE u END AS y,
+      |             CASE WHEN (du < dv) OR (du = dv AND u < v) THEN dv ELSE du END AS dy
+      |      FROM dd),
+      |w AS (SELECT e1.x, e1.y, e2.y AS z FROM o e1 JOIN o e2 ON e1.x = e2.x
+      |      WHERE (e1.dy < e2.dy) OR (e1.dy = e2.dy AND e1.y < e2.y))""".stripMargin
+
+  /** The user–item graph's distinct edges `e(a, b)`: each user to item
+    * `1000000 + event_id % 150`. */
+  private val userItemEdgeCte: String =
+    """e AS (
+      |  SELECT DISTINCT user_id AS a, 1000000 + event_id % 150 AS b
+      |  FROM events WHERE user_id IS NOT NULL
+      |)""".stripMargin
+
+  /** [[userItemEdgeCte]] plus its symmetric closure `sym(u, v)`. */
+  private val userItemSymCtes: String =
+    s"""$userItemEdgeCte, sym AS (
+      |  SELECT a AS u, b AS v FROM e UNION SELECT b, a FROM e
+      |)""".stripMargin
+
+  /** Three synchronous label-propagation rounds `i1`..`i3` over
+    * [[userItemSymCtes]], each label the smallest among the most
+    * frequent neighbor labels — q175, and q439's partition. */
+  private val labelPropCtes: String =
+    s"""$userItemSymCtes, l0 AS (SELECT DISTINCT u AS node, u::BIGINT AS label FROM sym),
+      |""".stripMargin + (1 to 3).map { i =>
+      val prev = if (i == 1) "l0" else s"i${i - 1}"
+      s"""i$i AS (
+        |  SELECT u AS node, min(label) AS label FROM (
+        |    SELECT u, label, cnt, max(cnt) OVER (PARTITION BY u) AS mx FROM (
+        |      SELECT s.u, l.label, count(*) AS cnt
+        |      FROM sym s JOIN $prev l ON s.v = l.node GROUP BY 1, 2)
+        |  ) WHERE cnt = mx GROUP BY u
+        |)""".stripMargin
+    }.mkString(", ")
+
+  /** The user–item edges `e0(u, v)` and their distinct symmetric
+    * closure `sym` — q458's and [[seedBfsCtes]]' graph. */
+  private val userItemE0SymCtes: String =
+    """e0 AS (
+      |  SELECT user_id AS u, 1000000 + event_id % 150 AS v
+      |  FROM events WHERE user_id IS NOT NULL
+      |), sym AS (
+      |  SELECT DISTINCT u, v FROM (
+      |    SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0)
+      |)""".stripMargin
+
+  /** Per-seed BFS over [[userItemE0SymCtes]] unrolled to 3 hops:
+    * `d3(seed, node, dist)` holds every node within 3 hops of each
+    * seed (every 97th user) — q438 and q459. */
+  private val seedBfsCtes: String =
+    s"""$userItemE0SymCtes, seeds AS (
+      |  SELECT DISTINCT user_id AS seed FROM events
+      |  WHERE user_id IS NOT NULL AND user_id % 97 = 0
+      |), d0 AS (SELECT seed, seed AS node, 0::BIGINT AS dist FROM seeds),
+      |""".stripMargin + (1 to 3).map { i =>
+      s"""d$i AS (
+        |  SELECT seed, node, min(dist)::BIGINT AS dist FROM (
+        |    SELECT * FROM d${i - 1}
+        |    UNION ALL
+        |    SELECT f.seed, s.v AS node, $i::BIGINT
+        |    FROM sym s JOIN (SELECT seed, node FROM d${i - 1} WHERE dist = ${i - 1}) f
+        |      ON s.u = f.node) GROUP BY 1, 2
+        |)""".stripMargin
+    }.mkString(", ")
+
   /** One k-truss support round as DuckDB CTEs (suffix `i`, input
     * edge CTE `live`): degree-ordered orientation, wedge join,
     * triangle close, per-edge support — the SQL mirror of
@@ -5711,16 +5794,6 @@ object SparkEntry {
       s"(sqrt(list_sum(list_transform(generate_series(1, len($a)), i -> $a[i]::DOUBLE * $a[i]::DOUBLE))) * " +
       s"sqrt(list_sum(list_transform(generate_series(1, len($b)), i -> $b[i]::DOUBLE * $b[i]::DOUBLE)))), 6)"
 
-  /** Parameterized DuckDB dual of the full IVF-PQ ladder — q48's IVF
-    * CTEs + q295's PQ-fit recipe on unit-normalized vectors (m=16
-    * subspaces of 4 dims, 32 codes) + the ADC serve: per-query
-    * (subspace, code) distance tables, integer ADC sums, 50-deep
-    * shortlist, exact-cosine re-rank. `corpusWhere` picks the indexed
-    * rows (ivfPqIndex's fit input), `queryWhere` the served batch —
-    * one text therefore oracles q319 (build+serve fused), q326
-    * (standing-index serve over the same corpus) and q327 (per-batch
-    * ingest probe against the old-slice index), because ivfPqServe at
-    * equal parameters EQUALS ivfPqSearch on (corpus, batch). */
   /** The fit half of [[ivfPqDuck]] as composable CTE text (no WITH
     * prefix): corpus, IVF seeds, unit-normalized coords, PQ seed
     * components, first assignment, refined centroids — everything
@@ -5742,36 +5815,7 @@ object SparkEntry {
       |  SELECT vec_id, (i - 1) // 4 AS s, (i - 1) % 4 AS i2,
       |    nv[i]::DOUBLE AS x
       |  FROM nrm CROSS JOIN generate_series(1, 64) t(i)
-      |), sd AS (
-      |  SELECT sid, rn - 1 AS cc FROM (
-      |    SELECT vec_id AS sid, row_number() OVER (ORDER BY
-      |      ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT,
-      |      vec_id) AS rn
-      |    FROM c) WHERE rn <= 32
-      |), scomp AS (
-      |  SELECT s, cc AS cd, i2, x AS mx
-      |  FROM coords JOIN sd ON coords.vec_id = sd.sid
-      |), d0 AS (
-      |  SELECT coords.vec_id, coords.s, scomp.cd,
-      |    sum(CAST(floor((x - mx) * (x - mx) * 1e12 + 0.5)
-      |      AS BIGINT))::BIGINT AS qd
-      |  FROM coords JOIN scomp
-      |    ON coords.s = scomp.s AND coords.i2 = scomp.i2
-      |  GROUP BY 1, 2, 3
-      |), a0 AS (
-      |  SELECT vec_id, s, cd FROM (
-      |    SELECT vec_id, s, cd,
-      |      row_number() OVER (PARTITION BY vec_id, s
-      |        ORDER BY qd, cd) AS rn
-      |    FROM d0) WHERE rn = 1
-      |), ref AS (
-      |  SELECT coords.s, a0.cd, coords.i2,
-      |    (sum(CAST(floor(x * 1000000 + 0.5) AS BIGINT))::DOUBLE
-      |      / count(*)) / 1000000.0 AS mx
-      |  FROM coords JOIN a0
-      |    ON coords.vec_id = a0.vec_id AND coords.s = a0.s
-      |  GROUP BY 1, 2, 3
-      |)""".stripMargin
+      |), ${pqTrainCtes(32)}""".stripMargin
 
   /** Cramer 3×3 determinant / minors as SQL text over double-cast
     * moment column names — the exact textual mirror of
@@ -5800,29 +5844,545 @@ object SparkEntry {
       s" - ($d1/$det)*$t1::DOUBLE - ($d2/$det)*$t2::DOUBLE END"
   }
 
+  /** q250's quantized (y, x1, x2) lineitem rows as CTE `name`: the
+    * rows matching `where` with all three inputs present. */
+  private def olsLineitemCte(name: String, where: String): String =
+    s"""$name AS (
+      |  SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS y,
+      |    CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) AS x1,
+      |    CAST(floor(l_discount * 100 + 0.5) AS BIGINT) AS x2
+      |  FROM lineitem WHERE $where
+      |    AND l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
+      |    AND l_discount IS NOT NULL
+      |)""".stripMargin
+
+  /** The exact int64 moments `m<sfx>` of an (y, x1, x2) CTE `src` and
+    * their double casts `md<sfx>` — shared by the lineitem OLS duals
+    * (q250, q273, q309, q394, q414, q422). */
+  private def olsMomentCtes(src: String, sfx: String = ""): String =
+    s"""m$sfx AS (
+      |  SELECT count(*)::BIGINT AS n, sum(x1)::BIGINT AS a,
+      |    sum(x2)::BIGINT AS b, sum(x1 * x1)::BIGINT AS c,
+      |    sum(x1 * x2)::BIGINT AS d, sum(x2 * x2)::BIGINT AS e,
+      |    sum(y)::BIGINT AS t0, sum(x1 * y)::BIGINT AS t1,
+      |    sum(x2 * y)::BIGINT AS t2
+      |  FROM $src
+      |), md$sfx AS (
+      |  SELECT n::DOUBLE AS n, a::DOUBLE AS a, b::DOUBLE AS b,
+      |    c::DOUBLE AS c, d::DOUBLE AS d, e::DOUBLE AS e,
+      |    t0::DOUBLE AS t0, t1::DOUBLE AS t1, t2::DOUBLE AS t2
+      |  FROM m$sfx
+      |)""".stripMargin
+
+  /** [[olsMomentCtes]] plus the Cramer solve `dt<sfx>` and the
+    * coefficients `cf<sfx>(b0, b1, b2)`, NULL on a singular design —
+    * the SQL mirror of `Analytics.olsFitApply`'s fit. */
+  private def olsFitCtes(src: String, sfx: String = ""): String =
+    s"""${olsMomentCtes(src, sfx)}, dt$sfx AS (
+      |  SELECT
+      |    n * (c * e - d * d) - a * (a * e - d * b)
+      |      + b * (a * d - c * b) AS det,
+      |    t0 * (c * e - d * d) - a * (t1 * e - d * t2)
+      |      + b * (t1 * d - c * t2) AS det0,
+      |    n * (t1 * e - d * t2) - t0 * (a * e - d * b)
+      |      + b * (a * t2 - t1 * b) AS det1,
+      |    n * (c * t2 - t1 * d) - a * (a * t2 - t1 * b)
+      |      + t0 * (a * d - c * b) AS det2
+      |  FROM md$sfx
+      |), cf$sfx AS (
+      |  SELECT CASE WHEN det <> 0 THEN det0 / det END AS b0,
+      |    CASE WHEN det <> 0 THEN det1 / det END AS b1,
+      |    CASE WHEN det <> 0 THEN det2 / det END AS b2
+      |  FROM dt$sfx
+      |)""".stripMargin
+
+  /** The per-document curation signals q21/q22/q59/q07 compose:
+    * tokens `t`, quality score `q`, stop-word language `l`,
+    * duplicate-token fraction `r`, exact-text survivors `s(f, survivor)`. */
+  private val curationSignalCtes: String =
+    """t AS (
+      |  SELECT doc_id, text, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+      |  FROM documents
+      |), q AS (
+      |  SELECT doc_id,
+      |    round(least(length(text)::BIGINT / 500.0, 1.0) * 0.4 +
+      |      least(coalesce(len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','it','that','for'], x)))::DOUBLE / nullif(len(toks)::DOUBLE, 0), 0.0) * 5.0, 1.0) * 0.4 +
+      |      (1.0 - least(coalesce(len(regexp_extract_all(text, '[^a-zA-Z0-9\s]'))::DOUBLE / nullif(length(text)::DOUBLE, 0), 0.0) * 10.0, 1.0)) * 0.2, 6) AS quality
+      |  FROM t
+      |), l AS (
+      |  SELECT doc_id,
+      |    CASE WHEN len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) > 0 THEN 'zh'
+      |         WHEN len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','it','that','for'], x))) >= len(list_filter(toks, x -> list_contains(['der','die','das','und','ist','ein','eine','zu','mit','von'], x)))
+      |          AND len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','it','that','for'], x))) >= len(list_filter(toks, x -> list_contains(['le','la','les','et','est','un','une','de','du','pour'], x)))
+      |          AND len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','it','that','for'], x))) >= len(list_filter(toks, x -> list_contains(['el','los','las','y','es','si','una','como','por','para'], x))) THEN 'en'
+      |         ELSE 'other' END AS predicted_lang
+      |  FROM t
+      |), r AS (
+      |  SELECT doc_id, CASE WHEN len(toks) = 0 THEN 0.0
+      |    ELSE round((len(toks) - len(list_distinct(toks)))::DOUBLE / len(toks), 6) END AS dup_token_frac
+      |  FROM t
+      |), s AS (
+      |  SELECT ('0x' || substr(md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), 1, 15))::BIGINT AS f,
+      |    min(doc_id) AS survivor
+      |  FROM documents GROUP BY 1
+      |)""".stripMargin
+
+  /** q22's stop-word hit counts `c_en`, `c_de`, `c_fr`, `c_es` of the
+    * token list `toks`, as select-list columns. */
+  private val langCountCols: String =
+    """len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','it','that','for'], x))) AS c_en,
+      |len(list_filter(toks, x -> list_contains(['der','die','das','und','ist','ein','eine','zu','mit','von'], x))) AS c_de,
+      |len(list_filter(toks, x -> list_contains(['le','la','les','et','est','un','une','de','du','pour'], x))) AS c_fr,
+      |len(list_filter(toks, x -> list_contains(['el','los','las','y','es','si','una','como','por','para'], x))) AS c_es""".stripMargin
+
+  /** q22's language decision over [[langCountCols]]: any CJK character
+    * wins 'zh', else the largest count, ties to the earlier language. */
+  private val langIdCaseSql: String =
+    """CASE WHEN len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) > 0 THEN 'zh'
+      |     WHEN c_en >= c_de AND c_en >= c_fr AND c_en >= c_es THEN 'en'
+      |     WHEN c_de >= c_fr AND c_de >= c_es THEN 'de'
+      |     WHEN c_fr >= c_es THEN 'fr'
+      |     ELSE 'es' END""".stripMargin
+
+  /** q81's BM25 inputs: document lengths `lens`, corpus `stats`, and
+    * the term frequencies `hits` and document frequencies `dfs` of the
+    * three query terms. */
+  private val bm25TermCtes: String =
+    """lens AS (
+      |  SELECT doc_id, len(regexp_extract_all(lower(text), '[a-z0-9]+'))::DOUBLE AS dl
+      |  FROM documents
+      |), stats AS (SELECT count(*)::DOUBLE AS n, avg(dl) AS avgdl FROM lens),
+      |tok AS (
+      |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
+      |  FROM documents
+      |), hits AS (
+      |  SELECT doc_id, term, count(*)::DOUBLE AS tf FROM tok
+      |  WHERE term IN ('dup', 'join', 'window') GROUP BY 1, 2
+      |), dfs AS (SELECT term, count(*)::DOUBLE AS df FROM hits GROUP BY 1)""".stripMargin
+
+  /** q146's per-user status changes: events `c` and the change points
+    * `k(user_id, event_type, ts_us, event_id)` where event_type differs
+    * from the user's previous event. */
+  private val statusChangeCtes: String =
+    """c AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us,
+      |    event_id FROM events),
+      |d AS (SELECT *, lag(event_type) OVER
+      |    (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev FROM c),
+      |k AS (SELECT user_id, event_type, ts_us, event_id FROM d
+      |  WHERE prev IS DISTINCT FROM event_type)""".stripMargin
+
+  /** The r × c contingency table of `base(r, c)`: observed counts `o`,
+    * margins `rt`, `ct`, totals `n`, `nc`, and the dense grid `cells`
+    * with zero-filled cells. */
+  private val contingencyCtes: String =
+    """o AS (SELECT r, c, count(*)::BIGINT AS o FROM base GROUP BY 1, 2),
+      |rt AS (SELECT r, sum(o)::BIGINT AS rt FROM o GROUP BY 1),
+      |ct AS (SELECT c, sum(o)::BIGINT AS ct FROM o GROUP BY 1),
+      |n AS (SELECT sum(rt)::BIGINT AS n, count(*)::BIGINT AS nr FROM rt),
+      |nc AS (SELECT count(*)::BIGINT AS nc FROM ct),
+      |cells AS (
+      |  SELECT rt.r, ct.c, coalesce(o.o, 0) AS o, rt.rt, ct.ct
+      |  FROM rt CROSS JOIN ct LEFT JOIN o ON o.r = rt.r AND o.c = ct.c
+      |)""".stripMargin
+
+  /** q109's funnel stages: `s1` first signup per user, then `s2`..`s4`
+    * the first view, click, purchase strictly after and within 48 h of
+    * the previous stage (µs integers). */
+  private val funnelStageCtes: String =
+    """s1 AS (SELECT user_id, min(epoch_us(ts)) AS t FROM events
+      |  WHERE event_type = 'signup' AND user_id IS NOT NULL GROUP BY 1),
+      |""".stripMargin + Seq("view", "click", "purchase").zip(2 to 4).map {
+      case (step, i) =>
+        val prev = s"s${i - 1}"
+        s"""s$i AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t FROM events e
+          |  JOIN $prev ON e.user_id = $prev.user_id
+          |  WHERE e.event_type = '$step' AND epoch_us(e.ts) > $prev.t
+          |    AND epoch_us(e.ts) <= $prev.t + 172800000000 GROUP BY 1)""".stripMargin
+    }.mkString(",\n")
+
+  /** q168's two customer renderings for record linkage: side `a` as
+    * is, side `b` with a scrambled phone on every 7th key, a suffixed
+    * name on every 5th and a rounded balance. */
+  private val linkageSideCtes: String =
+    """a AS (
+      |  SELECT c_nationkey, c_mktsegment, c_custkey AS a_key,
+      |    (c_custkey * 7919 % 10000000)::VARCHAR AS a_pd,
+      |    lower(c_name) AS a_nm, c_acctbal::DOUBLE AS a_bal
+      |  FROM customer
+      |), b AS (
+      |  SELECT c_nationkey, c_mktsegment, c_custkey + 1000000 AS b_key,
+      |    CASE WHEN c_custkey % 7 = 0
+      |         THEN reverse((c_custkey * 7919 % 10000000)::VARCHAR)
+      |         ELSE (c_custkey * 7919 % 10000000)::VARCHAR END AS b_pd,
+      |    CASE WHEN c_custkey % 5 = 0 THEN lower(c_name) || 'x'
+      |         ELSE lower(c_name) END AS b_nm,
+      |    round(c_acctbal)::DOUBLE AS b_bal
+      |  FROM customer
+      |)""".stripMargin
+
+  /** q169's hourly value sums, the centered 25-hour moving-average
+    * trend `det`, per-phase seasonal means `pm` and their mean `ctr`. */
+  private val seasonalCtes: String =
+    """hourly AS (
+      |  SELECT epoch_ns(ts) // 3600000000000 AS h,
+      |    round(sum(value), 6) AS v
+      |  FROM events GROUP BY 1
+      |), det AS (
+      |  SELECT h, v::DOUBLE AS y,
+      |    avg(v::DOUBLE) OVER (ORDER BY h
+      |      ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING) AS trend,
+      |    h % 24 AS phase
+      |  FROM hourly
+      |), pm AS (SELECT phase, avg(y - trend) AS s_raw FROM det GROUP BY 1),
+      |ctr AS (SELECT avg(s_raw) AS s_bar FROM pm)""".stripMargin
+
+  /** Cent-quantized values per event type `b(g, q, event_id)`, each
+    * row's tie-broken rank `rn` and its group size `n` — q244, q254. */
+  private val valueRankCtes: String =
+    """b AS (
+      |  SELECT event_type AS g, CAST(floor(value * 100 + 0.5) AS BIGINT)
+      |    AS q, event_id
+      |  FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL
+      |), r AS (
+      |  SELECT g, q,
+      |    row_number() OVER (PARTITION BY g ORDER BY q, event_id) AS rn,
+      |    (count(*) OVER (PARTITION BY g))::BIGINT AS n
+      |  FROM b
+      |)""".stripMargin
+
+  /** Per-`key` Jensen–Shannon terms `t` between the current (`c/dt`)
+    * and previous (`prev/pt`) category shares of `g3`. */
+  private def jsTermCte(key: String): String =
+    s"""t AS (
+      |  SELECT $key, dt, pt,
+      |    (CASE WHEN c > 0 THEN (c::DOUBLE / dt)
+      |        * ln((c::DOUBLE / dt)
+      |          / ((c::DOUBLE / dt + prev::DOUBLE / pt) / 2)) / 2
+      |      ELSE 0.0 END)
+      |    + (CASE WHEN prev > 0 THEN (prev::DOUBLE / pt)
+      |        * ln((prev::DOUBLE / pt)
+      |          / ((c::DOUBLE / dt + prev::DOUBLE / pt) / 2)) / 2
+      |      ELSE 0.0 END) AS term
+      |  FROM g3 WHERE pt > 0 AND dt > 0
+      |)""".stripMargin
+
+  /** Each document's tokens `tk` and one row per token position
+    * `pt(doc_id, pos, term)`, 0-based — q455, q464. */
+  private val positionalTokenCtes: String =
+    """tk AS (
+      |  SELECT doc_id,
+      |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+      |  FROM documents
+      |), pt AS (
+      |  SELECT doc_id, u.p AS pos, u.w AS term FROM (
+      |    SELECT doc_id, unnest(list_transform(range(1, len(toks) + 1),
+      |      i -> {'p': i - 1, 'w': toks[i]})) AS u
+      |    FROM tk)
+      |)""".stripMargin
+
+  /** q31's payload frames: each document's uppercase hex `hx` and
+    * byte count, and every `stride`-th 64-byte frame index `idx`. */
+  private def hexFrameCtes(stride: Int): String =
+    s"""b AS (
+      |  SELECT doc_id, to_hex(encode(text)) AS hx,
+      |    octet_length(encode(text))::BIGINT AS n_bytes
+      |  FROM documents
+      |), idx AS (
+      |  SELECT doc_id, hx,
+      |    unnest(generate_series(0, greatest(ceil(n_bytes / 64.0)::BIGINT - 1, 0), $stride)) AS frame_idx
+      |  FROM b
+      |)""".stripMargin
+
+  /** Sessionization of the whole event log: `e` rows, `g` flags a new
+    * session after a 30-minute gap (or none), `s(user_id, ts_us,
+    * sess_n)` numbers each user's sessions. */
+  private val sessionCtes: String =
+    """e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
+      |g AS (
+      |  SELECT user_id, event_id, ts_us,
+      |    CASE WHEN lag(ts_us) OVER w IS NULL
+      |           OR ts_us - lag(ts_us) OVER w > 1800000000 THEN 1 ELSE 0 END AS new_sess
+      |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
+      |), s AS (
+      |  SELECT user_id, ts_us,
+      |    (sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
+      |      ROWS UNBOUNDED PRECEDING))::BIGINT AS sess_n
+      |  FROM g
+      |)""".stripMargin
+
+  /** The one-shot sessions of [[sessionCtes]] — the dual of both the
+    * incremental (q171) and the streaming (q178) sessionizer. */
+  private val oneShotSessionsSql: String =
+    s"""WITH $sessionCtes
+      |SELECT user_id, min(ts_us) AS sess_start,
+      |  (max(ts_us) - min(ts_us)) AS sess_dur_us,
+      |  count(*)::BIGINT AS n_events
+      |FROM s GROUP BY user_id, sess_n""".stripMargin
+
+  /** q207's quality-classifier features `f` (token count, stop-word,
+    * alphabetic and mean-token-length ratios) and its logit `z`. */
+  private val q207ScoreCtes: String =
+    """t AS (
+      |  SELECT doc_id, text,
+      |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+      |  FROM documents
+      |), f AS (
+      |  SELECT doc_id, len(toks)::DOUBLE AS n_tok,
+      |    coalesce(len(list_filter(toks, x -> list_contains(
+      |      ['the','a','of','and','to','in','is','it','that','for'], x)))::DOUBLE
+      |      / nullif(len(toks)::DOUBLE, 0), 0.0) AS stop_ratio,
+      |    coalesce(len(regexp_extract_all(lower(text), '[a-z]'))::DOUBLE
+      |      / nullif(length(text)::DOUBLE, 0), 0.0) AS alpha_ratio,
+      |    coalesce(coalesce(list_sum(list_transform(toks, x -> length(x))), 0)::DOUBLE
+      |      / nullif(len(toks)::DOUBLE, 0), 0.0) AS mean_tok_len
+      |  FROM t
+      |), z AS (
+      |  SELECT doc_id, -3.0 + ln(1.0 + n_tok) * 0.55 + stop_ratio * 4.0
+      |    + alpha_ratio * 1.5 + mean_tok_len * (-0.05) AS z
+      |  FROM f
+      |)""".stripMargin
+
+  /** q371's Page–Hinkley statistic per event type: daily mean cents
+    * `x`, running means and the cumulative deviation `m(g, t, m)`. */
+  private val pageHinkleyCtes: String =
+    """daily AS (
+      |  SELECT event_type AS g, epoch_ns(ts) // 86400000000000 AS t,
+      |    (sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
+      |      // count(*))::BIGINT AS x
+      |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
+      |), f AS (
+      |  SELECT * FROM daily WHERE g IS NOT NULL AND x IS NOT NULL
+      |), r AS (
+      |  SELECT g, t, x, row_number() OVER w AS i,
+      |    sum(x) OVER (PARTITION BY g ORDER BY t
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s
+      |  FROM f WINDOW w AS (PARTITION BY g ORDER BY t)
+      |), m AS (
+      |  SELECT g, t,
+      |    sum(x::DOUBLE - s::DOUBLE / i) OVER (PARTITION BY g ORDER BY t
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS m
+      |  FROM r
+      |)""".stripMargin
+
+  /** q193's survival data: durations `dur` with event flags `d`,
+    * per-(type, dur) counts `c`, and the at-risk counts
+    * `r(event_type, dur, n_events, n_risk)`. */
+  private val atRiskCtes: String =
+    """base AS (
+      |  SELECT event_type, event_id % 30 + 1 AS dur,
+      |    CASE WHEN event_id % 3 <> 0 THEN 1 ELSE 0 END AS d
+      |  FROM events WHERE event_type IS NOT NULL
+      |), c AS (
+      |  SELECT event_type, dur, sum(d)::BIGINT AS n_events,
+      |    count(*)::BIGINT AS cnt
+      |  FROM base GROUP BY 1, 2
+      |), r AS (
+      |  SELECT event_type, dur, n_events,
+      |    sum(cnt) OVER (PARTITION BY event_type)
+      |      - coalesce(sum(cnt) OVER (PARTITION BY event_type ORDER BY dur
+      |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+      |      AS n_risk
+      |  FROM c
+      |)""".stripMargin
+
+  /** q193's Kaplan–Meier curve over [[atRiskCtes]]' `r`: the product
+    * limit as exp(Σ ln(1 − d/n)), pinned to 0 once a type goes extinct
+    * (integer test, no ln(0)). */
+  private val kaplanMeierSql: String =
+    """SELECT event_type, dur, n_risk::BIGINT AS n_risk, n_events,
+      |  CASE WHEN max(CASE WHEN n_events = n_risk AND n_events > 0
+      |      THEN 1 ELSE 0 END)
+      |      OVER (PARTITION BY event_type ORDER BY dur) = 1 THEN 0.0
+      |  ELSE round(exp(sum(CASE WHEN n_events > 0 AND n_events < n_risk
+      |      THEN ln(1 - n_events::DOUBLE / n_risk) ELSE 0.0 END)
+      |      OVER (PARTITION BY event_type ORDER BY dur)), 6)
+      |  END AS survival
+      |FROM r""".stripMargin
+
+  /** q393's per-type lag-1..3 moments of the cent-quantized value
+    * series: rows `b(g, y, x1..x3)`, exact sums `m`, their double
+    * casts `d` — shared by q393 and q396. */
+  private val acfMomentCtes: String =
+    """b AS (
+      |  SELECT event_type AS g,
+      |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS y,
+      |    lag(CAST(floor(value * 100 + 0.5) AS BIGINT), 1) OVER w AS x1,
+      |    lag(CAST(floor(value * 100 + 0.5) AS BIGINT), 2) OVER w AS x2,
+      |    lag(CAST(floor(value * 100 + 0.5) AS BIGINT), 3) OVER w AS x3
+      |  FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL
+      |    AND ts IS NOT NULL
+      |  WINDOW w AS (PARTITION BY event_type ORDER BY epoch_ns(ts),
+      |    event_id)
+      |), m AS (
+      |  SELECT g, count(*)::BIGINT AS n, sum(y) AS s, sum(y * y) AS q,
+      |    count(x1)::BIGINT AS cnt1, sum(y * x1) AS c1,
+      |    sum(CASE WHEN x1 IS NOT NULL THEN y END) AS a1, sum(x1) AS b1,
+      |    count(x2)::BIGINT AS cnt2, sum(y * x2) AS c2,
+      |    sum(CASE WHEN x2 IS NOT NULL THEN y END) AS a2, sum(x2) AS b2,
+      |    count(x3)::BIGINT AS cnt3, sum(y * x3) AS c3,
+      |    sum(CASE WHEN x3 IS NOT NULL THEN y END) AS a3, sum(x3) AS b3
+      |  FROM b GROUP BY 1
+      |), d AS (
+      |  SELECT g, n, n::DOUBLE AS nd, s::DOUBLE AS sd, q::DOUBLE AS qd,
+      |    cnt1::DOUBLE AS k1, c1::DOUBLE AS c1d, a1::DOUBLE AS a1d,
+      |    b1::DOUBLE AS b1d,
+      |    cnt2::DOUBLE AS k2, c2::DOUBLE AS c2d, a2::DOUBLE AS a2d,
+      |    b2::DOUBLE AS b2d,
+      |    cnt3::DOUBLE AS k3, c3::DOUBLE AS c3d, a3::DOUBLE AS a3d,
+      |    b3::DOUBLE AS b3d
+      |  FROM m
+      |)""".stripMargin
+
+  /** Doubled mid-ranks `rk(s, t, r2)` of the scores `b.s` (ties
+    * share 2·rank, exact int64) and their per-group sums `pg(<group>,
+    * nj, r2j)` — q227's rank machinery, shared by q391, q431 and the
+    * signed-rank dual. */
+  private def doubledRankCtes(group: String): String =
+    s"""sc AS (SELECT s, count(*)::BIGINT AS t FROM b GROUP BY 1),
+      |rk AS (
+      |  SELECT s, t, 2 * coalesce(sum(t) OVER (ORDER BY s
+      |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + t + 1 AS r2
+      |  FROM sc
+      |), gs AS (SELECT $group, s, count(*)::BIGINT AS c FROM b GROUP BY 1, 2),
+      |pg AS (
+      |  SELECT $group, sum(c)::BIGINT AS nj, sum(c * rk.r2)::BIGINT AS r2j
+      |  FROM gs JOIN rk USING (s) GROUP BY 1
+      |)""".stripMargin
+
+  /** q205's two bottom-64 KMV sketches (click vs purchase users)
+    * `ka`, `kb`, their union sketch `uk`, and per-member flags `fl`. */
+  private val kmvUnionCtes: String =
+    """a AS (
+      |  SELECT DISTINCT ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS h
+      |  FROM events WHERE user_id IS NOT NULL AND event_type = 'click'
+      |), b AS (
+      |  SELECT DISTINCT ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS h
+      |  FROM events WHERE user_id IS NOT NULL AND event_type = 'purchase'
+      |), ka AS (SELECT h FROM a ORDER BY h LIMIT 64),
+      |kb AS (SELECT h FROM b ORDER BY h LIMIT 64),
+      |uk AS (
+      |  SELECT h FROM (SELECT DISTINCT h FROM (
+      |    SELECT h FROM ka UNION ALL SELECT h FROM kb))
+      |  ORDER BY h LIMIT 64
+      |), fl AS (
+      |  SELECT uk.h,
+      |    CASE WHEN ka.h IS NOT NULL THEN 1 ELSE 0 END AS in_a,
+      |    CASE WHEN kb.h IS NOT NULL THEN 1 ELSE 0 END AS in_b
+      |  FROM uk LEFT JOIN ka ON uk.h = ka.h LEFT JOIN kb ON uk.h = kb.h
+      |)""".stripMargin
+
+  /** EM iteration `i` of q289's Fellegi–Sunter fit over the agreement
+    * patterns `pat`: posteriors `p<i>` from `c<i-1>`, ×10¹²-quantized
+    * sums `a<i>`, updated parameters `c<i>`. */
+  private def emRoundCtes(i: Int): String =
+    s"""p$i AS (
+      |  SELECT g1, g2, g3, cnt,
+      |    (lam * (CASE WHEN g1 THEN m1 ELSE 1.0 - m1 END)
+      |         * (CASE WHEN g2 THEN m2 ELSE 1.0 - m2 END)
+      |         * (CASE WHEN g3 THEN m3 ELSE 1.0 - m3 END)) /
+      |    ((lam * (CASE WHEN g1 THEN m1 ELSE 1.0 - m1 END)
+      |          * (CASE WHEN g2 THEN m2 ELSE 1.0 - m2 END)
+      |          * (CASE WHEN g3 THEN m3 ELSE 1.0 - m3 END)) +
+      |     ((1.0 - lam) * (CASE WHEN g1 THEN u1 ELSE 1.0 - u1 END)
+      |                  * (CASE WHEN g2 THEN u2 ELSE 1.0 - u2 END)
+      |                  * (CASE WHEN g3 THEN u3 ELSE 1.0 - u3 END))) AS p
+      |  FROM pat, c${i - 1}
+      |), a$i AS (
+      |  SELECT
+      |    sum(CAST(floor(p * 1e12 + 0.5) AS BIGINT)::HUGEINT * cnt) AS sp,
+      |    sum(CAST(floor((1.0 - p) * 1e12 + 0.5)
+      |      AS BIGINT)::HUGEINT * cnt) AS su,
+      |    sum(cnt)::BIGINT AS n,
+      |    sum(CASE WHEN g1 THEN CAST(floor(p * 1e12 + 0.5) AS BIGINT)::HUGEINT
+      |      * cnt ELSE 0 END) AS sg1,
+      |    sum(CASE WHEN g1 THEN CAST(floor((1.0 - p) * 1e12 + 0.5)
+      |      AS BIGINT)::HUGEINT * cnt ELSE 0 END) AS sug1,
+      |    sum(CASE WHEN g2 THEN CAST(floor(p * 1e12 + 0.5) AS BIGINT)::HUGEINT
+      |      * cnt ELSE 0 END) AS sg2,
+      |    sum(CASE WHEN g2 THEN CAST(floor((1.0 - p) * 1e12 + 0.5)
+      |      AS BIGINT)::HUGEINT * cnt ELSE 0 END) AS sug2,
+      |    sum(CASE WHEN g3 THEN CAST(floor(p * 1e12 + 0.5) AS BIGINT)::HUGEINT
+      |      * cnt ELSE 0 END) AS sg3,
+      |    sum(CASE WHEN g3 THEN CAST(floor((1.0 - p) * 1e12 + 0.5)
+      |      AS BIGINT)::HUGEINT * cnt ELSE 0 END) AS sug3
+      |  FROM p$i
+      |), c$i AS (
+      |  SELECT (sp::DOUBLE / 1e12) / n AS lam,
+      |    sg1::DOUBLE / sp AS m1, sug1::DOUBLE / su AS u1,
+      |    sg2::DOUBLE / sp AS m2, sug2::DOUBLE / su AS u2,
+      |    sg3::DOUBLE / sp AS m3, sug3::DOUBLE / su AS u3
+      |  FROM a$i
+      |)""".stripMargin
+
   /** Auto-scaled cell count for the ingest-facing indexes, as SQL —
     * mirrors vecIndexTable's `max(8, n/128)` exactly. */
   private val autoCellsSql = "(SELECT greatest(8, count(*)//128) FROM c)"
 
-  /** DuckDB dual of the streaming threshold probe: fresh ranks the
-    * old-slice seeds by the same rounded cosine, probes 4 cells of
-    * the standing assignment, verifies by exact cosine ≥ tau — no
-    * ADC, no shortlist. Shared verbatim by q333 (partitioned index)
-    * and q477 (bucketed production layout): the two serves read the
-    * SAME index rows, so one replay is both oracles. */
-  private def streamVecProbeDuck: String =
-    s"""WITH ${ivfPqFitCtes("WHERE vec_id % 10 <> 7", autoCellsSql)},
-      |qsrc AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 = 7),
-      |ca AS (
+  /** Per-(vector, subspace) squared distance `qd` (×10¹², int64) of
+    * the points `pts(vec_id, s, i2, x)` to every code of
+    * `cents(s, cd, i2, mx)`, as CTE `name`. */
+  private def pqDistCte(name: String, pts: String, cents: String): String =
+    s"""$name AS (
+      |  SELECT $pts.vec_id, $pts.s, $cents.cd,
+      |    sum(CAST(floor((x - mx) * (x - mx) * 1e12 + 0.5)
+      |      AS BIGINT))::BIGINT AS qd
+      |  FROM $pts JOIN $cents
+      |    ON $pts.s = $cents.s AND $pts.i2 = $cents.i2
+      |  GROUP BY 1, 2, 3
+      |)""".stripMargin
+
+  /** Each (vector, subspace)'s nearest code in the [[pqDistCte]]
+    * `dist`, ties to the smaller code, as CTE `name`. */
+  private def pqArgminCte(name: String, dist: String): String =
+    s"""$name AS (
+      |  SELECT vec_id, s, cd FROM (
+      |    SELECT vec_id, s, cd,
+      |      row_number() OVER (PARTITION BY vec_id, s
+      |        ORDER BY qd, cd) AS rn
+      |    FROM $dist) WHERE rn = 1
+      |)""".stripMargin
+
+  /** One PQ training pass over `coords(vec_id, s, i2, x)` of the corpus
+    * `c`: `codes` md5-ordered seed vectors `sd` give the seed codes
+    * `scomp`, the first assignment `a0` and the refined centroids
+    * `ref` (×10⁶ int64 means) — q295's and [[ivfPqFitCtes]]' recipe. */
+  private def pqTrainCtes(codes: Int): String =
+    s"""sd AS (
+      |  SELECT sid, rn - 1 AS cc FROM (
+      |    SELECT vec_id AS sid, row_number() OVER (ORDER BY
+      |      ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT,
+      |      vec_id) AS rn
+      |    FROM c) WHERE rn <= $codes
+      |), scomp AS (
+      |  SELECT s, cc AS cd, i2, x AS mx
+      |  FROM coords JOIN sd ON coords.vec_id = sd.sid
+      |), ${pqDistCte("d0", "coords", "scomp")}, ${pqArgminCte("a0", "d0")}, ref AS (
+      |  SELECT coords.s, a0.cd, coords.i2,
+      |    (sum(CAST(floor(x * 1000000 + 0.5) AS BIGINT))::DOUBLE
+      |      / count(*)) / 1000000.0 AS mx
+      |  FROM coords JOIN a0
+      |    ON coords.vec_id = a0.vec_id AND coords.s = a0.s
+      |  GROUP BY 1, 2, 3
+      |)""".stripMargin
+
+  /** Every vector of `corpus` assigned to its 2 nearest [[ivfPqFitCtes]]
+    * seeds by rounded cosine: scores `ca`, `assign(cand_id, cell)`. */
+  private def ivfAssignCtes(corpus: String): String =
+    s"""ca AS (
       |  SELECT x.vec_id AS cand_id, s.seed_id,
       |    ${duckCos("x.embedding", "s.sv")} AS cs
-      |  FROM c x, seeds s
+      |  FROM $corpus x, seeds s
       |), assign AS (
       |  SELECT cand_id, seed_id AS cell FROM (
       |    SELECT *, row_number() OVER (PARTITION BY cand_id
       |      ORDER BY cs DESC, seed_id) AS arn
       |    FROM ca) WHERE arn <= 2
-      |), qa AS (
+      |)""".stripMargin
+
+  /** The streaming threshold probe of `qsrc` against [[ivfAssignCtes]]
+    * over `corpus`: 4 probed cells, exact cosine ≥ 0.4. */
+  private def thresholdProbeSql(corpus: String): String =
+    s"""${ivfAssignCtes(corpus)}, qa AS (
       |  SELECT q.vec_id AS query_id, s.seed_id,
       |    ${duckCos("q.embedding", "s.sv")} AS cs
       |  FROM qsrc q, seeds s
@@ -5840,9 +6400,46 @@ object SparkEntry {
       |    ${duckCos("q.embedding", "x.embedding")} AS cos
       |  FROM cand
       |  JOIN qsrc q ON q.vec_id = cand.query_id
-      |  JOIN c x ON x.vec_id = cand.cand_id
+      |  JOIN $corpus x ON x.vec_id = cand.cand_id
       |)
       |SELECT query_id, cand_id, cos FROM sc WHERE cos >= 0.4""".stripMargin
+
+  /** q52's cell count over the embeddings table: `max(8, ceil(n / 128))`. */
+  private val embedAutoCellsSql =
+    "greatest(8, ceil((SELECT count(*) FROM embeddings) / 128.0))::BIGINT"
+
+  /** q48's IVF seeds: the first `cells` embeddings in md5 order. */
+  private def embedSeedsCte(cells: String): String =
+    s"""seeds AS (
+      |  SELECT vec_id AS seed_id, embedding AS sv FROM embeddings
+      |  ORDER BY ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT, vec_id
+      |  LIMIT $cells
+      |)""".stripMargin
+
+  /** Every embedding (vector `cv`) assigned to its `multi` nearest
+    * [[embedSeedsCte]] seeds by rounded cosine: `ca`, then
+    * `assign(cand_id, cv, cell)` — q48, q52, q366, q372. */
+  private def embedAssignCtes(multi: Int): String =
+    s"""ca AS (
+      |  SELECT c.vec_id AS cand_id, c.embedding AS cv, s.seed_id,
+      |    ${duckCos("c.embedding", "s.sv")} AS cs
+      |  FROM embeddings c, seeds s
+      |), assign AS (
+      |  SELECT cand_id, cv, seed_id AS cell FROM (
+      |    SELECT *, row_number() OVER (PARTITION BY cand_id ORDER BY cs DESC, seed_id) AS arn
+      |    FROM ca) WHERE arn <= $multi
+      |)""".stripMargin
+
+  /** DuckDB dual of the streaming threshold probe: fresh ranks the
+    * old-slice seeds by the same rounded cosine, probes 4 cells of
+    * the standing assignment, verifies by exact cosine ≥ tau — no
+    * ADC, no shortlist. Shared verbatim by q333 (partitioned index)
+    * and q477 (bucketed production layout): the two serves read the
+    * SAME index rows, so one replay is both oracles. */
+  private def streamVecProbeDuck: String =
+    s"""WITH ${ivfPqFitCtes("WHERE vec_id % 10 <> 7", autoCellsSql)},
+      |qsrc AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 = 7),
+      |${thresholdProbeSql("c")}""".stripMargin
 
   /** DuckDB dual of the bucketed-table append + next-wave probe
     * (q479): the fit CTEs run on the OLD slice (the standing index's
@@ -5856,36 +6453,7 @@ object SparkEntry {
       |c2 AS (SELECT vec_id, embedding FROM embeddings
       |       WHERE vec_id % 10 <> 7 OR vec_id % 20 = 7),
       |qsrc AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 = 17),
-      |ca AS (
-      |  SELECT x.vec_id AS cand_id, s.seed_id,
-      |    ${duckCos("x.embedding", "s.sv")} AS cs
-      |  FROM c2 x, seeds s
-      |), assign AS (
-      |  SELECT cand_id, seed_id AS cell FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY cand_id
-      |      ORDER BY cs DESC, seed_id) AS arn
-      |    FROM ca) WHERE arn <= 2
-      |), qa AS (
-      |  SELECT q.vec_id AS query_id, s.seed_id,
-      |    ${duckCos("q.embedding", "s.sv")} AS cs
-      |  FROM qsrc q, seeds s
-      |), probes AS (
-      |  SELECT query_id, seed_id AS cell FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |      ORDER BY cs DESC, seed_id) AS pr
-      |    FROM qa) WHERE pr <= 4
-      |), cand AS (
-      |  SELECT DISTINCT p.query_id, a.cand_id
-      |  FROM probes p JOIN assign a
-      |    ON p.cell = a.cell AND a.cand_id <> p.query_id
-      |), sc AS (
-      |  SELECT cand.query_id, cand.cand_id,
-      |    ${duckCos("q.embedding", "x.embedding")} AS cos
-      |  FROM cand
-      |  JOIN qsrc q ON q.vec_id = cand.query_id
-      |  JOIN c2 x ON x.vec_id = cand.cand_id
-      |)
-      |SELECT query_id, cand_id, cos FROM sc WHERE cos >= 0.4""".stripMargin
+      |${thresholdProbeSql("c2")}""".stripMargin
 
   /** DuckDB dual of the index-delta encode: fit CTEs on the old
     * slice + the arriving batch's argmax cells / argmin codes,
@@ -5913,20 +6481,7 @@ object SparkEntry {
         |  SELECT vec_id, (i - 1) // 4 AS s, (i - 1) % 4 AS i2,
         |    nv[i]::DOUBLE AS x
         |  FROM nrmb CROSS JOIN generate_series(1, 64) t(i)
-        |), bd AS (
-        |  SELECT bcoords.vec_id, bcoords.s, ref.cd,
-        |    sum(CAST(floor((x - mx) * (x - mx) * 1e12 + 0.5)
-        |      AS BIGINT))::BIGINT AS qd
-        |  FROM bcoords JOIN ref
-        |    ON bcoords.s = ref.s AND bcoords.i2 = ref.i2
-        |  GROUP BY 1, 2, 3
-        |), bcodes AS (
-        |  SELECT vec_id, s, cd FROM (
-        |    SELECT vec_id, s, cd,
-        |      row_number() OVER (PARTITION BY vec_id, s
-        |        ORDER BY qd, cd) AS rn
-        |    FROM bd) WHERE rn = 1
-        |), bl AS (
+        |), ${pqDistCte("bd", "bcoords", "ref")}, ${pqArgminCte("bcodes", "bd")}, bl AS (
         |  SELECT vec_id, list(cd ORDER BY s) AS codes
         |  FROM bcodes GROUP BY vec_id
         |)
@@ -5935,21 +6490,22 @@ object SparkEntry {
         |  array_to_string(codes, ',') AS codes_csv
         |FROM bcells JOIN bl USING (vec_id)""".stripMargin
 
+  /** Parameterized DuckDB dual of the full IVF-PQ ladder — q48's IVF
+    * CTEs + q295's PQ-fit recipe on unit-normalized vectors (m=16
+    * subspaces of 4 dims, 32 codes) + the ADC serve: per-query
+    * (subspace, code) distance tables, integer ADC sums, 50-deep
+    * shortlist, exact-cosine re-rank. `corpusWhere` picks the indexed
+    * rows (ivfPqIndex's fit input), `queryWhere` the served batch —
+    * one text therefore oracles q319 (build+serve fused), q326
+    * (standing-index serve over the same corpus) and q327 (per-batch
+    * ingest probe against the old-slice index), because ivfPqServe at
+    * equal parameters EQUALS ivfPqSearch on (corpus, batch). */
   private def ivfPqDuck(corpusWhere: String, queryWhere: String,
                         k: Int = 3, extraCols: String = "",
                         cellsSql: String = "8"): String =
     s"""WITH ${ivfPqFitCtes(corpusWhere, cellsSql)},
       |qsrc AS (SELECT vec_id, embedding FROM embeddings $queryWhere),
-      |ca AS (
-      |  SELECT x.vec_id AS cand_id, s.seed_id,
-      |    ${duckCos("x.embedding", "s.sv")} AS cs
-      |  FROM c x, seeds s
-      |), assign AS (
-      |  SELECT cand_id, seed_id AS cell FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY cand_id
-      |      ORDER BY cs DESC, seed_id) AS arn
-      |    FROM ca) WHERE arn <= 2
-      |), q AS (
+      |${ivfAssignCtes("c")}, q AS (
       |  SELECT vec_id AS query_id, embedding AS qv FROM qsrc
       |), qa AS (
       |  SELECT q.query_id, s.seed_id, ${duckCos("q.qv", "s.sv")} AS cs
@@ -5964,20 +6520,7 @@ object SparkEntry {
       |    sqrt(list_sum(list_transform(embedding,
       |      y -> y::DOUBLE * y::DOUBLE)))) AS nv
       |  FROM qsrc
-      |), d1 AS (
-      |  SELECT coords.vec_id, coords.s, ref.cd,
-      |    sum(CAST(floor((x - mx) * (x - mx) * 1e12 + 0.5)
-      |      AS BIGINT))::BIGINT AS qd
-      |  FROM coords JOIN ref
-      |    ON coords.s = ref.s AND coords.i2 = ref.i2
-      |  GROUP BY 1, 2, 3
-      |), codes AS (
-      |  SELECT vec_id, s, cd FROM (
-      |    SELECT vec_id, s, cd,
-      |      row_number() OVER (PARTITION BY vec_id, s
-      |        ORDER BY qd, cd) AS rn
-      |    FROM d1) WHERE rn = 1
-      |), qc AS (
+      |), ${pqDistCte("d1", "coords", "ref")}, ${pqArgminCte("codes", "d1")}, qc AS (
       |  SELECT vec_id AS query_id, (i - 1) // 4 AS s,
       |    (i - 1) % 4 AS i2, nv[i]::DOUBLE AS x
       |  FROM nrmq CROSS JOIN generate_series(1, 64) t(i)
@@ -6026,13 +6569,23 @@ object SparkEntry {
       s"(($acc) * ${graft.plans.RollingFingerprints.B} + unicode(t[pos+$k])) % ${graft.plans.RollingFingerprints.M}"
     }
 
-  /** Shared DuckDB replay of the MinHash-LSH -> Jaccard-verify -> CC
-    * pipeline (q47's oracle), ending in a `resolved(doc_id,
-    * cluster_rep)` CTE that q47 and q203 project differently. */
-  /** Shared DuckDB replay of the MinHash-LSH pair pipeline at
-    * τ-threshold-free candidate level, ending in a `j(doc_a, doc_b,
-    * jac)` CTE — q24 selects ≥0.8, q324 additionally restricts to
-    * pairs involving the new-batch slice (delta-equivalence). */
+  /** q41's winnowing fingerprints: whitespace-normalized text `nrm`,
+    * the 8-char rolling hash of every window `win`, and the 1-in-64
+    * hash sample `fp0(doc_id, fp)`. */
+  private val winnowFpCtes: String =
+    s"""nrm AS (
+      |  SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS t
+      |  FROM documents
+      |), win AS (
+      |  SELECT doc_id, $winnowHashSql AS wh
+      |  FROM (
+      |    SELECT doc_id, t, unnest(generate_series(1, length(t) - 7)) AS pos
+      |    FROM nrm WHERE length(t) >= 8
+      |  )
+      |), fp0 AS (
+      |  SELECT DISTINCT doc_id, wh AS fp FROM win WHERE wh % 64 = 0
+      |)""".stripMargin
+
   /** [[lshPairsCte]] with the degenerate-band cap: candidate pairs
     * come only from buckets holding ≤ `cap` corpus band rows —
     * mirrors FuzzyDedup.incrementalNearDups(maxBucket) exactly (the
@@ -6071,14 +6624,22 @@ object SparkEntry {
       |      l_suppkey AS ps_suppkey FROM lineitem)
       |)""".stripMargin
 
-  private val lshPairsCte: String =
-    """WITH base AS (
+  /** Word-3-gram shingle sets `base(doc_id, sh)` of the documents in
+    * `src` and their non-empty subset `nz` (narrowed by `nzAnd`) —
+    * the input of every MinHash dual. */
+  private def shingleCtes(src: String, nzAnd: String = ""): String =
+    s"""base AS (
       |  SELECT doc_id, list_distinct(list_transform(
       |    generate_series(1, greatest(len(toks)-2, 0)),
       |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-      |  FROM (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents)
-      |), nz AS (SELECT * FROM base WHERE len(sh) > 0),
-      |hs AS (
+      |  FROM (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM $src)
+      |), nz AS (SELECT * FROM base WHERE len(sh) > 0$nzAnd)""".stripMargin
+
+  /** The 12-hash MinHash signatures `mh` of [[shingleCtes]]' `nz`, 4
+    * bands of 3 rows, and the candidate pairs `cand(doc_a, doc_b)` that
+    * share a band — shared by the q24/q47/q75/q318 LSH duals. */
+  private val minhashBandCtes: String =
+    """hs AS (
       |  SELECT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT & 1073741823 AS h
       |  FROM (SELECT doc_id, unnest(sh) AS s FROM nz)
       |), mh AS (
@@ -6104,12 +6665,25 @@ object SparkEntry {
       |), cand AS (
       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       |  FROM bands a JOIN bands b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-      |), j AS (
+      |)""".stripMargin
+
+  /** [[shingleCtes]] over `src` through [[minhashBandCtes]], ending in
+    * the candidates' exact Jaccard `j(doc_a, doc_b, jac)`. */
+  private def lshPairCtes(src: String): String =
+    s"""${shingleCtes(src)},
+      |$minhashBandCtes, j AS (
       |  SELECT doc_a, doc_b,
       |    len(list_intersect(x.sh, y.sh))::DOUBLE /
       |      (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh))) AS jac
       |  FROM cand JOIN nz x ON cand.doc_a = x.doc_id JOIN nz y ON cand.doc_b = y.doc_id
-      |)
+      |)""".stripMargin
+
+  /** Shared DuckDB replay of the MinHash-LSH pair pipeline at
+    * τ-threshold-free candidate level, ending in a `j(doc_a, doc_b,
+    * jac)` CTE — q24 selects ≥0.8, q324 additionally restricts to
+    * pairs involving the new-batch slice (delta-equivalence). */
+  private val lshPairsCte: String =
+    s"""WITH ${lshPairCtes("documents")}
       |""".stripMargin
 
   /** Shared centroid ladder for the cluster-quality duals (q348,
@@ -6128,40 +6702,12 @@ object SparkEntry {
         |cent AS (SELECT cl, list(sq::DOUBLE / n / 1e6 ORDER BY d) AS cent
         |  FROM co GROUP BY 1)""".stripMargin
 
+  /** Shared DuckDB replay of the MinHash-LSH -> Jaccard-verify -> CC
+    * pipeline (q47's oracle), ending in a `resolved(doc_id,
+    * cluster_rep)` CTE that q47 and q203 project differently. */
   private val minhashClustersCte: String =
-    """WITH RECURSIVE base AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    generate_series(1, greatest(len(toks)-2, 0)),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-        |  FROM (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents)
-        |), nz AS (SELECT * FROM base WHERE len(sh) > 0),
-        |hs AS (
-        |  SELECT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT & 1073741823 AS h
-        |  FROM (SELECT doc_id, unnest(sh) AS s FROM nz)
-        |), mh AS (
-        |  SELECT doc_id,
-        |    min((787542839 * h + 242017) % 1073741789) AS mh0,
-        |    min((611349889 * h + 938741) % 1073741789) AS mh1,
-        |    min((904321577 * h + 55117) % 1073741789) AS mh2,
-        |    min((359485871 * h + 712933) % 1073741789) AS mh3,
-        |    min((673458601 * h + 128747) % 1073741789) AS mh4,
-        |    min((513695341 * h + 999331) % 1073741789) AS mh5,
-        |    min((844235099 * h + 47743) % 1073741789) AS mh6,
-        |    min((298654777 * h + 583391) % 1073741789) AS mh7,
-        |    min((736217683 * h + 864967) % 1073741789) AS mh8,
-        |    min((465182977 * h + 22229) % 1073741789) AS mh9,
-        |    min((952103481 * h + 371099) % 1073741789) AS mh10,
-        |    min((587431267 * h + 650087) % 1073741789) AS mh11
-        |  FROM hs GROUP BY doc_id
-        |), bands AS (
-        |  SELECT doc_id, 0 AS band, mh0::VARCHAR||'|'||mh1::VARCHAR||'|'||mh2::VARCHAR AS sig FROM mh
-        |  UNION ALL SELECT doc_id, 1, mh3::VARCHAR||'|'||mh4::VARCHAR||'|'||mh5::VARCHAR FROM mh
-        |  UNION ALL SELECT doc_id, 2, mh6::VARCHAR||'|'||mh7::VARCHAR||'|'||mh8::VARCHAR FROM mh
-        |  UNION ALL SELECT doc_id, 3, mh9::VARCHAR||'|'||mh10::VARCHAR||'|'||mh11::VARCHAR FROM mh
-        |), cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-        |), pairs AS (
+    s"""WITH RECURSIVE ${shingleCtes("documents")},
+        |$minhashBandCtes, pairs AS (
         |  SELECT doc_a, doc_b
         |  FROM cand JOIN nz x ON cand.doc_a = x.doc_id JOIN nz y ON cand.doc_b = y.doc_id
         |  WHERE len(list_intersect(x.sh, y.sh))::DOUBLE /
@@ -6182,25 +6728,7 @@ object SparkEntry {
         |""".stripMargin
 
   private val q207OracleSql: String =
-    """WITH t AS (
-        |  SELECT doc_id, text,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), f AS (
-        |  SELECT doc_id, len(toks)::DOUBLE AS n_tok,
-        |    coalesce(len(list_filter(toks, x -> list_contains(
-        |      ['the','a','of','and','to','in','is','it','that','for'], x)))::DOUBLE
-        |      / nullif(len(toks)::DOUBLE, 0), 0.0) AS stop_ratio,
-        |    coalesce(len(regexp_extract_all(lower(text), '[a-z]'))::DOUBLE
-        |      / nullif(length(text)::DOUBLE, 0), 0.0) AS alpha_ratio,
-        |    coalesce(coalesce(list_sum(list_transform(toks, x -> length(x))), 0)::DOUBLE
-        |      / nullif(len(toks)::DOUBLE, 0), 0.0) AS mean_tok_len
-        |  FROM t
-        |), z AS (
-        |  SELECT doc_id, -3.0 + ln(1.0 + n_tok) * 0.55 + stop_ratio * 4.0
-        |    + alpha_ratio * 1.5 + mean_tok_len * (-0.05) AS z
-        |  FROM f
-        |)
+    s"""WITH $q207ScoreCtes
         |SELECT doc_id, round(1.0 / (1.0 + exp(-z)), 6) AS score,
         |  round(1.0 / (1.0 + exp(-z)), 6) >= 0.5 AS keep
         |FROM z""".stripMargin
@@ -6229,47 +6757,10 @@ object SparkEntry {
         |WHERE NOT EXISTS (SELECT 1 FROM bad WHERE bad.doc_id = d.doc_id)""".stripMargin
 
   private val q75OracleSql: String =
-    """WITH src AS (
+    s"""WITH src AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL SELECT -doc_id - 1 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
-        |), base AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    generate_series(1, greatest(len(toks)-2, 0)),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-        |  FROM (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM src)
-        |), nz AS (SELECT * FROM base WHERE len(sh) > 0),
-        |hs AS (
-        |  SELECT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT & 1073741823 AS h
-        |  FROM (SELECT doc_id, unnest(sh) AS s FROM nz)
-        |), mh AS (
-        |  SELECT doc_id,
-        |    min((787542839 * h + 242017) % 1073741789) AS mh0,
-        |    min((611349889 * h + 938741) % 1073741789) AS mh1,
-        |    min((904321577 * h + 55117) % 1073741789) AS mh2,
-        |    min((359485871 * h + 712933) % 1073741789) AS mh3,
-        |    min((673458601 * h + 128747) % 1073741789) AS mh4,
-        |    min((513695341 * h + 999331) % 1073741789) AS mh5,
-        |    min((844235099 * h + 47743) % 1073741789) AS mh6,
-        |    min((298654777 * h + 583391) % 1073741789) AS mh7,
-        |    min((736217683 * h + 864967) % 1073741789) AS mh8,
-        |    min((465182977 * h + 22229) % 1073741789) AS mh9,
-        |    min((952103481 * h + 371099) % 1073741789) AS mh10,
-        |    min((587431267 * h + 650087) % 1073741789) AS mh11
-        |  FROM hs GROUP BY doc_id
-        |), bands AS (
-        |  SELECT doc_id, 0 AS band, mh0::VARCHAR||'|'||mh1::VARCHAR||'|'||mh2::VARCHAR AS sig FROM mh
-        |  UNION ALL SELECT doc_id, 1, mh3::VARCHAR||'|'||mh4::VARCHAR||'|'||mh5::VARCHAR FROM mh
-        |  UNION ALL SELECT doc_id, 2, mh6::VARCHAR||'|'||mh7::VARCHAR||'|'||mh8::VARCHAR FROM mh
-        |  UNION ALL SELECT doc_id, 3, mh9::VARCHAR||'|'||mh10::VARCHAR||'|'||mh11::VARCHAR FROM mh
-        |), cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-        |), j AS (
-        |  SELECT doc_a, doc_b,
-        |    len(list_intersect(x.sh, y.sh))::DOUBLE /
-        |      (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh))) AS jac
-        |  FROM cand JOIN nz x ON cand.doc_a = x.doc_id JOIN nz y ON cand.doc_b = y.doc_id
-        |), bad AS (
+        |), ${lshPairCtes("src")}, bad AS (
         |  SELECT DISTINCT doc_b FROM j WHERE jac >= 0.8 AND doc_a < 0 AND doc_b >= 0
         |)
         |SELECT d.doc_id FROM documents d
@@ -6304,24 +6795,7 @@ object SparkEntry {
     // union sketch = bottom-64 of the two sketches' union; Jaccard =
     // fraction of union-sketch members present in both sides
     "q205_kmv_overlap" ->
-      """WITH a AS (
-        |  SELECT DISTINCT ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS h
-        |  FROM events WHERE user_id IS NOT NULL AND event_type = 'click'
-        |), b AS (
-        |  SELECT DISTINCT ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS h
-        |  FROM events WHERE user_id IS NOT NULL AND event_type = 'purchase'
-        |), ka AS (SELECT h FROM a ORDER BY h LIMIT 64),
-        |kb AS (SELECT h FROM b ORDER BY h LIMIT 64),
-        |uk AS (
-        |  SELECT h FROM (SELECT DISTINCT h FROM (
-        |    SELECT h FROM ka UNION ALL SELECT h FROM kb))
-        |  ORDER BY h LIMIT 64
-        |), fl AS (
-        |  SELECT uk.h,
-        |    CASE WHEN ka.h IS NOT NULL THEN 1 ELSE 0 END AS in_a,
-        |    CASE WHEN kb.h IS NOT NULL THEN 1 ELSE 0 END AS in_b
-        |  FROM uk LEFT JOIN ka ON uk.h = ka.h LEFT JOIN kb ON uk.h = kb.h
-        |), agg AS (
+      s"""WITH $kmvUnionCtes, agg AS (
         |  SELECT count(*)::BIGINT AS n_u, max(h) AS kth,
         |    sum(in_a * in_b)::BIGINT AS n_both FROM fl
         |)
@@ -6369,17 +6843,11 @@ object SparkEntry {
     // q27's label-blocked cosine pairs + the q47 CC pattern; keep =
     // the min-id representative survives
     "q208_semantic_dedup" ->
-      """WITH RECURSIVE s AS (
+      s"""WITH RECURSIVE s AS (
         |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
         |  FROM embeddings a JOIN embeddings b
         |    ON a.label = b.label AND a.vec_id < b.vec_id
-        |  WHERE round(
-        |      list_sum(list_transform(generate_series(1, len(a.embedding)),
-        |        i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE)) /
-        |      (sqrt(list_sum(list_transform(generate_series(1, len(a.embedding)),
-        |        i -> a.embedding[i]::DOUBLE * a.embedding[i]::DOUBLE))) *
-        |       sqrt(list_sum(list_transform(generate_series(1, len(b.embedding)),
-        |        i -> b.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE)))), 6) >= 0.4
+        |  WHERE ${duckCos("a.embedding", "b.embedding")} >= 0.4
         |), sym AS (
         |  SELECT vec_a AS u, vec_b AS v FROM s
         |  UNION SELECT vec_b, vec_a FROM s
@@ -6480,24 +6948,7 @@ object SparkEntry {
         |  coalesce(len(tags), 0)::BIGINT AS n_tags FROM t""".stripMargin,
     // q205's sketch replay; a-not-b instead of intersection
     "q214_kmv_difference" ->
-      """WITH a AS (
-        |  SELECT DISTINCT ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS h
-        |  FROM events WHERE user_id IS NOT NULL AND event_type = 'click'
-        |), b AS (
-        |  SELECT DISTINCT ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS h
-        |  FROM events WHERE user_id IS NOT NULL AND event_type = 'purchase'
-        |), ka AS (SELECT h FROM a ORDER BY h LIMIT 64),
-        |kb AS (SELECT h FROM b ORDER BY h LIMIT 64),
-        |uk AS (
-        |  SELECT h FROM (SELECT DISTINCT h FROM (
-        |    SELECT h FROM ka UNION ALL SELECT h FROM kb))
-        |  ORDER BY h LIMIT 64
-        |), fl AS (
-        |  SELECT uk.h,
-        |    CASE WHEN ka.h IS NOT NULL THEN 1 ELSE 0 END AS in_a,
-        |    CASE WHEN kb.h IS NOT NULL THEN 1 ELSE 0 END AS in_b
-        |  FROM uk LEFT JOIN ka ON uk.h = ka.h LEFT JOIN kb ON uk.h = kb.h
-        |), agg AS (
+      s"""WITH $kmvUnionCtes, agg AS (
         |  SELECT count(*)::BIGINT AS n_u, max(h) AS kth,
         |    sum(in_a * (1 - in_b))::BIGINT AS n_aonly FROM fl
         |)
@@ -6728,19 +7179,10 @@ object SparkEntry {
     // doubled average ranks over the bounded distinct-cents relation:
     // every rank sum an exact int64; k-term H sum absorbed by round-6
     "q227_kruskal_wallis" ->
-      """WITH b AS (
+      s"""WITH b AS (
         |  SELECT event_type AS g, CAST(floor(value * 100 + 0.5) AS BIGINT) AS s
         |  FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL
-        |), sc AS (SELECT s, count(*)::BIGINT AS t FROM b GROUP BY 1),
-        |rk AS (
-        |  SELECT s, t, 2 * coalesce(sum(t) OVER (ORDER BY s
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + t + 1 AS r2
-        |  FROM sc
-        |), gs AS (SELECT g, s, count(*)::BIGINT AS c FROM b GROUP BY 1, 2),
-        |pg AS (
-        |  SELECT g, sum(c)::BIGINT AS nj, sum(c * rk.r2)::BIGINT AS r2j
-        |  FROM gs JOIN rk USING (s) GROUP BY 1
-        |), ti AS (SELECT sum(t)::BIGINT AS n, sum(t*t*t - t)::BIGINT AS tie FROM sc),
+        |), ${doubledRankCtes("g")}, ti AS (SELECT sum(t)::BIGINT AS n, sum(t*t*t - t)::BIGINT AS tie FROM sc),
         |ag AS (
         |  SELECT count(*)::BIGINT AS k, max(ti.n)::BIGINT AS n,
         |    sum(pow(r2j::DOUBLE, 2) / nj / 4.0) AS sr, max(ti.tie)::BIGINT AS tie
@@ -6815,18 +7257,10 @@ object SparkEntry {
     // q194's engine-exact contingency pipeline + one sqrt on the
     // ALREADY-ROUNDED chi2 so both engines normalize the same double
     "q230_cramers_v" ->
-      """WITH base AS (
+      s"""WITH base AS (
         |  SELECT event_type AS r, user_id % 8 AS c
         |  FROM events WHERE event_type IS NOT NULL AND user_id IS NOT NULL
-        |), o AS (SELECT r, c, count(*)::BIGINT AS o FROM base GROUP BY 1, 2),
-        |rt AS (SELECT r, sum(o)::BIGINT AS rt FROM o GROUP BY 1),
-        |ct AS (SELECT c, sum(o)::BIGINT AS ct FROM o GROUP BY 1),
-        |n AS (SELECT sum(rt)::BIGINT AS n, count(*)::BIGINT AS nr FROM rt),
-        |nc AS (SELECT count(*)::BIGINT AS nc FROM ct),
-        |cells AS (
-        |  SELECT rt.r, ct.c, coalesce(o.o, 0) AS o, rt.rt, ct.ct
-        |  FROM rt CROSS JOIN ct LEFT JOIN o ON o.r = rt.r AND o.c = ct.c
-        |), ag AS (
+        |), $contingencyCtes, ag AS (
         |  SELECT round(sum(pow((o * n.n - rt * ct)::DOUBLE, 2)
         |      / (n.n::DOUBLE * rt * ct)), 6) AS chi2,
         |    (max(n.nr) - 1) * (max(nc.nc) - 1) AS df, max(n.n) AS n,
@@ -7283,22 +7717,7 @@ object SparkEntry {
     // q193's at-risk CTE verbatim; the running hazard sum accumulates
     // in the same distinct-dur window order as Spark
     "q353_nelson_aalen" ->
-      """WITH base AS (
-        |  SELECT event_type, event_id % 30 + 1 AS dur,
-        |    CASE WHEN event_id % 3 <> 0 THEN 1 ELSE 0 END AS d
-        |  FROM events WHERE event_type IS NOT NULL
-        |), c AS (
-        |  SELECT event_type, dur, sum(d)::BIGINT AS n_events,
-        |    count(*)::BIGINT AS cnt
-        |  FROM base GROUP BY 1, 2
-        |), r AS (
-        |  SELECT event_type, dur, n_events,
-        |    sum(cnt) OVER (PARTITION BY event_type)
-        |      - coalesce(sum(cnt) OVER (PARTITION BY event_type ORDER BY dur
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS n_risk
-        |  FROM c
-        |), h AS (
+      s"""WITH $atRiskCtes, h AS (
         |  SELECT event_type, dur, n_risk::BIGINT AS n_risk, n_events,
         |    sum(n_events::DOUBLE / n_risk)
         |      OVER (PARTITION BY event_type ORDER BY dur) AS hz
@@ -7312,23 +7731,16 @@ object SparkEntry {
     // products summed as HUGEINT, macro-F1 over x10^12-quantized F1s
     // with the divisions in Spark's order (sum / k / 1e12)
     "q354_agreement_report" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT lang, text,
         |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
         |  FROM documents WHERE lang IS NOT NULL
         |), pc AS (
         |  SELECT lang AS g,
-        |    CASE WHEN len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) > 0 THEN 'zh'
-        |         WHEN c_en >= c_de AND c_en >= c_fr AND c_en >= c_es THEN 'en'
-        |         WHEN c_de >= c_fr AND c_de >= c_es THEN 'de'
-        |         WHEN c_fr >= c_es THEN 'fr'
-        |         ELSE 'es' END AS p
+        |    $langIdCaseSql AS p
         |  FROM (
         |    SELECT lang, text,
-        |      len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','it','that','for'], x))) AS c_en,
-        |      len(list_filter(toks, x -> list_contains(['der','die','das','und','ist','ein','eine','zu','mit','von'], x))) AS c_de,
-        |      len(list_filter(toks, x -> list_contains(['le','la','les','et','est','un','une','de','du','pour'], x))) AS c_fr,
-        |      len(list_filter(toks, x -> list_contains(['el','los','las','y','es','si','una','como','por','para'], x))) AS c_es
+        |      $langCountCols
         |    FROM t)
         |), ct AS (SELECT g, p, count(*)::BIGINT AS n FROM pc GROUP BY 1, 2),
         |gt AS (SELECT g AS lg, sum(n)::BIGINT AS ng FROM ct GROUP BY 1),
@@ -7649,15 +8061,9 @@ object SparkEntry {
     // moments int64, m2^1.5 as m2*sqrt(m2) (libm pow is not
     // cross-engine)
     "q365_hubness_audit" ->
-      """WITH s AS (
+      s"""WITH s AS (
         |  SELECT a.vec_id AS qa, b.vec_id AS qb,
-        |    round(
-        |      list_sum(list_transform(generate_series(1, len(a.embedding)),
-        |        i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE)) /
-        |      (sqrt(list_sum(list_transform(generate_series(1, len(a.embedding)),
-        |        i -> a.embedding[i]::DOUBLE * a.embedding[i]::DOUBLE))) *
-        |       sqrt(list_sum(list_transform(generate_series(1, len(b.embedding)),
-        |        i -> b.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE)))), 6)
+        |    ${duckCos("a.embedding", "b.embedding")}
         |      AS cos
         |  FROM embeddings a JOIN embeddings b
         |    ON a.label = b.label AND a.vec_id <> b.vec_id
@@ -7718,19 +8124,7 @@ object SparkEntry {
         |FROM jc GROUP BY 1""".stripMargin),
     // q114's CTE chain reduced to one row: 3*|tris| over sum C(d,2)
     "q389_transitivity" ->
-      """WITH raw AS (SELECT user_id AS a, event_id % 150 AS b FROM events
-        |  WHERE user_id IS NOT NULL AND event_id IS NOT NULL AND event_id % 13 = 0),
-        |und AS (SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v FROM raw WHERE a <> b),
-        |deg AS (SELECT node, count(*)::BIGINT AS dg FROM
-        |  (SELECT u AS node FROM und UNION ALL SELECT v FROM und) GROUP BY 1),
-        |dd AS (SELECT u, v, du.dg AS du, dv.dg AS dv FROM und
-        |  JOIN deg du ON und.u = du.node JOIN deg dv ON und.v = dv.node),
-        |o AS (SELECT CASE WHEN (du < dv) OR (du = dv AND u < v) THEN u ELSE v END AS x,
-        |             CASE WHEN (du < dv) OR (du = dv AND u < v) THEN v ELSE u END AS y,
-        |             CASE WHEN (du < dv) OR (du = dv AND u < v) THEN dv ELSE du END AS dy
-        |      FROM dd),
-        |w AS (SELECT e1.x, e1.y, e2.y AS z FROM o e1 JOIN o e2 ON e1.x = e2.x
-        |      WHERE (e1.dy < e2.dy) OR (e1.dy = e2.dy AND e1.y < e2.y)),
+      s"""WITH $triangleWedgeCtes,
         |tris AS (SELECT w.x FROM w JOIN o e3 ON w.y = e3.x AND w.z = e3.y),
         |st AS (SELECT count(*)::BIGINT AS n_nodes,
         |  (sum(dg) // 2)::BIGINT AS n_edges,
@@ -7767,20 +8161,11 @@ object SparkEntry {
     // q227's doubled-rank CTE machinery specialized to two groups;
     // U from the rank sum, tie-corrected z
     "q391_mann_whitney" ->
-      """WITH b AS (
+      s"""WITH b AS (
         |  SELECT user_id % 2 = 0 AS a,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS s
         |  FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL
-        |), sc AS (SELECT s, count(*)::BIGINT AS t FROM b GROUP BY 1),
-        |rk AS (
-        |  SELECT s, t, 2 * coalesce(sum(t) OVER (ORDER BY s
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + t + 1 AS r2
-        |  FROM sc
-        |), gs AS (SELECT a, s, count(*)::BIGINT AS c FROM b GROUP BY 1, 2),
-        |pg AS (
-        |  SELECT a, sum(c)::BIGINT AS nj, sum(c * rk.r2)::BIGINT AS r2j
-        |  FROM gs JOIN rk USING (s) GROUP BY 1
-        |), ti AS (SELECT sum(t*t*t - t)::BIGINT AS tie FROM sc),
+        |), ${doubledRankCtes("a")}, ti AS (SELECT sum(t*t*t - t)::BIGINT AS tie FROM sc),
         |ag AS (
         |  SELECT max(CASE WHEN a THEN nj END)::BIGINT AS n_a,
         |    max(CASE WHEN NOT a THEN nj END)::BIGINT AS n_b,
@@ -7804,7 +8189,7 @@ object SparkEntry {
     // per-user paired cent diff, zeros dropped, |d| doubled ranks,
     // W+ from the positive-sign rank sum
     "q392_wilcoxon_signed" ->
-      """WITH pd AS (
+      s"""WITH pd AS (
         |  SELECT user_id,
         |    coalesce(sum(CASE WHEN event_id % 2 = 0
         |      THEN CAST(floor(value * 100 + 0.5) AS BIGINT) END), 0) -
@@ -7813,16 +8198,7 @@ object SparkEntry {
         |  FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL
         |  GROUP BY 1
         |), b AS (SELECT abs(d) AS s, d > 0 AS pos FROM pd WHERE d <> 0),
-        |sc AS (SELECT s, count(*)::BIGINT AS t FROM b GROUP BY 1),
-        |rk AS (
-        |  SELECT s, t, 2 * coalesce(sum(t) OVER (ORDER BY s
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + t + 1 AS r2
-        |  FROM sc
-        |), gs AS (SELECT pos, s, count(*)::BIGINT AS c FROM b GROUP BY 1, 2),
-        |pg AS (
-        |  SELECT pos, sum(c)::BIGINT AS nj, sum(c * rk.r2)::BIGINT AS r2j
-        |  FROM gs JOIN rk USING (s) GROUP BY 1
-        |), ti AS (SELECT sum(t*t*t - t)::BIGINT AS tie FROM sc),
+        |${doubledRankCtes("pos")}, ti AS (SELECT sum(t*t*t - t)::BIGINT AS tie FROM sc),
         |ag AS (
         |  SELECT coalesce(max(CASE WHEN pos THEN nj END), 0)::BIGINT AS n_pos,
         |    coalesce(max(CASE WHEN NOT pos THEN nj END), 0)::BIGINT AS n_neg,
@@ -7844,35 +8220,7 @@ object SparkEntry {
     // double assembly per group (num/den mirror the Spark operator
     // term-for-term, left-associative)
     "q393_ljung_box" ->
-      """WITH b AS (
-        |  SELECT event_type AS g,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS y,
-        |    lag(CAST(floor(value * 100 + 0.5) AS BIGINT), 1) OVER w AS x1,
-        |    lag(CAST(floor(value * 100 + 0.5) AS BIGINT), 2) OVER w AS x2,
-        |    lag(CAST(floor(value * 100 + 0.5) AS BIGINT), 3) OVER w AS x3
-        |  FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL
-        |    AND ts IS NOT NULL
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY epoch_ns(ts),
-        |    event_id)
-        |), m AS (
-        |  SELECT g, count(*)::BIGINT AS n, sum(y) AS s, sum(y * y) AS q,
-        |    count(x1)::BIGINT AS cnt1, sum(y * x1) AS c1,
-        |    sum(CASE WHEN x1 IS NOT NULL THEN y END) AS a1, sum(x1) AS b1,
-        |    count(x2)::BIGINT AS cnt2, sum(y * x2) AS c2,
-        |    sum(CASE WHEN x2 IS NOT NULL THEN y END) AS a2, sum(x2) AS b2,
-        |    count(x3)::BIGINT AS cnt3, sum(y * x3) AS c3,
-        |    sum(CASE WHEN x3 IS NOT NULL THEN y END) AS a3, sum(x3) AS b3
-        |  FROM b GROUP BY 1
-        |), d AS (
-        |  SELECT g, n, n::DOUBLE AS nd, s::DOUBLE AS sd, q::DOUBLE AS qd,
-        |    cnt1::DOUBLE AS k1, c1::DOUBLE AS c1d, a1::DOUBLE AS a1d,
-        |    b1::DOUBLE AS b1d,
-        |    cnt2::DOUBLE AS k2, c2::DOUBLE AS c2d, a2::DOUBLE AS a2d,
-        |    b2::DOUBLE AS b2d,
-        |    cnt3::DOUBLE AS k3, c3::DOUBLE AS c3d, a3::DOUBLE AS a3d,
-        |    b3::DOUBLE AS b3d
-        |  FROM m
-        |), r AS (
+      s"""WITH $acfMomentCtes, r AS (
         |  SELECT g, n, nd, k1, k2, k3,
         |    (c1d - (sd / nd) * (a1d + b1d) + k1 * (sd / nd) * (sd / nd))
         |      / (qd - sd * sd / nd) AS r1,
@@ -7895,42 +8243,8 @@ object SparkEntry {
     // q250's fit CTE chain verbatim; residuals re-quantized to cents,
     // lag-1 window per returnflag, two HUGEINT sums, one division
     "q394_durbin_watson" ->
-      """WITH f AS (
-        |  SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS y,
-        |    CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) AS x1,
-        |    CAST(floor(l_discount * 100 + 0.5) AS BIGINT) AS x2
-        |  FROM lineitem WHERE l_orderkey % 2 = 0
-        |    AND l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-        |    AND l_discount IS NOT NULL
-        |), m AS (
-        |  SELECT count(*)::BIGINT AS n, sum(x1)::BIGINT AS a,
-        |    sum(x2)::BIGINT AS b, sum(x1 * x1)::BIGINT AS c,
-        |    sum(x1 * x2)::BIGINT AS d, sum(x2 * x2)::BIGINT AS e,
-        |    sum(y)::BIGINT AS t0, sum(x1 * y)::BIGINT AS t1,
-        |    sum(x2 * y)::BIGINT AS t2
-        |  FROM f
-        |), md AS (
-        |  SELECT n::DOUBLE AS n, a::DOUBLE AS a, b::DOUBLE AS b,
-        |    c::DOUBLE AS c, d::DOUBLE AS d, e::DOUBLE AS e,
-        |    t0::DOUBLE AS t0, t1::DOUBLE AS t1, t2::DOUBLE AS t2
-        |  FROM m
-        |), dt AS (
-        |  SELECT
-        |    n * (c * e - d * d) - a * (a * e - d * b)
-        |      + b * (a * d - c * b) AS det,
-        |    t0 * (c * e - d * d) - a * (t1 * e - d * t2)
-        |      + b * (t1 * d - c * t2) AS det0,
-        |    n * (t1 * e - d * t2) - t0 * (a * e - d * b)
-        |      + b * (a * t2 - t1 * b) AS det1,
-        |    n * (c * t2 - t1 * d) - a * (a * t2 - t1 * b)
-        |      + t0 * (a * d - c * b) AS det2
-        |  FROM md
-        |), cf AS (
-        |  SELECT CASE WHEN det <> 0 THEN det0 / det END AS b0,
-        |    CASE WHEN det <> 0 THEN det1 / det END AS b1,
-        |    CASE WHEN det <> 0 THEN det2 / det END AS b2
-        |  FROM dt
-        |), r AS (
+      s"""WITH ${olsLineitemCte("f", "l_orderkey % 2 = 0")},
+        |${olsFitCtes("f")}, r AS (
         |  SELECT l_returnflag AS g, l_shipdate, l_orderkey, l_linenumber,
         |    CAST(floor(round((CAST(floor(l_extendedprice * 100 + 0.5)
         |        AS BIGINT)
@@ -7997,35 +8311,7 @@ object SparkEntry {
     // q393's moment CTEs verbatim; Durbin-Levinson closed forms at
     // depth 3 mirrored subexpression-for-subexpression
     "q396_pacf" ->
-      """WITH b AS (
-        |  SELECT event_type AS g,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS y,
-        |    lag(CAST(floor(value * 100 + 0.5) AS BIGINT), 1) OVER w AS x1,
-        |    lag(CAST(floor(value * 100 + 0.5) AS BIGINT), 2) OVER w AS x2,
-        |    lag(CAST(floor(value * 100 + 0.5) AS BIGINT), 3) OVER w AS x3
-        |  FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL
-        |    AND ts IS NOT NULL
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY epoch_ns(ts),
-        |    event_id)
-        |), m AS (
-        |  SELECT g, count(*)::BIGINT AS n, sum(y) AS s, sum(y * y) AS q,
-        |    count(x1)::BIGINT AS cnt1, sum(y * x1) AS c1,
-        |    sum(CASE WHEN x1 IS NOT NULL THEN y END) AS a1, sum(x1) AS b1,
-        |    count(x2)::BIGINT AS cnt2, sum(y * x2) AS c2,
-        |    sum(CASE WHEN x2 IS NOT NULL THEN y END) AS a2, sum(x2) AS b2,
-        |    count(x3)::BIGINT AS cnt3, sum(y * x3) AS c3,
-        |    sum(CASE WHEN x3 IS NOT NULL THEN y END) AS a3, sum(x3) AS b3
-        |  FROM b GROUP BY 1
-        |), d AS (
-        |  SELECT g, n, n::DOUBLE AS nd, s::DOUBLE AS sd, q::DOUBLE AS qd,
-        |    cnt1::DOUBLE AS k1, c1::DOUBLE AS c1d, a1::DOUBLE AS a1d,
-        |    b1::DOUBLE AS b1d,
-        |    cnt2::DOUBLE AS k2, c2::DOUBLE AS c2d, a2::DOUBLE AS a2d,
-        |    b2::DOUBLE AS b2d,
-        |    cnt3::DOUBLE AS k3, c3::DOUBLE AS c3d, a3::DOUBLE AS a3d,
-        |    b3::DOUBLE AS b3d
-        |  FROM m
-        |), r AS (
+      s"""WITH $acfMomentCtes, r AS (
         |  SELECT g, n,
         |    (c1d - (sd / nd) * (a1d + b1d) + k1 * (sd / nd) * (sd / nd))
         |      / (qd - sd * sd / nd) AS r1,
@@ -8381,16 +8667,7 @@ object SparkEntry {
     // stopword-segmented runs, degree/freq word scores, ordered
     // phrase reassembly, total-order top-50
     "q464_rake_keyphrases" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), pt AS (
-        |  SELECT doc_id, u.p AS pos, u.w AS term FROM (
-        |    SELECT doc_id, unnest(list_transform(range(1, len(toks) + 1),
-        |      i -> {'p': i - 1, 'w': toks[i]})) AS u
-        |    FROM tk)
-        |), mk AS (
+      s"""WITH $positionalTokenCtes, mk AS (
         |  SELECT doc_id, pos, term,
         |    term IN ('the','a','of','and','to','in','is','it','that','for')
         |      AS st
@@ -8544,13 +8821,7 @@ object SparkEntry {
     // forward sigma levels with NOT EXISTS dedup, backward quantized
     // dependency folds — Brandes unrolled to 3 hops
     "q458_betweenness" ->
-      """WITH e0 AS (
-        |  SELECT user_id AS u, 1000000 + event_id % 150 AS v
-        |  FROM events WHERE user_id IS NOT NULL
-        |), sym AS (
-        |  SELECT DISTINCT u, v FROM (
-        |    SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0)
-        |), sd AS (
+      s"""WITH $userItemE0SymCtes, sd AS (
         |  SELECT DISTINCT user_id AS seed FROM events
         |  WHERE user_id IS NOT NULL AND user_id % 97 = 0
         |), l0 AS (SELECT seed, seed AS node, 1::BIGINT AS sigma FROM sd),
@@ -8604,62 +8875,14 @@ object SparkEntry {
         |GROUP BY 1 HAVING sum(dq) > 0""".stripMargin,
     // the q438 BFS replay read per SEED: reach + max distance
     "q459_graph_eccentricity" ->
-      """WITH e0 AS (
-        |  SELECT user_id AS u, 1000000 + event_id % 150 AS v
-        |  FROM events WHERE user_id IS NOT NULL
-        |), sym AS (
-        |  SELECT DISTINCT u, v FROM (
-        |    SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0)
-        |), seeds AS (
-        |  SELECT DISTINCT user_id AS seed FROM events
-        |  WHERE user_id IS NOT NULL AND user_id % 97 = 0
-        |), d0 AS (SELECT seed, seed AS node, 0::BIGINT AS dist FROM seeds),
-        |d1 AS (
-        |  SELECT seed, node, min(dist)::BIGINT AS dist FROM (
-        |    SELECT * FROM d0
-        |    UNION ALL
-        |    SELECT f.seed, s.v AS node, 1::BIGINT
-        |    FROM sym s JOIN (SELECT seed, node FROM d0 WHERE dist = 0) f
-        |      ON s.u = f.node) GROUP BY 1, 2
-        |), d2 AS (
-        |  SELECT seed, node, min(dist)::BIGINT AS dist FROM (
-        |    SELECT * FROM d1
-        |    UNION ALL
-        |    SELECT f.seed, s.v AS node, 2::BIGINT
-        |    FROM sym s JOIN (SELECT seed, node FROM d1 WHERE dist = 1) f
-        |      ON s.u = f.node) GROUP BY 1, 2
-        |), d3 AS (
-        |  SELECT seed, node, min(dist)::BIGINT AS dist FROM (
-        |    SELECT * FROM d2
-        |    UNION ALL
-        |    SELECT f.seed, s.v AS node, 3::BIGINT
-        |    FROM sym s JOIN (SELECT seed, node FROM d2 WHERE dist = 2) f
-        |      ON s.u = f.node) GROUP BY 1, 2
-        |)
+      s"""WITH $seedBfsCtes
         |SELECT seed, count(*)::BIGINT AS n_reached,
         |  max(dist)::BIGINT AS eccentricity
         |FROM d3 WHERE dist > 0 GROUP BY 1""".stripMargin,
     // the batch PH replay (q371's ladder) filtered to alarm rows —
     // the streaming fold must land on exactly these
     "q454_streaming_drift_alarm" ->
-      """WITH daily AS (
-        |  SELECT event_type AS g, epoch_ns(ts) // 86400000000000 AS t,
-        |    (sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      // count(*))::BIGINT AS x
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
-        |), f AS (
-        |  SELECT * FROM daily WHERE g IS NOT NULL AND x IS NOT NULL
-        |), r AS (
-        |  SELECT g, t, x, row_number() OVER w AS i,
-        |    sum(x) OVER (PARTITION BY g ORDER BY t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s
-        |  FROM f WINDOW w AS (PARTITION BY g ORDER BY t)
-        |), m AS (
-        |  SELECT g, t,
-        |    sum(x::DOUBLE - s::DOUBLE / i) OVER (PARTITION BY g ORDER BY t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS m
-        |  FROM r
-        |), phx AS (
+      s"""WITH $pageHinkleyCtes, phx AS (
         |  SELECT g, t, round(m - min(m) OVER (PARTITION BY g ORDER BY t
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6) AS ph
         |  FROM m
@@ -8667,16 +8890,7 @@ object SparkEntry {
         |SELECT g AS key, t, ph FROM phx WHERE ph > 1000.0""".stripMargin,
     // positional postings AND-merge replayed with struct unnest
     "q455_phrase_search" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), pt AS (
-        |  SELECT doc_id, u.p AS pos, u.w AS term FROM (
-        |    SELECT doc_id, unnest(list_transform(range(1, len(toks) + 1),
-        |      i -> {'p': i - 1, 'w': toks[i]})) AS u
-        |    FROM tk)
-        |), m0 AS (SELECT doc_id, pos FROM pt WHERE term = 'slow'),
+      s"""WITH $positionalTokenCtes, m0 AS (SELECT doc_id, pos FROM pt WHERE term = 'slow'),
         |m1 AS (SELECT doc_id, pos - 1 AS pos FROM pt WHERE term = 'hash'),
         |m2 AS (SELECT doc_id, pos - 2 AS pos FROM pt WHERE term = 'batch'),
         |mm AS (
@@ -9311,10 +9525,7 @@ object SparkEntry {
     // h-index fixpoint replayed: 3 unrolled rounds, each one window
     // rank over neighbor values + an integer max(min(value, rank))
     "q437_coreness" ->
-      """WITH e AS (
-        |  SELECT DISTINCT user_id AS a, 1000000 + event_id % 150 AS b
-        |  FROM events WHERE user_id IS NOT NULL
-        |), und AS (
+      s"""WITH $userItemEdgeCte, und AS (
         |  SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v FROM e
         |), adj AS (
         |  SELECT u AS node, v AS nb FROM und
@@ -9339,68 +9550,13 @@ object SparkEntry {
         |SELECT node, value AS coreness FROM h3""".stripMargin,
     // per-seed BFS unrolled to 3 hops; 1/d rides as exact 10^6//d
     "q438_harmonic_centrality" ->
-      """WITH e0 AS (
-        |  SELECT user_id AS u, 1000000 + event_id % 150 AS v
-        |  FROM events WHERE user_id IS NOT NULL
-        |), sym AS (
-        |  SELECT DISTINCT u, v FROM (
-        |    SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0)
-        |), seeds AS (
-        |  SELECT DISTINCT user_id AS seed FROM events
-        |  WHERE user_id IS NOT NULL AND user_id % 97 = 0
-        |), d0 AS (SELECT seed, seed AS node, 0::BIGINT AS dist FROM seeds),
-        |d1 AS (
-        |  SELECT seed, node, min(dist)::BIGINT AS dist FROM (
-        |    SELECT * FROM d0
-        |    UNION ALL
-        |    SELECT f.seed, s.v AS node, 1::BIGINT
-        |    FROM sym s JOIN (SELECT seed, node FROM d0 WHERE dist = 0) f
-        |      ON s.u = f.node) GROUP BY 1, 2
-        |), d2 AS (
-        |  SELECT seed, node, min(dist)::BIGINT AS dist FROM (
-        |    SELECT * FROM d1
-        |    UNION ALL
-        |    SELECT f.seed, s.v AS node, 2::BIGINT
-        |    FROM sym s JOIN (SELECT seed, node FROM d1 WHERE dist = 1) f
-        |      ON s.u = f.node) GROUP BY 1, 2
-        |), d3 AS (
-        |  SELECT seed, node, min(dist)::BIGINT AS dist FROM (
-        |    SELECT * FROM d2
-        |    UNION ALL
-        |    SELECT f.seed, s.v AS node, 3::BIGINT
-        |    FROM sym s JOIN (SELECT seed, node FROM d2 WHERE dist = 2) f
-        |      ON s.u = f.node) GROUP BY 1, 2
-        |)
+      s"""WITH $seedBfsCtes
         |SELECT node, count(*)::BIGINT AS n_reached,
         |  round(sum(1000000 // dist)::DOUBLE / 1e6, 6) AS harmonic
         |FROM d3 WHERE dist > 0 GROUP BY node""".stripMargin,
     // q175's LP partition replayed verbatim, then cut/vol per label
     "q439_conductance" ->
-      """WITH e AS (
-        |  SELECT DISTINCT user_id AS a, 1000000 + event_id % 150 AS b
-        |  FROM events WHERE user_id IS NOT NULL
-        |), sym AS (
-        |  SELECT a AS u, b AS v FROM e UNION SELECT b, a FROM e
-        |), l0 AS (SELECT DISTINCT u AS node, u::BIGINT AS label FROM sym),
-        |i1 AS (
-        |  SELECT u AS node, min(label) AS label FROM (
-        |    SELECT u, label, cnt, max(cnt) OVER (PARTITION BY u) AS mx FROM (
-        |      SELECT s.u, l.label, count(*) AS cnt
-        |      FROM sym s JOIN l0 l ON s.v = l.node GROUP BY 1, 2)
-        |  ) WHERE cnt = mx GROUP BY u
-        |), i2 AS (
-        |  SELECT u AS node, min(label) AS label FROM (
-        |    SELECT u, label, cnt, max(cnt) OVER (PARTITION BY u) AS mx FROM (
-        |      SELECT s.u, l.label, count(*) AS cnt
-        |      FROM sym s JOIN i1 l ON s.v = l.node GROUP BY 1, 2)
-        |  ) WHERE cnt = mx GROUP BY u
-        |), i3 AS (
-        |  SELECT u AS node, min(label) AS label FROM (
-        |    SELECT u, label, cnt, max(cnt) OVER (PARTITION BY u) AS mx FROM (
-        |      SELECT s.u, l.label, count(*) AS cnt
-        |      FROM sym s JOIN i2 l ON s.v = l.node GROUP BY 1, 2)
-        |  ) WHERE cnt = mx GROUP BY u
-        |), und AS (
+      s"""WITH $labelPropCtes, und AS (
         |  SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v FROM e
         |), e2 AS (
         |  SELECT und.u, und.v, lu.label AS lu, lv.label AS lv
@@ -9503,20 +9659,11 @@ object SparkEntry {
     // q391's doubled-rank CTE chain; delta/CLES/magnitude off the
     // same exact 2U_A
     "q431_cliffs_delta" ->
-      """WITH b AS (
+      s"""WITH b AS (
         |  SELECT user_id % 2 = 0 AS a,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS s
         |  FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL
-        |), sc AS (SELECT s, count(*)::BIGINT AS t FROM b GROUP BY 1),
-        |rk AS (
-        |  SELECT s, t, 2 * coalesce(sum(t) OVER (ORDER BY s
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + t + 1 AS r2
-        |  FROM sc
-        |), gs AS (SELECT a, s, count(*)::BIGINT AS c FROM b GROUP BY 1, 2),
-        |pg AS (
-        |  SELECT a, sum(c)::BIGINT AS nj, sum(c * rk.r2)::BIGINT AS r2j
-        |  FROM gs JOIN rk USING (s) GROUP BY 1
-        |), ag AS (
+        |), ${doubledRankCtes("a")}, ag AS (
         |  SELECT max(CASE WHEN a THEN nj END)::BIGINT AS n_a,
         |    max(CASE WHEN NOT a THEN nj END)::BIGINT AS n_b,
         |    max(CASE WHEN a THEN r2j END)::BIGINT AS r2a
@@ -9919,26 +10066,14 @@ object SparkEntry {
     // q250's moment CTEs + the symmetric cofactors; per-row hat value
     // and Cook's D in one scan, quantized total-order top-20
     "q422_ols_influence" ->
-      """WITH f AS (
+      s"""WITH f AS (
         |  SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS y,
         |    CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) AS x1,
         |    CAST(floor(l_discount * 100 + 0.5) AS BIGINT) AS x2,
         |    l_orderkey, l_linenumber
         |  FROM lineitem WHERE l_extendedprice IS NOT NULL
         |    AND l_quantity IS NOT NULL AND l_discount IS NOT NULL
-        |), m AS (
-        |  SELECT count(*)::BIGINT AS n, sum(x1)::BIGINT AS a,
-        |    sum(x2)::BIGINT AS b, sum(x1 * x1)::BIGINT AS c,
-        |    sum(x1 * x2)::BIGINT AS d, sum(x2 * x2)::BIGINT AS e,
-        |    sum(y)::BIGINT AS t0, sum(x1 * y)::BIGINT AS t1,
-        |    sum(x2 * y)::BIGINT AS t2
-        |  FROM f
-        |), md AS (
-        |  SELECT n::DOUBLE AS n, a::DOUBLE AS a, b::DOUBLE AS b,
-        |    c::DOUBLE AS c, d::DOUBLE AS d, e::DOUBLE AS e,
-        |    t0::DOUBLE AS t0, t1::DOUBLE AS t1, t2::DOUBLE AS t2
-        |  FROM m
-        |), dt AS (
+        |), ${olsMomentCtes("f")}, dt AS (
         |  SELECT n AS nd,
         |    n * (c * e - d * d) - a * (a * e - d * b)
         |      + b * (a * d - c * b) AS det,
@@ -10037,23 +10172,16 @@ object SparkEntry {
     // q354's langid CASE verbatim; full-outer symmetric-pair join,
     // x1e9-quantized rational terms summed HUGEINT
     "q417_bowker" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT lang, text,
         |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
         |  FROM documents WHERE lang IS NOT NULL AND text IS NOT NULL
         |), pc AS (
         |  SELECT lang AS a,
-        |    CASE WHEN len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) > 0 THEN 'zh'
-        |         WHEN c_en >= c_de AND c_en >= c_fr AND c_en >= c_es THEN 'en'
-        |         WHEN c_de >= c_fr AND c_de >= c_es THEN 'de'
-        |         WHEN c_fr >= c_es THEN 'fr'
-        |         ELSE 'es' END AS b
+        |    $langIdCaseSql AS b
         |  FROM (
         |    SELECT lang, text,
-        |      len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','it','that','for'], x))) AS c_en,
-        |      len(list_filter(toks, x -> list_contains(['der','die','das','und','ist','ein','eine','zu','mit','von'], x))) AS c_de,
-        |      len(list_filter(toks, x -> list_contains(['le','la','les','et','est','un','une','de','du','pour'], x))) AS c_fr,
-        |      len(list_filter(toks, x -> list_contains(['el','los','las','y','es','si','una','como','por','para'], x))) AS c_es
+        |      $langCountCols
         |    FROM t)
         |), cells AS (SELECT a, b, count(*)::BIGINT AS c FROM pc GROUP BY 1, 2),
         |up AS (SELECT a AS i, b AS j, c AS cu FROM cells WHERE a < b),
@@ -10076,31 +10204,8 @@ object SparkEntry {
         |FROM ag, kk, nn""".stripMargin,
     // q193's KM CTE chain + one lead() and the exact step integral
     "q418_rmst" ->
-      """WITH base AS (
-        |  SELECT event_type, event_id % 30 + 1 AS dur,
-        |    CASE WHEN event_id % 3 <> 0 THEN 1 ELSE 0 END AS d
-        |  FROM events WHERE event_type IS NOT NULL
-        |), c AS (
-        |  SELECT event_type, dur, sum(d)::BIGINT AS n_events,
-        |    count(*)::BIGINT AS cnt
-        |  FROM base GROUP BY 1, 2
-        |), r AS (
-        |  SELECT event_type, dur, n_events,
-        |    sum(cnt) OVER (PARTITION BY event_type)
-        |      - coalesce(sum(cnt) OVER (PARTITION BY event_type ORDER BY dur
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS n_risk
-        |  FROM c
-        |), km AS (
-        |  SELECT event_type, dur, n_risk::BIGINT AS n_risk, n_events,
-        |    CASE WHEN max(CASE WHEN n_events = n_risk AND n_events > 0
-        |        THEN 1 ELSE 0 END)
-        |        OVER (PARTITION BY event_type ORDER BY dur) = 1 THEN 0.0
-        |    ELSE round(exp(sum(CASE WHEN n_events > 0 AND n_events < n_risk
-        |        THEN ln(1 - n_events::DOUBLE / n_risk) ELSE 0.0 END)
-        |        OVER (PARTITION BY event_type ORDER BY dur)), 6)
-        |    END AS survival
-        |  FROM r
+      s"""WITH $atRiskCtes, km AS (
+        |$kaplanMeierSql
         |), seg AS (
         |  SELECT event_type, dur, n_risk, n_events, survival,
         |    coalesce(lead(dur) OVER (PARTITION BY event_type
@@ -10265,42 +10370,14 @@ object SparkEntry {
         |FROM s""".stripMargin,
     // q250's fit CTE chain with x2 = floor(greatest(0, qty-25)*100+.5)
     "q414_hinge_regression" ->
-      """WITH f AS (
+      s"""WITH f AS (
         |  SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS y,
         |    CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) AS x1,
         |    CAST(floor(greatest(0, l_quantity - 25) * 100 + 0.5)
         |      AS BIGINT) AS x2
         |  FROM lineitem WHERE l_orderkey % 2 = 0
         |    AND l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-        |), m AS (
-        |  SELECT count(*)::BIGINT AS n, sum(x1)::BIGINT AS a,
-        |    sum(x2)::BIGINT AS b, sum(x1 * x1)::BIGINT AS c,
-        |    sum(x1 * x2)::BIGINT AS d, sum(x2 * x2)::BIGINT AS e,
-        |    sum(y)::BIGINT AS t0, sum(x1 * y)::BIGINT AS t1,
-        |    sum(x2 * y)::BIGINT AS t2
-        |  FROM f
-        |), md AS (
-        |  SELECT n::DOUBLE AS n, a::DOUBLE AS a, b::DOUBLE AS b,
-        |    c::DOUBLE AS c, d::DOUBLE AS d, e::DOUBLE AS e,
-        |    t0::DOUBLE AS t0, t1::DOUBLE AS t1, t2::DOUBLE AS t2
-        |  FROM m
-        |), dt AS (
-        |  SELECT
-        |    n * (c * e - d * d) - a * (a * e - d * b)
-        |      + b * (a * d - c * b) AS det,
-        |    t0 * (c * e - d * d) - a * (t1 * e - d * t2)
-        |      + b * (t1 * d - c * t2) AS det0,
-        |    n * (t1 * e - d * t2) - t0 * (a * e - d * b)
-        |      + b * (a * t2 - t1 * b) AS det1,
-        |    n * (c * t2 - t1 * d) - a * (a * t2 - t1 * b)
-        |      + t0 * (a * d - c * b) AS det2
-        |  FROM md
-        |), cf AS (
-        |  SELECT CASE WHEN det <> 0 THEN det0 / det END AS b0,
-        |    CASE WHEN det <> 0 THEN det1 / det END AS b1,
-        |    CASE WHEN det <> 0 THEN det2 / det END AS b2
-        |  FROM dt
-        |)
+        |), ${olsFitCtes("f")}
         |SELECT l_orderkey, l_linenumber,
         |  round(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)::DOUBLE
         |    / 100, 6) AS y,
@@ -10980,19 +11057,7 @@ object SparkEntry {
         |FROM cc""".stripMargin,
     // q114's CTE chain + the degree join and one division per node
     "q387_local_clustering" ->
-      """WITH raw AS (SELECT user_id AS a, event_id % 150 AS b FROM events
-        |  WHERE user_id IS NOT NULL AND event_id IS NOT NULL AND event_id % 13 = 0),
-        |und AS (SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v FROM raw WHERE a <> b),
-        |deg AS (SELECT node, count(*)::BIGINT AS dg FROM
-        |  (SELECT u AS node FROM und UNION ALL SELECT v FROM und) GROUP BY 1),
-        |dd AS (SELECT u, v, du.dg AS du, dv.dg AS dv FROM und
-        |  JOIN deg du ON und.u = du.node JOIN deg dv ON und.v = dv.node),
-        |o AS (SELECT CASE WHEN (du < dv) OR (du = dv AND u < v) THEN u ELSE v END AS x,
-        |             CASE WHEN (du < dv) OR (du = dv AND u < v) THEN v ELSE u END AS y,
-        |             CASE WHEN (du < dv) OR (du = dv AND u < v) THEN dv ELSE du END AS dy
-        |      FROM dd),
-        |w AS (SELECT e1.x, e1.y, e2.y AS z FROM o e1 JOIN o e2 ON e1.x = e2.x
-        |      WHERE (e1.dy < e2.dy) OR (e1.dy = e2.dy AND e1.y < e2.y)),
+      s"""WITH $triangleWedgeCtes,
         |tris AS (SELECT w.x, w.y, w.z FROM w JOIN o e3 ON w.y = e3.x AND w.z = e3.y),
         |tcnt AS (SELECT node, count(*)::BIGINT AS t FROM
         |  (SELECT x AS node FROM tris UNION ALL SELECT y FROM tris
@@ -11005,11 +11070,7 @@ object SparkEntry {
     // both-orientation degree pairs; q93's cross-multiplied Pearson
     // in HUGEINT
     "q388_degree_assortativity" ->
-      """WITH raw AS (SELECT user_id AS a, event_id % 150 AS b FROM events
-        |  WHERE user_id IS NOT NULL AND event_id IS NOT NULL AND event_id % 13 = 0),
-        |und AS (SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v FROM raw WHERE a <> b),
-        |deg AS (SELECT node, count(*)::BIGINT AS dg FROM
-        |  (SELECT u AS node FROM und UNION ALL SELECT v FROM und) GROUP BY 1),
+      s"""WITH $eventGraphDegCtes,
         |sym AS (SELECT u AS x, v AS y FROM und UNION ALL SELECT v, u FROM und),
         |p AS (SELECT da.dg AS dx, db.dg AS dy FROM sym
         |  JOIN deg da ON sym.x = da.node JOIN deg db ON sym.y = db.node),
@@ -11244,11 +11305,7 @@ object SparkEntry {
     // q372's assignment/probe prefix; per-level candidate counts
     // with the two ratios on identical operands
     "q377_ivf_cost_sweep" ->
-      s"""WITH seeds AS (
-        |  SELECT vec_id AS seed_id, embedding AS sv FROM embeddings
-        |  ORDER BY ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT, vec_id
-        |  LIMIT 8
-        |), qs AS (
+      s"""WITH ${embedSeedsCte("8")}, qs AS (
         |  SELECT vec_id AS query_id, embedding AS qv FROM embeddings
         |  WHERE vec_id < 20
         |), ca AS (
@@ -11543,24 +11600,7 @@ object SparkEntry {
     // three stacked ordered windows; prefix-mean divisions on
     // identical int64 operands, m/min accumulate in window order
     "q371_page_hinkley" ->
-      """WITH daily AS (
-        |  SELECT event_type AS g, epoch_ns(ts) // 86400000000000 AS t,
-        |    (sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      // count(*))::BIGINT AS x
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
-        |), f AS (
-        |  SELECT * FROM daily WHERE g IS NOT NULL AND x IS NOT NULL
-        |), r AS (
-        |  SELECT g, t, x, row_number() OVER w AS i,
-        |    sum(x) OVER (PARTITION BY g ORDER BY t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s
-        |  FROM f WINDOW w AS (PARTITION BY g ORDER BY t)
-        |), m AS (
-        |  SELECT g, t,
-        |    sum(x::DOUBLE - s::DOUBLE / i) OVER (PARTITION BY g ORDER BY t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS m
-        |  FROM r
-        |)
+      s"""WITH $pageHinkleyCtes
         |SELECT g AS event_type, t,
         |  round(m - min(m) OVER (PARTITION BY g ORDER BY t
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6) AS ph,
@@ -11571,23 +11611,10 @@ object SparkEntry {
     // q48's seed/assignment replay; candidates carry min probe rank,
     // per-level top-10 vs exact brute truth
     "q372_ivf_recall_sweep" ->
-      s"""WITH seeds AS (
-        |  SELECT vec_id AS seed_id, embedding AS sv FROM embeddings
-        |  ORDER BY ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT, vec_id
-        |  LIMIT 8
-        |), qs AS (
+      s"""WITH ${embedSeedsCte("8")}, qs AS (
         |  SELECT vec_id AS query_id, embedding AS qv FROM embeddings
         |  WHERE vec_id < 20
-        |), ca AS (
-        |  SELECT c.vec_id AS cand_id, c.embedding AS cv, s.seed_id,
-        |    ${duckCos("c.embedding", "s.sv")} AS cs
-        |  FROM embeddings c, seeds s
-        |), assign AS (
-        |  SELECT cand_id, cv, seed_id AS cell FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY cand_id
-        |      ORDER BY cs DESC, seed_id) AS arn
-        |    FROM ca) WHERE arn <= 2
-        |), pq AS (
+        |), ${embedAssignCtes(2)}, pq AS (
         |  SELECT q.query_id, q.qv, s.seed_id,
         |    ${duckCos("q.qv", "s.sv")} AS cs
         |  FROM qs q, seeds s
@@ -11659,19 +11686,7 @@ object SparkEntry {
     // q52's md5-deterministic IVF assignment (multiAssign=3), both-
     // direction candidate pairs, rounded-cos+id top-10, label joins
     "q366_knn_label_noise" ->
-      s"""WITH seeds AS (
-        |  SELECT vec_id AS seed_id, embedding AS sv FROM embeddings
-        |  ORDER BY ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT, vec_id
-        |  LIMIT greatest(8, ceil((SELECT count(*) FROM embeddings) / 128.0))::BIGINT
-        |), ca AS (
-        |  SELECT c.vec_id AS cand_id, c.embedding AS cv, s.seed_id,
-        |    ${duckCos("c.embedding", "s.sv")} AS cs
-        |  FROM embeddings c, seeds s
-        |), assign AS (
-        |  SELECT cand_id, cv, seed_id AS cell FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY cand_id ORDER BY cs DESC, seed_id) AS arn
-        |    FROM ca) WHERE arn <= 3
-        |), cand AS (
+      s"""WITH ${embedSeedsCte(embedAutoCellsSql)}, ${embedAssignCtes(3)}, cand AS (
         |  SELECT DISTINCT a.cand_id AS qa, b.cand_id AS qb,
         |    ${duckCos("a.cv", "b.cv")} AS cos
         |  FROM assign a JOIN assign b
@@ -11826,45 +11841,14 @@ object SparkEntry {
     // same block; verified LSH output is a subset, so recall is the
     // priced number
     "q318_lsh_recall" ->
-      """WITH base AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    generate_series(1, greatest(len(toks)-2, 0)),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-        |  FROM (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents)
-        |), nz AS (SELECT * FROM base WHERE len(sh) > 0 AND doc_id < 300),
+      s"""WITH ${shingleCtes("documents", " AND doc_id < 300")},
         |truth AS (
         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         |  FROM nz a JOIN nz b ON a.doc_id < b.doc_id
         |  WHERE len(list_intersect(a.sh, b.sh))::DOUBLE /
         |      (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
         |      >= 0.8
-        |), hs AS (
-        |  SELECT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT & 1073741823 AS h
-        |  FROM (SELECT doc_id, unnest(sh) AS s FROM nz)
-        |), mh AS (
-        |  SELECT doc_id,
-        |    min((787542839 * h + 242017) % 1073741789) AS mh0,
-        |    min((611349889 * h + 938741) % 1073741789) AS mh1,
-        |    min((904321577 * h + 55117) % 1073741789) AS mh2,
-        |    min((359485871 * h + 712933) % 1073741789) AS mh3,
-        |    min((673458601 * h + 128747) % 1073741789) AS mh4,
-        |    min((513695341 * h + 999331) % 1073741789) AS mh5,
-        |    min((844235099 * h + 47743) % 1073741789) AS mh6,
-        |    min((298654777 * h + 583391) % 1073741789) AS mh7,
-        |    min((736217683 * h + 864967) % 1073741789) AS mh8,
-        |    min((465182977 * h + 22229) % 1073741789) AS mh9,
-        |    min((952103481 * h + 371099) % 1073741789) AS mh10,
-        |    min((587431267 * h + 650087) % 1073741789) AS mh11
-        |  FROM hs GROUP BY doc_id
-        |), bands AS (
-        |  SELECT doc_id, 0 AS band, mh0::VARCHAR||'|'||mh1::VARCHAR||'|'||mh2::VARCHAR AS sig FROM mh
-        |  UNION ALL SELECT doc_id, 1, mh3::VARCHAR||'|'||mh4::VARCHAR||'|'||mh5::VARCHAR FROM mh
-        |  UNION ALL SELECT doc_id, 2, mh6::VARCHAR||'|'||mh7::VARCHAR||'|'||mh8::VARCHAR FROM mh
-        |  UNION ALL SELECT doc_id, 3, mh9::VARCHAR||'|'||mh10::VARCHAR||'|'||mh11::VARCHAR FROM mh
-        |), cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-        |), found AS (
+        |), $minhashBandCtes, found AS (
         |  SELECT doc_a, doc_b FROM (
         |    SELECT doc_a, doc_b,
         |      len(list_intersect(x.sh, y.sh))::DOUBLE /
@@ -11968,17 +11952,7 @@ object SparkEntry {
     // re-derived by (score desc, id), integer 1e12 div (60+rank)
     // terms, full-outer fuse, top-20 by the exact integer sum
     "q475_rrf_fusion" ->
-      """WITH lens AS (
-        |  SELECT doc_id, len(regexp_extract_all(lower(text), '[a-z0-9]+'))::DOUBLE AS dl
-        |  FROM documents
-        |), stats AS (SELECT count(*)::DOUBLE AS n, avg(dl) AS avgdl FROM lens),
-        |tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
-        |  FROM documents
-        |), hits AS (
-        |  SELECT doc_id, term, count(*)::DOUBLE AS tf FROM tok
-        |  WHERE term IN ('dup', 'join', 'window') GROUP BY 1, 2
-        |), dfs AS (SELECT term, count(*)::DOUBLE AS df FROM hits GROUP BY 1),
+      s"""WITH $bm25TermCtes,
         |bm AS (
         |  SELECT doc_id,
         |    round(sum(ln(1.0 + (n - df + 0.5) / (df + 0.5))
@@ -11987,25 +11961,7 @@ object SparkEntry {
         |  GROUP BY 1
         |  ORDER BY score DESC, doc_id
         |  LIMIT 20
-        |), t AS (
-        |  SELECT doc_id, text,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), f AS (
-        |  SELECT doc_id, len(toks)::DOUBLE AS n_tok,
-        |    coalesce(len(list_filter(toks, x -> list_contains(
-        |      ['the','a','of','and','to','in','is','it','that','for'], x)))::DOUBLE
-        |      / nullif(len(toks)::DOUBLE, 0), 0.0) AS stop_ratio,
-        |    coalesce(len(regexp_extract_all(lower(text), '[a-z]'))::DOUBLE
-        |      / nullif(length(text)::DOUBLE, 0), 0.0) AS alpha_ratio,
-        |    coalesce(coalesce(list_sum(list_transform(toks, x -> length(x))), 0)::DOUBLE
-        |      / nullif(len(toks)::DOUBLE, 0), 0.0) AS mean_tok_len
-        |  FROM t
-        |), z AS (
-        |  SELECT doc_id, -3.0 + ln(1.0 + n_tok) * 0.55 + stop_ratio * 4.0
-        |    + alpha_ratio * 1.5 + mean_tok_len * (-0.05) AS z
-        |  FROM f
-        |), qs AS (
+        |), $q207ScoreCtes, qs AS (
         |  SELECT doc_id, round(1.0 / (1.0 + exp(-z)), 6) AS score
         |  FROM z ORDER BY score DESC, doc_id LIMIT 20
         |), ar AS (
@@ -12101,42 +12057,8 @@ object SparkEntry {
     // engines: DuckDB's double->BIGINT cast rounds, Spark truncates)
     "q309_cv_ols" ->
       ((0 to 2).map { f =>
-        s"""ff$f AS (
-        |  SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS y,
-        |    CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) AS x1,
-        |    CAST(floor(l_discount * 100 + 0.5) AS BIGINT) AS x2
-        |  FROM lineitem WHERE l_orderkey % 3 <> $f
-        |    AND l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-        |    AND l_discount IS NOT NULL
-        |), m$f AS (
-        |  SELECT count(*)::BIGINT AS n, sum(x1)::BIGINT AS a,
-        |    sum(x2)::BIGINT AS b, sum(x1 * x1)::BIGINT AS c,
-        |    sum(x1 * x2)::BIGINT AS d, sum(x2 * x2)::BIGINT AS e,
-        |    sum(y)::BIGINT AS t0, sum(x1 * y)::BIGINT AS t1,
-        |    sum(x2 * y)::BIGINT AS t2
-        |  FROM ff$f
-        |), md$f AS (
-        |  SELECT n::DOUBLE AS n, a::DOUBLE AS a, b::DOUBLE AS b,
-        |    c::DOUBLE AS c, d::DOUBLE AS d, e::DOUBLE AS e,
-        |    t0::DOUBLE AS t0, t1::DOUBLE AS t1, t2::DOUBLE AS t2
-        |  FROM m$f
-        |), dt$f AS (
-        |  SELECT
-        |    n * (c * e - d * d) - a * (a * e - d * b)
-        |      + b * (a * d - c * b) AS det,
-        |    t0 * (c * e - d * d) - a * (t1 * e - d * t2)
-        |      + b * (t1 * d - c * t2) AS det0,
-        |    n * (t1 * e - d * t2) - t0 * (a * e - d * b)
-        |      + b * (a * t2 - t1 * b) AS det1,
-        |    n * (c * t2 - t1 * d) - a * (a * t2 - t1 * b)
-        |      + t0 * (a * d - c * b) AS det2
-        |  FROM md$f
-        |), cf$f AS (
-        |  SELECT CASE WHEN det <> 0 THEN det0 / det END AS b0,
-        |    CASE WHEN det <> 0 THEN det1 / det END AS b1,
-        |    CASE WHEN det <> 0 THEN det2 / det END AS b2
-        |  FROM dt$f
-        |), te$f AS (
+        s"""${olsLineitemCte(s"ff$f", s"l_orderkey % 3 <> $f")},
+        |${olsFitCtes(s"ff$f", f.toString)}, te$f AS (
         |  SELECT round((CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
         |    - (b0 + b1 * CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)
         |      + b2 * CAST(floor(l_discount * 100 + 0.5) AS BIGINT))) / 100,
@@ -12562,48 +12484,12 @@ object SparkEntry {
     // full PQ replay: hash seeds, x1e12-quantized distance sums,
     // (qd, c) argmin, x1e6-quantized refined centroids, re-assign
     "q295_pq_codebook" ->
-      """WITH c AS (SELECT vec_id, embedding FROM embeddings),
+      s"""WITH c AS (SELECT vec_id, embedding FROM embeddings),
         |coords AS (
         |  SELECT vec_id, (i - 1) // 16 AS s, (i - 1) % 16 AS i2,
         |    embedding[i]::DOUBLE AS x
         |  FROM c CROSS JOIN generate_series(1, 64) t(i)
-        |), sd AS (
-        |  SELECT sid, rn - 1 AS cc FROM (
-        |    SELECT vec_id AS sid, row_number() OVER (ORDER BY
-        |      ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT,
-        |      vec_id) AS rn
-        |    FROM c) WHERE rn <= 4
-        |), scomp AS (
-        |  SELECT s, cc AS cd, i2, x AS mx
-        |  FROM coords JOIN sd ON coords.vec_id = sd.sid
-        |), d0 AS (
-        |  SELECT coords.vec_id, coords.s, scomp.cd,
-        |    sum(CAST(floor((x - mx) * (x - mx) * 1e12 + 0.5)
-        |      AS BIGINT))::BIGINT AS qd
-        |  FROM coords JOIN scomp
-        |    ON coords.s = scomp.s AND coords.i2 = scomp.i2
-        |  GROUP BY 1, 2, 3
-        |), a0 AS (
-        |  SELECT vec_id, s, cd FROM (
-        |    SELECT vec_id, s, cd,
-        |      row_number() OVER (PARTITION BY vec_id, s
-        |        ORDER BY qd, cd) AS rn
-        |    FROM d0) WHERE rn = 1
-        |), ref AS (
-        |  SELECT coords.s, a0.cd, coords.i2,
-        |    (sum(CAST(floor(x * 1000000 + 0.5) AS BIGINT))::DOUBLE
-        |      / count(*)) / 1000000.0 AS mx
-        |  FROM coords JOIN a0
-        |    ON coords.vec_id = a0.vec_id AND coords.s = a0.s
-        |  GROUP BY 1, 2, 3
-        |), d1 AS (
-        |  SELECT coords.vec_id, coords.s, ref.cd,
-        |    sum(CAST(floor((x - mx) * (x - mx) * 1e12 + 0.5)
-        |      AS BIGINT))::BIGINT AS qd
-        |  FROM coords JOIN ref
-        |    ON coords.s = ref.s AND coords.i2 = ref.i2
-        |  GROUP BY 1, 2, 3
-        |)
+        |), ${pqTrainCtes(4)}, ${pqDistCte("d1", "coords", "ref")}
         |SELECT vec_id, s AS subspace, cd AS code,
         |  round(qd::DOUBLE / 1e12, 6) AS err
         |FROM (
@@ -12729,7 +12615,7 @@ object SparkEntry {
     // two unrolled EM iterations over the 8 agreement patterns; all
     // cross-pattern sums x1e12-quantized; c0 forces DOUBLE constants
     "q289_em_linkage" ->
-      """WITH pr AS (
+      s"""WITH pr AS (
         |  SELECT (a.c_mktsegment = b.c_mktsegment) AS g1,
         |    ((CAST(floor(a.c_acctbal * 100 + 0.5) AS BIGINT) + 1000000)
         |       // 100000 =
@@ -12744,81 +12630,7 @@ object SparkEntry {
         |  SELECT 0.1::DOUBLE AS lam, 0.9::DOUBLE AS m1, 0.1::DOUBLE AS u1,
         |    0.9::DOUBLE AS m2, 0.1::DOUBLE AS u2,
         |    0.9::DOUBLE AS m3, 0.1::DOUBLE AS u3
-        |), p1 AS (
-        |  SELECT g1, g2, g3, cnt,
-        |    (lam * (CASE WHEN g1 THEN m1 ELSE 1.0 - m1 END)
-        |         * (CASE WHEN g2 THEN m2 ELSE 1.0 - m2 END)
-        |         * (CASE WHEN g3 THEN m3 ELSE 1.0 - m3 END)) /
-        |    ((lam * (CASE WHEN g1 THEN m1 ELSE 1.0 - m1 END)
-        |          * (CASE WHEN g2 THEN m2 ELSE 1.0 - m2 END)
-        |          * (CASE WHEN g3 THEN m3 ELSE 1.0 - m3 END)) +
-        |     ((1.0 - lam) * (CASE WHEN g1 THEN u1 ELSE 1.0 - u1 END)
-        |                  * (CASE WHEN g2 THEN u2 ELSE 1.0 - u2 END)
-        |                  * (CASE WHEN g3 THEN u3 ELSE 1.0 - u3 END))) AS p
-        |  FROM pat, c0
-        |), a1 AS (
-        |  SELECT
-        |    sum(CAST(floor(p * 1e12 + 0.5) AS BIGINT)::HUGEINT * cnt) AS sp,
-        |    sum(CAST(floor((1.0 - p) * 1e12 + 0.5)
-        |      AS BIGINT)::HUGEINT * cnt) AS su,
-        |    sum(cnt)::BIGINT AS n,
-        |    sum(CASE WHEN g1 THEN CAST(floor(p * 1e12 + 0.5) AS BIGINT)::HUGEINT
-        |      * cnt ELSE 0 END) AS sg1,
-        |    sum(CASE WHEN g1 THEN CAST(floor((1.0 - p) * 1e12 + 0.5)
-        |      AS BIGINT)::HUGEINT * cnt ELSE 0 END) AS sug1,
-        |    sum(CASE WHEN g2 THEN CAST(floor(p * 1e12 + 0.5) AS BIGINT)::HUGEINT
-        |      * cnt ELSE 0 END) AS sg2,
-        |    sum(CASE WHEN g2 THEN CAST(floor((1.0 - p) * 1e12 + 0.5)
-        |      AS BIGINT)::HUGEINT * cnt ELSE 0 END) AS sug2,
-        |    sum(CASE WHEN g3 THEN CAST(floor(p * 1e12 + 0.5) AS BIGINT)::HUGEINT
-        |      * cnt ELSE 0 END) AS sg3,
-        |    sum(CASE WHEN g3 THEN CAST(floor((1.0 - p) * 1e12 + 0.5)
-        |      AS BIGINT)::HUGEINT * cnt ELSE 0 END) AS sug3
-        |  FROM p1
-        |), c1 AS (
-        |  SELECT (sp::DOUBLE / 1e12) / n AS lam,
-        |    sg1::DOUBLE / sp AS m1, sug1::DOUBLE / su AS u1,
-        |    sg2::DOUBLE / sp AS m2, sug2::DOUBLE / su AS u2,
-        |    sg3::DOUBLE / sp AS m3, sug3::DOUBLE / su AS u3
-        |  FROM a1
-        |), p2 AS (
-        |  SELECT g1, g2, g3, cnt,
-        |    (lam * (CASE WHEN g1 THEN m1 ELSE 1.0 - m1 END)
-        |         * (CASE WHEN g2 THEN m2 ELSE 1.0 - m2 END)
-        |         * (CASE WHEN g3 THEN m3 ELSE 1.0 - m3 END)) /
-        |    ((lam * (CASE WHEN g1 THEN m1 ELSE 1.0 - m1 END)
-        |          * (CASE WHEN g2 THEN m2 ELSE 1.0 - m2 END)
-        |          * (CASE WHEN g3 THEN m3 ELSE 1.0 - m3 END)) +
-        |     ((1.0 - lam) * (CASE WHEN g1 THEN u1 ELSE 1.0 - u1 END)
-        |                  * (CASE WHEN g2 THEN u2 ELSE 1.0 - u2 END)
-        |                  * (CASE WHEN g3 THEN u3 ELSE 1.0 - u3 END))) AS p
-        |  FROM pat, c1
-        |), a2 AS (
-        |  SELECT
-        |    sum(CAST(floor(p * 1e12 + 0.5) AS BIGINT)::HUGEINT * cnt) AS sp,
-        |    sum(CAST(floor((1.0 - p) * 1e12 + 0.5)
-        |      AS BIGINT)::HUGEINT * cnt) AS su,
-        |    sum(cnt)::BIGINT AS n,
-        |    sum(CASE WHEN g1 THEN CAST(floor(p * 1e12 + 0.5) AS BIGINT)::HUGEINT
-        |      * cnt ELSE 0 END) AS sg1,
-        |    sum(CASE WHEN g1 THEN CAST(floor((1.0 - p) * 1e12 + 0.5)
-        |      AS BIGINT)::HUGEINT * cnt ELSE 0 END) AS sug1,
-        |    sum(CASE WHEN g2 THEN CAST(floor(p * 1e12 + 0.5) AS BIGINT)::HUGEINT
-        |      * cnt ELSE 0 END) AS sg2,
-        |    sum(CASE WHEN g2 THEN CAST(floor((1.0 - p) * 1e12 + 0.5)
-        |      AS BIGINT)::HUGEINT * cnt ELSE 0 END) AS sug2,
-        |    sum(CASE WHEN g3 THEN CAST(floor(p * 1e12 + 0.5) AS BIGINT)::HUGEINT
-        |      * cnt ELSE 0 END) AS sg3,
-        |    sum(CASE WHEN g3 THEN CAST(floor((1.0 - p) * 1e12 + 0.5)
-        |      AS BIGINT)::HUGEINT * cnt ELSE 0 END) AS sug3
-        |  FROM p2
-        |), c2 AS (
-        |  SELECT (sp::DOUBLE / 1e12) / n AS lam,
-        |    sg1::DOUBLE / sp AS m1, sug1::DOUBLE / su AS u1,
-        |    sg2::DOUBLE / sp AS m2, sug2::DOUBLE / su AS u2,
-        |    sg3::DOUBLE / sp AS m3, sug3::DOUBLE / su AS u3
-        |  FROM a2
-        |)
+        |), ${(1 to 2).map(emRoundCtes).mkString(", ")}
         |SELECT 'g_segment' AS field, round(lam, 6) AS lambda,
         |  round(m1, 6) AS m, round(u1, 6) AS u,
         |  round(CASE WHEN m1 > 0 AND u1 > 0 THEN ln(m1 / u1) END, 6)
@@ -13083,17 +12895,11 @@ object SparkEntry {
         |FROM m JOIN g ON m.k = g.k""".stripMargin),
     // q29's cosine idiom with the label-mismatch predicate
     "q281_hard_negatives" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv, label AS qp
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv, label AS qp
         |  FROM embeddings WHERE vec_id < 20),
         |s AS (
         |  SELECT query_id, c.vec_id AS cand_id,
-        |    round(
-        |      list_sum(list_transform(generate_series(1, len(qv)),
-        |        i -> qv[i]::DOUBLE * c.embedding[i]::DOUBLE)) /
-        |      (sqrt(list_sum(list_transform(generate_series(1, len(qv)),
-        |        i -> qv[i]::DOUBLE * qv[i]::DOUBLE))) *
-        |       sqrt(list_sum(list_transform(generate_series(1, len(c.embedding)),
-        |        i -> c.embedding[i]::DOUBLE * c.embedding[i]::DOUBLE)))), 6)
+        |    ${duckCos("qv", "c.embedding")}
         |      AS cos
         |  FROM q JOIN embeddings c
         |    ON c.label <> qp AND c.vec_id <> query_id
@@ -13136,7 +12942,7 @@ object SparkEntry {
     // q28's cosine idiom; argmax = (cos DESC, bench_id) rank 1,
     // exactly the Spark struct-max's tiebreak
     "q277_semantic_decon" ->
-      """WITH bm AS (
+      s"""WITH bm AS (
         |  SELECT vec_id AS bench_id, embedding AS bv
         |  FROM embeddings WHERE vec_id % 10 = 0
         |), c AS (
@@ -13144,13 +12950,7 @@ object SparkEntry {
         |  FROM embeddings WHERE vec_id % 10 <> 0
         |), s AS (
         |  SELECT corpus_id, bench_id,
-        |    round(
-        |      list_sum(list_transform(generate_series(1, len(cv)),
-        |        i -> cv[i]::DOUBLE * bv[i]::DOUBLE)) /
-        |      (sqrt(list_sum(list_transform(generate_series(1, len(cv)),
-        |        i -> cv[i]::DOUBLE * cv[i]::DOUBLE))) *
-        |       sqrt(list_sum(list_transform(generate_series(1, len(bv)),
-        |        i -> bv[i]::DOUBLE * bv[i]::DOUBLE)))), 6) AS cos
+        |    ${duckCos("cv", "bv")} AS cos
         |  FROM c, bm
         |), r AS (
         |  SELECT corpus_id, bench_id, cos,
@@ -13207,16 +13007,7 @@ object SparkEntry {
     // q31's hex-frame idiom with stride 1; energy = frame-md5 first
     // byte; islands collapse on frame_idx - row_number
     "q279_vad_segments" ->
-      """WITH b AS (
-        |  SELECT doc_id, to_hex(encode(text)) AS hx,
-        |    octet_length(encode(text))::BIGINT AS n_bytes
-        |  FROM documents
-        |), idx AS (
-        |  SELECT doc_id, hx,
-        |    unnest(generate_series(0,
-        |      greatest(ceil(n_bytes / 64.0)::BIGINT - 1, 0), 1)) AS frame_idx
-        |  FROM b
-        |), f AS (
+      s"""WITH ${hexFrameCtes(1)}, f AS (
         |  SELECT doc_id, frame_idx,
         |    ('0x' || substr(md5(substring(hx, (frame_idx * 128 + 1)::BIGINT,
         |      128)), 1, 2))::BIGINT AS energy
@@ -13356,42 +13147,8 @@ object SparkEntry {
     // q250's Cramer replay on fold 0, rank-exact qhat on fold 1,
     // coverage on fold 2; NULL-qhat guard mirrors the Spark side
     "q273_conformal_ols" ->
-      """WITH f AS (
-        |  SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS y,
-        |    CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) AS x1,
-        |    CAST(floor(l_discount * 100 + 0.5) AS BIGINT) AS x2
-        |  FROM lineitem WHERE l_orderkey % 3 = 0
-        |    AND l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-        |    AND l_discount IS NOT NULL
-        |), m AS (
-        |  SELECT count(*)::BIGINT AS n, sum(x1)::BIGINT AS a,
-        |    sum(x2)::BIGINT AS b, sum(x1 * x1)::BIGINT AS c,
-        |    sum(x1 * x2)::BIGINT AS d, sum(x2 * x2)::BIGINT AS e,
-        |    sum(y)::BIGINT AS t0, sum(x1 * y)::BIGINT AS t1,
-        |    sum(x2 * y)::BIGINT AS t2
-        |  FROM f
-        |), md AS (
-        |  SELECT n::DOUBLE AS n, a::DOUBLE AS a, b::DOUBLE AS b,
-        |    c::DOUBLE AS c, d::DOUBLE AS d, e::DOUBLE AS e,
-        |    t0::DOUBLE AS t0, t1::DOUBLE AS t1, t2::DOUBLE AS t2
-        |  FROM m
-        |), dt AS (
-        |  SELECT
-        |    n * (c * e - d * d) - a * (a * e - d * b)
-        |      + b * (a * d - c * b) AS det,
-        |    t0 * (c * e - d * d) - a * (t1 * e - d * t2)
-        |      + b * (t1 * d - c * t2) AS det0,
-        |    n * (t1 * e - d * t2) - t0 * (a * e - d * b)
-        |      + b * (a * t2 - t1 * b) AS det1,
-        |    n * (c * t2 - t1 * d) - a * (a * t2 - t1 * b)
-        |      + t0 * (a * d - c * b) AS det2
-        |  FROM md
-        |), cf AS (
-        |  SELECT CASE WHEN det <> 0 THEN det0 / det END AS b0,
-        |    CASE WHEN det <> 0 THEN det1 / det END AS b1,
-        |    CASE WHEN det <> 0 THEN det2 / det END AS b2
-        |  FROM dt
-        |), cal AS (
+      s"""WITH ${olsLineitemCte("f", "l_orderkey % 3 = 0")},
+        |${olsFitCtes("f")}, cal AS (
         |  SELECT abs(round((CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
         |    - (b0 + b1 * CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)
         |      + b2 * CAST(floor(l_discount * 100 + 0.5) AS BIGINT))) / 100,
@@ -13555,24 +13312,17 @@ object SparkEntry {
         |)""".stripMargin,
     // q22's langid replay aggregated to per-source mismatch rates
     "q266_lang_mismatch" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT source, lang, text,
         |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
         |  FROM documents WHERE source IS NOT NULL AND lang IS NOT NULL
         |), c AS (
         |  SELECT source, lang, text,
-        |    len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','it','that','for'], x))) AS c_en,
-        |    len(list_filter(toks, x -> list_contains(['der','die','das','und','ist','ein','eine','zu','mit','von'], x))) AS c_de,
-        |    len(list_filter(toks, x -> list_contains(['le','la','les','et','est','un','une','de','du','pour'], x))) AS c_fr,
-        |    len(list_filter(toks, x -> list_contains(['el','los','las','y','es','si','una','como','por','para'], x))) AS c_es
+        |    $langCountCols
         |  FROM t
         |), p AS (
         |  SELECT source, lang,
-        |    CASE WHEN len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) > 0 THEN 'zh'
-        |         WHEN c_en >= c_de AND c_en >= c_fr AND c_en >= c_es THEN 'en'
-        |         WHEN c_de >= c_fr AND c_de >= c_es THEN 'de'
-        |         WHEN c_fr >= c_es THEN 'fr'
-        |         ELSE 'es' END AS pl
+        |    $langIdCaseSql AS pl
         |  FROM c
         |)
         |SELECT source, count(*)::BIGINT AS n_docs,
@@ -13755,7 +13505,7 @@ object SparkEntry {
     // q64's quantization replay -> float-cast reconstruction -> two
     // q28-style rankings -> integer hit metrics
     "q256_ranking_metrics" ->
-      """WITH b AS (
+      s"""WITH b AS (
         |  SELECT vec_id, embedding AS e,
         |    list_min(list_transform(embedding, x -> x::DOUBLE)) AS lo,
         |    list_max(list_transform(embedding, x -> x::DOUBLE)) AS hi
@@ -13776,13 +13526,7 @@ object SparkEntry {
         |  SELECT query_id, cand_id FROM (
         |    SELECT query_id, c.vec_id AS cand_id,
         |      row_number() OVER (PARTITION BY query_id ORDER BY
-        |        round(
-        |          list_sum(list_transform(generate_series(1, len(qv)),
-        |            i -> qv[i]::DOUBLE * c.embedding[i]::DOUBLE)) /
-        |          (sqrt(list_sum(list_transform(generate_series(1, len(qv)),
-        |            i -> qv[i]::DOUBLE * qv[i]::DOUBLE))) *
-        |           sqrt(list_sum(list_transform(generate_series(1, len(c.embedding)),
-        |            i -> c.embedding[i]::DOUBLE * c.embedding[i]::DOUBLE)))), 6)
+        |        ${duckCos("qv", "c.embedding")}
         |          DESC, c.vec_id) AS rn
         |    FROM q JOIN embeddings c ON c.vec_id <> query_id)
         |  WHERE rn <= 5
@@ -13790,13 +13534,7 @@ object SparkEntry {
         |  SELECT query_id, cand_id, rn FROM (
         |    SELECT query_id, d.vec_id AS cand_id,
         |      row_number() OVER (PARTITION BY query_id ORDER BY
-        |        round(
-        |          list_sum(list_transform(generate_series(1, len(qv)),
-        |            i -> qv[i]::DOUBLE * d.cv[i]::DOUBLE)) /
-        |          (sqrt(list_sum(list_transform(generate_series(1, len(qv)),
-        |            i -> qv[i]::DOUBLE * qv[i]::DOUBLE))) *
-        |           sqrt(list_sum(list_transform(generate_series(1, len(d.cv)),
-        |            i -> d.cv[i]::DOUBLE * d.cv[i]::DOUBLE)))), 6)
+        |        ${duckCos("qv", "d.cv")}
         |          DESC, d.vec_id) AS rn
         |    FROM q JOIN deq d ON d.vec_id <> query_id)
         |  WHERE rn <= 5
@@ -13862,29 +13600,17 @@ object SparkEntry {
     // greedy MMR unrolled to five stages; lambda as integer percent
     // so both engines weigh with identical doubles
     "q255_mmr_rerank" ->
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+      s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
         |sc AS (
         |  SELECT c.vec_id AS cand_id,
-        |    round(
-        |      list_sum(list_transform(generate_series(1, len(qv)),
-        |        i -> qv[i]::DOUBLE * c.embedding[i]::DOUBLE)) /
-        |      (sqrt(list_sum(list_transform(generate_series(1, len(qv)),
-        |        i -> qv[i]::DOUBLE * qv[i]::DOUBLE))) *
-        |       sqrt(list_sum(list_transform(generate_series(1, len(c.embedding)),
-        |        i -> c.embedding[i]::DOUBLE * c.embedding[i]::DOUBLE)))), 6)
+        |    ${duckCos("qv", "c.embedding")}
         |      AS rel,
         |    c.embedding AS cv
         |  FROM q JOIN embeddings c ON c.vec_id <> 0
         |), cand AS (SELECT * FROM sc ORDER BY rel DESC, cand_id LIMIT 30),
         |p AS (
         |  SELECT a.cand_id AS pa, b.cand_id AS pb,
-        |    round(
-        |      list_sum(list_transform(generate_series(1, len(a.cv)),
-        |        i -> a.cv[i]::DOUBLE * b.cv[i]::DOUBLE)) /
-        |      (sqrt(list_sum(list_transform(generate_series(1, len(a.cv)),
-        |        i -> a.cv[i]::DOUBLE * a.cv[i]::DOUBLE))) *
-        |       sqrt(list_sum(list_transform(generate_series(1, len(b.cv)),
-        |        i -> b.cv[i]::DOUBLE * b.cv[i]::DOUBLE)))), 6) AS sim
+        |    ${duckCos("a.cv", "b.cv")} AS sim
         |  FROM cand a JOIN cand b ON a.cand_id <> b.cand_id
         |),
         |s1 AS (SELECT cand_id, 1::BIGINT AS pick, rel FROM cand
@@ -13941,16 +13667,7 @@ object SparkEntry {
         |)""".stripMargin,
     // integer ceiling ranks (n*p + 99) div 100; tie-broken rows
     "q254_exact_percentiles" ->
-      """WITH b AS (
-        |  SELECT event_type AS g, CAST(floor(value * 100 + 0.5) AS BIGINT)
-        |    AS q, event_id
-        |  FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL
-        |), r AS (
-        |  SELECT g, q,
-        |    row_number() OVER (PARTITION BY g ORDER BY q, event_id) AS rn,
-        |    (count(*) OVER (PARTITION BY g))::BIGINT AS n
-        |  FROM b
-        |)
+      s"""WITH $valueRankCtes
         |SELECT g AS event_type, max(n)::BIGINT AS n,
         |  round(max(CASE WHEN rn = (n * 10 + 99) // 100 THEN q END)::DOUBLE
         |    / 100, 6) AS p10,
@@ -14004,42 +13721,8 @@ object SparkEntry {
     // nine exact int64 moments; Cramer determinants on identical
     // double operands; same prediction expression on both sides
     "q250_ols_fit_apply" ->
-      """WITH f AS (
-        |  SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS y,
-        |    CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) AS x1,
-        |    CAST(floor(l_discount * 100 + 0.5) AS BIGINT) AS x2
-        |  FROM lineitem WHERE l_orderkey % 2 = 0
-        |    AND l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-        |    AND l_discount IS NOT NULL
-        |), m AS (
-        |  SELECT count(*)::BIGINT AS n, sum(x1)::BIGINT AS a,
-        |    sum(x2)::BIGINT AS b, sum(x1 * x1)::BIGINT AS c,
-        |    sum(x1 * x2)::BIGINT AS d, sum(x2 * x2)::BIGINT AS e,
-        |    sum(y)::BIGINT AS t0, sum(x1 * y)::BIGINT AS t1,
-        |    sum(x2 * y)::BIGINT AS t2
-        |  FROM f
-        |), md AS (
-        |  SELECT n::DOUBLE AS n, a::DOUBLE AS a, b::DOUBLE AS b,
-        |    c::DOUBLE AS c, d::DOUBLE AS d, e::DOUBLE AS e,
-        |    t0::DOUBLE AS t0, t1::DOUBLE AS t1, t2::DOUBLE AS t2
-        |  FROM m
-        |), dt AS (
-        |  SELECT
-        |    n * (c * e - d * d) - a * (a * e - d * b)
-        |      + b * (a * d - c * b) AS det,
-        |    t0 * (c * e - d * d) - a * (t1 * e - d * t2)
-        |      + b * (t1 * d - c * t2) AS det0,
-        |    n * (t1 * e - d * t2) - t0 * (a * e - d * b)
-        |      + b * (a * t2 - t1 * b) AS det1,
-        |    n * (c * t2 - t1 * d) - a * (a * t2 - t1 * b)
-        |      + t0 * (a * d - c * b) AS det2
-        |  FROM md
-        |), cf AS (
-        |  SELECT CASE WHEN det <> 0 THEN det0 / det END AS b0,
-        |    CASE WHEN det <> 0 THEN det1 / det END AS b1,
-        |    CASE WHEN det <> 0 THEN det2 / det END AS b2
-        |  FROM dt
-        |)
+      s"""WITH ${olsLineitemCte("f", "l_orderkey % 2 = 0")},
+        |${olsFitCtes("f")}
         |SELECT l_orderkey, l_linenumber,
         |  round(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)::DOUBLE
         |    / 100, 6) AS y,
@@ -14056,7 +13739,7 @@ object SparkEntry {
     // hourly windowed counts (epoch-hour aligned, matching the
     // stream's window()) through the q240 grid with lookback 1
     "q249_stream_mix_drift" ->
-      """WITH c AS (
+      s"""WITH c AS (
         |  SELECT epoch_us(ts) // 3600000000 * 3600000000 AS hour_us,
         |    event_type AS cat, count(*)::BIGINT AS c
         |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL
@@ -14074,18 +13757,7 @@ object SparkEntry {
         |  SELECT *, (sum(c) OVER (PARTITION BY hour_us))::BIGINT AS dt,
         |    (sum(prev) OVER (PARTITION BY hour_us))::BIGINT AS pt
         |  FROM g2
-        |), t AS (
-        |  SELECT hour_us, dt, pt,
-        |    (CASE WHEN c > 0 THEN (c::DOUBLE / dt)
-        |        * ln((c::DOUBLE / dt)
-        |          / ((c::DOUBLE / dt + prev::DOUBLE / pt) / 2)) / 2
-        |      ELSE 0.0 END)
-        |    + (CASE WHEN prev > 0 THEN (prev::DOUBLE / pt)
-        |        * ln((prev::DOUBLE / pt)
-        |          / ((c::DOUBLE / dt + prev::DOUBLE / pt) / 2)) / 2
-        |      ELSE 0.0 END) AS term
-        |  FROM g3 WHERE pt > 0 AND dt > 0
-        |)
+        |), ${jsTermCte("hour_us")}
         |SELECT hour_us, max(dt) AS n_day, max(pt) AS n_prev,
         |  round(sum(term), 6) AS js
         |FROM t GROUP BY 1""".stripMargin,
@@ -14170,16 +13842,7 @@ object SparkEntry {
         |FROM hy, hyx""".stripMargin,
     // integer rank cut (n*10 div 100) - the q217 determinism posture
     "q244_trimmed_mean" ->
-      """WITH b AS (
-        |  SELECT event_type AS g, CAST(floor(value * 100 + 0.5) AS BIGINT)
-        |    AS q, event_id
-        |  FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL
-        |), r AS (
-        |  SELECT g, q,
-        |    row_number() OVER (PARTITION BY g ORDER BY q, event_id) AS rn,
-        |    (count(*) OVER (PARTITION BY g))::BIGINT AS n
-        |  FROM b
-        |)
+      s"""WITH $valueRankCtes
         |SELECT g AS event_type, max(n)::BIGINT AS n,
         |  count(*)::BIGINT AS n_used,
         |  round(sum(q)::DOUBLE / count(*) / 100, 6) AS trimmed_mean
@@ -14290,7 +13953,7 @@ object SparkEntry {
     // dense (day x category) grid makes trailing ROWS mean trailing
     // DAYS; per-day term sums category-bounded, absorbed by round-6
     "q240_mix_shift_daily" ->
-      """WITH c AS (
+      s"""WITH c AS (
         |  SELECT epoch_ns(ts) // 86400000000000 AS day, event_type AS cat,
         |    count(*)::BIGINT AS c
         |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL
@@ -14308,18 +13971,7 @@ object SparkEntry {
         |  SELECT *, (sum(c) OVER (PARTITION BY day))::BIGINT AS dt,
         |    (sum(prev) OVER (PARTITION BY day))::BIGINT AS pt
         |  FROM g2
-        |), t AS (
-        |  SELECT day, dt, pt,
-        |    (CASE WHEN c > 0 THEN (c::DOUBLE / dt)
-        |        * ln((c::DOUBLE / dt)
-        |          / ((c::DOUBLE / dt + prev::DOUBLE / pt) / 2)) / 2
-        |      ELSE 0.0 END)
-        |    + (CASE WHEN prev > 0 THEN (prev::DOUBLE / pt)
-        |        * ln((prev::DOUBLE / pt)
-        |          / ((c::DOUBLE / dt + prev::DOUBLE / pt) / 2)) / 2
-        |      ELSE 0.0 END) AS term
-        |  FROM g3 WHERE pt > 0 AND dt > 0
-        |)
+        |), ${jsTermCte("day")}
         |SELECT day, max(dt) AS n_day, max(pt) AS n_prev,
         |  round(sum(term), 6) AS js
         |FROM t GROUP BY 1""".stripMargin,
@@ -14395,18 +14047,10 @@ object SparkEntry {
     // full r x c cross incl. zero-observed cells; (o*n - rt*ct)^2
     // has an int64 root so each term is engine-exact
     "q194_chi_square" ->
-      """WITH base AS (
+      s"""WITH base AS (
         |  SELECT event_type AS r, epoch_ns(ts) // 86400000000000 % 7 AS c
         |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |), o AS (SELECT r, c, count(*)::BIGINT AS o FROM base GROUP BY 1, 2),
-        |rt AS (SELECT r, sum(o)::BIGINT AS rt FROM o GROUP BY 1),
-        |ct AS (SELECT c, sum(o)::BIGINT AS ct FROM o GROUP BY 1),
-        |n AS (SELECT sum(rt)::BIGINT AS n, count(*)::BIGINT AS nr FROM rt),
-        |nc AS (SELECT count(*)::BIGINT AS nc FROM ct),
-        |cells AS (
-        |  SELECT rt.r, ct.c, coalesce(o.o, 0) AS o, rt.rt, ct.ct
-        |  FROM rt CROSS JOIN ct LEFT JOIN o ON o.r = rt.r AND o.c = ct.c
-        |)
+        |), $contingencyCtes
         |SELECT round(sum(pow((o * n.n - rt * ct)::DOUBLE, 2)
         |    / (n.n::DOUBLE * rt * ct)), 6) AS chi2,
         |  (max(n.nr) - 1) * (max(nc.nc) - 1) AS df, max(n.n) AS n
@@ -14591,31 +14235,8 @@ object SparkEntry {
     // product-limit via Σln over the ordered (type,dur) curve; the
     // extinct flag pins S=0 with integer comparisons (no ln(0))
     "q193_kaplan_meier" ->
-      """WITH base AS (
-        |  SELECT event_type, event_id % 30 + 1 AS dur,
-        |    CASE WHEN event_id % 3 <> 0 THEN 1 ELSE 0 END AS d
-        |  FROM events WHERE event_type IS NOT NULL
-        |), c AS (
-        |  SELECT event_type, dur, sum(d)::BIGINT AS n_events,
-        |    count(*)::BIGINT AS cnt
-        |  FROM base GROUP BY 1, 2
-        |), r AS (
-        |  SELECT event_type, dur, n_events,
-        |    sum(cnt) OVER (PARTITION BY event_type)
-        |      - coalesce(sum(cnt) OVER (PARTITION BY event_type ORDER BY dur
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS n_risk
-        |  FROM c
-        |)
-        |SELECT event_type, dur, n_risk::BIGINT AS n_risk, n_events,
-        |  CASE WHEN max(CASE WHEN n_events = n_risk AND n_events > 0
-        |      THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY event_type ORDER BY dur) = 1 THEN 0.0
-        |  ELSE round(exp(sum(CASE WHEN n_events > 0 AND n_events < n_risk
-        |      THEN ln(1 - n_events::DOUBLE / n_risk) ELSE 0.0 END)
-        |      OVER (PARTITION BY event_type ORDER BY dur)), 6)
-        |  END AS survival
-        |FROM r""".stripMargin,
+      s"""WITH $atRiskCtes
+        |$kaplanMeierSql""".stripMargin,
     // 3 unrolled relaxations; min over ≤3-edge path costs
     "q192_weighted_paths" ->
       """WITH e0 AS (
@@ -14849,12 +14470,7 @@ object SparkEntry {
         |WHERE ${duckCos("a.cv", "b.cv")} >= 0.4""".stripMargin,
     // level-synchronous BFS == the recursive walk, min per node
     "q186_bfs_hops" ->
-      """WITH RECURSIVE e AS (
-        |  SELECT DISTINCT user_id AS a, 1000000 + event_id % 150 AS b
-        |  FROM events WHERE user_id IS NOT NULL
-        |), sym AS (
-        |  SELECT a AS u, b AS v FROM e UNION SELECT b, a FROM e
-        |), seeds AS (
+      s"""WITH RECURSIVE $userItemSymCtes, seeds AS (
         |  SELECT DISTINCT user_id AS node FROM events
         |  WHERE user_id IS NOT NULL AND user_id % 97 = 0
         |), walk(node, dist) AS (
@@ -14936,18 +14552,7 @@ object SparkEntry {
     // q169's decomposition chain + q118's quantile_cont median/MAD,
     // grouped by phase
     "q184_seasonal_anomalies" ->
-      """WITH hourly AS (
-        |  SELECT epoch_ns(ts) // 3600000000000 AS h,
-        |    round(sum(value), 6) AS v
-        |  FROM events GROUP BY 1
-        |), det AS (
-        |  SELECT h, v::DOUBLE AS y,
-        |    avg(v::DOUBLE) OVER (ORDER BY h
-        |      ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING) AS trend,
-        |    h % 24 AS phase
-        |  FROM hourly
-        |), pm AS (SELECT phase, avg(y - trend) AS s_raw FROM det GROUP BY 1),
-        |ctr AS (SELECT avg(s_raw) AS s_bar FROM pm),
+      s"""WITH $seasonalCtes,
         |dec AS (
         |  SELECT h, round(y, 6) AS y, phase,
         |    round(y - trend - (s_raw - s_bar), 6) AS resid
@@ -14990,18 +14595,7 @@ object SparkEntry {
     // q41's fingerprint replay + the length-bound prune + levenshtein
     // on candidates only
     "q181_edit_nearpairs" ->
-      s"""WITH nrm AS (
-        |  SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS t
-        |  FROM documents
-        |), win AS (
-        |  SELECT doc_id, $winnowHashSql AS wh
-        |  FROM (
-        |    SELECT doc_id, t, unnest(generate_series(1, length(t) - 7)) AS pos
-        |    FROM nrm WHERE length(t) >= 8
-        |  )
-        |), fp0 AS (
-        |  SELECT DISTINCT doc_id, wh AS fp FROM win WHERE wh % 64 = 0
-        |), keep AS (
+      s"""WITH $winnowFpCtes, keep AS (
         |  SELECT fp FROM fp0 GROUP BY fp HAVING count(*) <= 64
         |), fp AS (
         |  SELECT f.doc_id, f.fp FROM fp0 f JOIN keep USING (fp)
@@ -15018,15 +14612,7 @@ object SparkEntry {
         |)
         |SELECT doc_a, doc_b, lev FROM lev WHERE lev <= 200""".stripMargin,
     "q180_video_embedding" ->
-      """WITH b AS (
-        |  SELECT doc_id, to_hex(encode(text)) AS hx,
-        |    octet_length(encode(text))::BIGINT AS n_bytes
-        |  FROM documents
-        |), idx AS (
-        |  SELECT doc_id, hx,
-        |    unnest(generate_series(0, greatest(ceil(n_bytes / 64.0)::BIGINT - 1, 0), 2)) AS frame_idx
-        |  FROM b
-        |), f AS (
+      s"""WITH ${hexFrameCtes(2)}, f AS (
         |  SELECT doc_id,
         |    md5(substring(hx, (frame_idx * 128 + 1)::BIGINT, 128)) AS h
         |  FROM idx
@@ -15042,12 +14628,7 @@ object SparkEntry {
         |  round(avg((('0x' || substr(h, 15, 2))::BIGINT - 127.5) / 127.5), 6) + 0.0 AS e7
         |FROM f GROUP BY doc_id""".stripMargin,
     "q179_containment" ->
-      """WITH base AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    generate_series(1, greatest(len(toks)-2, 0)),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-        |  FROM (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents)
-        |), nz AS (SELECT * FROM base WHERE len(sh) > 0 AND doc_id < 300),
+      s"""WITH ${shingleCtes("documents", " AND doc_id < 300")},
         |j AS (
         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |    len(list_intersect(a.sh, b.sh))::DOUBLE /
@@ -15059,22 +14640,7 @@ object SparkEntry {
     // same one-shot dual as q171: the stream's three-batch path must
     // be indistinguishable from batch sessionization of the full log
     "q178_stream_sessions_incr" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
-        |g AS (
-        |  SELECT user_id, event_id, ts_us,
-        |    CASE WHEN lag(ts_us) OVER w IS NULL
-        |           OR ts_us - lag(ts_us) OVER w > 1800000000 THEN 1 ELSE 0 END AS new_sess
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
-        |), s AS (
-        |  SELECT user_id, ts_us,
-        |    (sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |      ROWS UNBOUNDED PRECEDING))::BIGINT AS sess_n
-        |  FROM g
-        |)
-        |SELECT user_id, min(ts_us) AS sess_start,
-        |  (max(ts_us) - min(ts_us)) AS sess_dur_us,
-        |  count(*)::BIGINT AS n_events
-        |FROM s GROUP BY user_id, sess_n""".stripMargin,
+      oneShotSessionsSql,
     "q176_asof_forward" ->
       """WITH l AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS pt FROM events
@@ -15118,49 +14684,11 @@ object SparkEntry {
     // three synchronous rounds unrolled; per round: neighbor-label
     // counts, windowed max, min-label among the maxima
     "q175_label_propagation" ->
-      """WITH e AS (
-        |  SELECT DISTINCT user_id AS a, 1000000 + event_id % 150 AS b
-        |  FROM events WHERE user_id IS NOT NULL
-        |), sym AS (
-        |  SELECT a AS u, b AS v FROM e UNION SELECT b, a FROM e
-        |), l0 AS (SELECT DISTINCT u AS node, u::BIGINT AS label FROM sym),
-        |i1 AS (
-        |  SELECT u AS node, min(label) AS label FROM (
-        |    SELECT u, label, cnt, max(cnt) OVER (PARTITION BY u) AS mx FROM (
-        |      SELECT s.u, l.label, count(*) AS cnt
-        |      FROM sym s JOIN l0 l ON s.v = l.node GROUP BY 1, 2)
-        |  ) WHERE cnt = mx GROUP BY u
-        |), i2 AS (
-        |  SELECT u AS node, min(label) AS label FROM (
-        |    SELECT u, label, cnt, max(cnt) OVER (PARTITION BY u) AS mx FROM (
-        |      SELECT s.u, l.label, count(*) AS cnt
-        |      FROM sym s JOIN i1 l ON s.v = l.node GROUP BY 1, 2)
-        |  ) WHERE cnt = mx GROUP BY u
-        |), i3 AS (
-        |  SELECT u AS node, min(label) AS label FROM (
-        |    SELECT u, label, cnt, max(cnt) OVER (PARTITION BY u) AS mx FROM (
-        |      SELECT s.u, l.label, count(*) AS cnt
-        |      FROM sym s JOIN i2 l ON s.v = l.node GROUP BY 1, 2)
-        |  ) WHERE cnt = mx GROUP BY u
-        |)
+      s"""WITH $labelPropCtes
         |SELECT node, label FROM i3""".stripMargin,
     // q168's scoring core + the q47 recursive-closure pattern
     "q174_entity_resolution" ->
-      """WITH RECURSIVE a AS (
-        |  SELECT c_nationkey, c_mktsegment, c_custkey AS a_key,
-        |    (c_custkey * 7919 % 10000000)::VARCHAR AS a_pd,
-        |    lower(c_name) AS a_nm, c_acctbal::DOUBLE AS a_bal
-        |  FROM customer
-        |), b AS (
-        |  SELECT c_nationkey, c_mktsegment, c_custkey + 1000000 AS b_key,
-        |    CASE WHEN c_custkey % 7 = 0
-        |         THEN reverse((c_custkey * 7919 % 10000000)::VARCHAR)
-        |         ELSE (c_custkey * 7919 % 10000000)::VARCHAR END AS b_pd,
-        |    CASE WHEN c_custkey % 5 = 0 THEN lower(c_name) || 'x'
-        |         ELSE lower(c_name) END AS b_nm,
-        |    round(c_acctbal)::DOUBLE AS b_bal
-        |  FROM customer
-        |), links AS (
+      s"""WITH RECURSIVE $linkageSideCtes, links AS (
         |  SELECT a_key, b_key FROM (
         |    SELECT a_key, b_key,
         |      round(CASE WHEN a_pd = b_pd THEN 6.8::DOUBLE ELSE -2.3::DOUBLE END
@@ -15234,22 +14762,7 @@ object SparkEntry {
     // the oracle is the ONE-SHOT sessionization of all events — the
     // incremental two-stage path must be indistinguishable from it
     "q171_incremental_sessions" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
-        |g AS (
-        |  SELECT user_id, event_id, ts_us,
-        |    CASE WHEN lag(ts_us) OVER w IS NULL
-        |           OR ts_us - lag(ts_us) OVER w > 1800000000 THEN 1 ELSE 0 END AS new_sess
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
-        |), s AS (
-        |  SELECT user_id, ts_us,
-        |    (sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |      ROWS UNBOUNDED PRECEDING))::BIGINT AS sess_n
-        |  FROM g
-        |)
-        |SELECT user_id, min(ts_us) AS sess_start,
-        |  (max(ts_us) - min(ts_us)) AS sess_dur_us,
-        |  count(*)::BIGINT AS n_events
-        |FROM s GROUP BY user_id, sess_n""".stripMargin,
+      oneShotSessionsSql,
     "q170_stratified_exact_k" ->
       """SELECT event_type, event_id, user_id
         |FROM events
@@ -15257,38 +14770,13 @@ object SparkEntry {
         |QUALIFY row_number() OVER (PARTITION BY event_type
         |  ORDER BY md5(event_id::VARCHAR || '|q170'), event_id) <= 20""".stripMargin,
     "q169_seasonal_decompose" ->
-      """WITH hourly AS (
-        |  SELECT epoch_ns(ts) // 3600000000000 AS h,
-        |    round(sum(value), 6) AS v
-        |  FROM events GROUP BY 1
-        |), det AS (
-        |  SELECT h, v::DOUBLE AS y,
-        |    avg(v::DOUBLE) OVER (ORDER BY h
-        |      ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING) AS trend,
-        |    h % 24 AS phase
-        |  FROM hourly
-        |), pm AS (SELECT phase, avg(y - trend) AS s_raw FROM det GROUP BY 1),
-        |ctr AS (SELECT avg(s_raw) AS s_bar FROM pm)
+      s"""WITH $seasonalCtes
         |SELECT h, round(y, 6) AS y, round(trend, 6) AS trend,
         |  round(s_raw - s_bar, 6) AS seasonal,
         |  round(y - trend - (s_raw - s_bar), 6) AS resid
         |FROM det JOIN pm USING (phase), ctr""".stripMargin,
     "q168_record_linkage" ->
-      """WITH a AS (
-        |  SELECT c_nationkey, c_mktsegment, c_custkey AS a_key,
-        |    (c_custkey * 7919 % 10000000)::VARCHAR AS a_pd,
-        |    lower(c_name) AS a_nm, c_acctbal::DOUBLE AS a_bal
-        |  FROM customer
-        |), b AS (
-        |  SELECT c_nationkey, c_mktsegment, c_custkey + 1000000 AS b_key,
-        |    CASE WHEN c_custkey % 7 = 0
-        |         THEN reverse((c_custkey * 7919 % 10000000)::VARCHAR)
-        |         ELSE (c_custkey * 7919 % 10000000)::VARCHAR END AS b_pd,
-        |    CASE WHEN c_custkey % 5 = 0 THEN lower(c_name) || 'x'
-        |         ELSE lower(c_name) END AS b_nm,
-        |    round(c_acctbal)::DOUBLE AS b_bal
-        |  FROM customer
-        |)
+      s"""WITH $linkageSideCtes
         |SELECT * FROM (
         |  SELECT a_key, b_key,
         |    a_pd = b_pd AS agree_phone,
@@ -15539,23 +15027,16 @@ object SparkEntry {
         |    (1.0 - least(coalesce(punct_ratio, 0.0) * 10.0, 1.0)) * 0.2, 6) AS quality
         |FROM s""".stripMargin,
     "q22_langid" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, text, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
         |  FROM documents
         |), c AS (
         |  SELECT doc_id, text,
-        |    len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','it','that','for'], x))) AS c_en,
-        |    len(list_filter(toks, x -> list_contains(['der','die','das','und','ist','ein','eine','zu','mit','von'], x))) AS c_de,
-        |    len(list_filter(toks, x -> list_contains(['le','la','les','et','est','un','une','de','du','pour'], x))) AS c_fr,
-        |    len(list_filter(toks, x -> list_contains(['el','los','las','y','es','si','una','como','por','para'], x))) AS c_es
+        |    $langCountCols
         |  FROM t
         |)
         |SELECT doc_id,
-        |  CASE WHEN len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) > 0 THEN 'zh'
-        |       WHEN c_en >= c_de AND c_en >= c_fr AND c_en >= c_es THEN 'en'
-        |       WHEN c_de >= c_fr AND c_de >= c_es THEN 'de'
-        |       WHEN c_fr >= c_es THEN 'fr'
-        |       ELSE 'es' END AS predicted_lang
+        |  $langIdCaseSql AS predicted_lang
         |FROM c""".stripMargin,
     "q23_fingerprint" ->
       """SELECT doc_id,
@@ -15673,16 +15154,7 @@ object SparkEntry {
     // pruned by the engine)
     "q330_index_health" ->
       s"""WITH ${ivfPqFitCtes("")},
-        |ca AS (
-        |  SELECT x.vec_id AS cand_id, s.seed_id,
-        |    ${duckCos("x.embedding", "s.sv")} AS cs
-        |  FROM c x, seeds s
-        |), assign AS (
-        |  SELECT cand_id, seed_id AS cell FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY cand_id
-        |      ORDER BY cs DESC, seed_id) AS arn
-        |    FROM ca) WHERE arn <= 2
-        |), cells AS (
+        |${ivfAssignCtes("c")}, cells AS (
         |  SELECT cell, count(*)::BIGINT AS n_vectors FROM assign GROUP BY 1
         |), tt AS (
         |  SELECT sum(n_vectors)::BIGINT AS t, count(*)::BIGINT AS k FROM cells
@@ -15691,12 +15163,7 @@ object SparkEntry {
         |  round((n_vectors * k)::DOUBLE / t, 6) AS load
         |FROM cells, tt""".stripMargin,
     "q25_ngram_jaccard" ->
-      """WITH base AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    generate_series(1, greatest(len(toks)-2, 0)),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-        |  FROM (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents)
-        |), nz AS (SELECT * FROM base WHERE len(sh) > 0 AND doc_id < 300),
+      s"""WITH ${shingleCtes("documents", " AND doc_id < 300")},
         |j AS (
         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |    len(list_intersect(a.sh, b.sh))::DOUBLE /
@@ -15757,30 +15224,18 @@ object SparkEntry {
         |FROM spairs sp JOIN sh x ON x.simhash = sp.sa JOIN sh y ON y.simhash = sp.sb
         |UNION ALL SELECT doc_a, doc_b, hamming FROM intra""".stripMargin,
     "q27_embed_neardup" ->
-      """WITH s AS (
+      s"""WITH s AS (
         |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-        |    round(
-        |      list_sum(list_transform(generate_series(1, len(a.embedding)),
-        |        i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE)) /
-        |      (sqrt(list_sum(list_transform(generate_series(1, len(a.embedding)),
-        |        i -> a.embedding[i]::DOUBLE * a.embedding[i]::DOUBLE))) *
-        |       sqrt(list_sum(list_transform(generate_series(1, len(b.embedding)),
-        |        i -> b.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE)))), 6) AS cos
+        |    ${duckCos("a.embedding", "b.embedding")} AS cos
         |  FROM embeddings a JOIN embeddings b
         |    ON a.label = b.label AND a.vec_id < b.vec_id
         |)
         |SELECT vec_a, vec_b, cos FROM s WHERE cos >= 0.4""".stripMargin,
     "q28_cosine_topk" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
         |s AS (
         |  SELECT query_id, c.vec_id AS cand_id,
-        |    round(
-        |      list_sum(list_transform(generate_series(1, len(qv)),
-        |        i -> qv[i]::DOUBLE * c.embedding[i]::DOUBLE)) /
-        |      (sqrt(list_sum(list_transform(generate_series(1, len(qv)),
-        |        i -> qv[i]::DOUBLE * qv[i]::DOUBLE))) *
-        |       sqrt(list_sum(list_transform(generate_series(1, len(c.embedding)),
-        |        i -> c.embedding[i]::DOUBLE * c.embedding[i]::DOUBLE)))), 6) AS cos
+        |    ${duckCos("qv", "c.embedding")} AS cos
         |  FROM q JOIN embeddings c ON c.vec_id <> query_id
         |), r AS (
         |  SELECT query_id, cand_id, cos,
@@ -15789,17 +15244,11 @@ object SparkEntry {
         |)
         |SELECT query_id, cand_id, cos, rn FROM r WHERE rn <= 5""".stripMargin,
     "q29_ann_ivf" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv, label AS qp
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv, label AS qp
         |  FROM embeddings WHERE vec_id < 20),
         |s AS (
         |  SELECT query_id, c.vec_id AS cand_id,
-        |    round(
-        |      list_sum(list_transform(generate_series(1, len(qv)),
-        |        i -> qv[i]::DOUBLE * c.embedding[i]::DOUBLE)) /
-        |      (sqrt(list_sum(list_transform(generate_series(1, len(qv)),
-        |        i -> qv[i]::DOUBLE * qv[i]::DOUBLE))) *
-        |       sqrt(list_sum(list_transform(generate_series(1, len(c.embedding)),
-        |        i -> c.embedding[i]::DOUBLE * c.embedding[i]::DOUBLE)))), 6) AS cos
+        |    ${duckCos("qv", "c.embedding")} AS cos
         |  FROM q JOIN embeddings c ON c.label = qp AND c.vec_id <> query_id
         |), r AS (
         |  SELECT query_id, cand_id, cos,
@@ -15812,19 +15261,7 @@ object SparkEntry {
       // centroids, top-2 multi-assignment, nprobe=4, k=3; every score
       // rounded to 6 before any argmax (the cross-engine stability
       // contract of ivfAssign)
-      s"""WITH seeds AS (
-        |  SELECT vec_id AS seed_id, embedding AS sv FROM embeddings
-        |  ORDER BY ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT, vec_id
-        |  LIMIT 8
-        |), ca AS (
-        |  SELECT c.vec_id AS cand_id, c.embedding AS cv, s.seed_id,
-        |    ${duckCos("c.embedding", "s.sv")} AS cs
-        |  FROM embeddings c, seeds s
-        |), assign AS (
-        |  SELECT cand_id, cv, seed_id AS cell FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY cand_id ORDER BY cs DESC, seed_id) AS arn
-        |    FROM ca) WHERE arn <= 2
-        |), q AS (
+      s"""WITH ${embedSeedsCte("8")}, ${embedAssignCtes(2)}, q AS (
         |  SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 20
         |), qa AS (
         |  SELECT q.query_id, q.qv, s.seed_id, ${duckCos("q.qv", "s.sv")} AS cs
@@ -15846,19 +15283,7 @@ object SparkEntry {
       // same assignment CTE as q48 but multiAssign=3; pairs co-assigned
       // to any shared cell, threshold 0.4, deduped. numCells mirrors the
       // operator's derivation: max(8, ceil(n / targetCellSize=128)).
-      s"""WITH seeds AS (
-        |  SELECT vec_id AS seed_id, embedding AS sv FROM embeddings
-        |  ORDER BY ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT, vec_id
-        |  LIMIT greatest(8, ceil((SELECT count(*) FROM embeddings) / 128.0))::BIGINT
-        |), ca AS (
-        |  SELECT c.vec_id AS cand_id, c.embedding AS cv, s.seed_id,
-        |    ${duckCos("c.embedding", "s.sv")} AS cs
-        |  FROM embeddings c, seeds s
-        |), assign AS (
-        |  SELECT cand_id, cv, seed_id AS cell FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY cand_id ORDER BY cs DESC, seed_id) AS arn
-        |    FROM ca) WHERE arn <= 3
-        |)
+      s"""WITH ${embedSeedsCte(embedAutoCellsSql)}, ${embedAssignCtes(3)}
         |SELECT DISTINCT a.cand_id AS vec_a, b.cand_id AS vec_b,
         |  ${duckCos("a.cv", "b.cv")} AS cos
         |FROM assign a JOIN assign b ON a.cell = b.cell AND a.cand_id < b.cand_id
@@ -15879,18 +15304,7 @@ object SparkEntry {
         |SELECT doc_id, term, tf, df, tfidf FROM x WHERE doc_id < 50
         |QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) <= 5""".stripMargin,
     "q34_sessionize" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
-        |g AS (
-        |  SELECT user_id, event_id, ts_us,
-        |    CASE WHEN lag(ts_us) OVER w IS NULL
-        |           OR ts_us - lag(ts_us) OVER w > 1800000000 THEN 1 ELSE 0 END AS new_sess
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
-        |), s AS (
-        |  SELECT user_id, ts_us,
-        |    (sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |      ROWS UNBOUNDED PRECEDING))::BIGINT AS sess_n
-        |  FROM g
-        |)
+      s"""WITH $sessionCtes
         |SELECT user_id, sess_n, count(*) AS n_events, min(ts_us) AS sess_start,
         |  max(ts_us) - min(ts_us) AS sess_dur_us
         |FROM s GROUP BY user_id, sess_n""".stripMargin,
@@ -16034,17 +15448,7 @@ object SparkEntry {
         |  max(n)::BIGINT AS n_tokens
         |FROM tf JOIN n USING (doc_id) GROUP BY 1""".stripMargin,
     "q81_bm25" ->
-      """WITH lens AS (
-        |  SELECT doc_id, len(regexp_extract_all(lower(text), '[a-z0-9]+'))::DOUBLE AS dl
-        |  FROM documents
-        |), stats AS (SELECT count(*)::DOUBLE AS n, avg(dl) AS avgdl FROM lens),
-        |tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
-        |  FROM documents
-        |), hits AS (
-        |  SELECT doc_id, term, count(*)::DOUBLE AS tf FROM tok
-        |  WHERE term IN ('dup', 'join', 'window') GROUP BY 1, 2
-        |), dfs AS (SELECT term, count(*)::DOUBLE AS df FROM hits GROUP BY 1)
+      s"""WITH $bm25TermCtes
         |SELECT doc_id,
         |  round(sum(ln(1.0 + (n - df + 0.5) / (df + 0.5))
         |            * tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))), 6) AS score,
@@ -16059,32 +15463,7 @@ object SparkEntry {
     "q91_training_pipeline" ->
       // q71's gate CTEs verbatim -> q56 decontamination -> q55-style
       // hash sample at 0.8 -> q57-style chunking at 128/16
-      s"""WITH t AS (
-        |  SELECT doc_id, text, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), q AS (
-        |  SELECT doc_id,
-        |    round(least(length(text)::BIGINT / 500.0, 1.0) * 0.4 +
-        |      least(coalesce(len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','it','that','for'], x)))::DOUBLE / nullif(len(toks)::DOUBLE, 0), 0.0) * 5.0, 1.0) * 0.4 +
-        |      (1.0 - least(coalesce(len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]'))::DOUBLE / nullif(length(text)::DOUBLE, 0), 0.0) * 10.0, 1.0)) * 0.2, 6) AS quality
-        |  FROM t
-        |), l AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(regexp_extract_all(text, '[\\x{4e00}-\\x{9fff}]')) > 0 THEN 'zh'
-        |         WHEN len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','it','that','for'], x))) >= len(list_filter(toks, x -> list_contains(['der','die','das','und','ist','ein','eine','zu','mit','von'], x)))
-        |          AND len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','it','that','for'], x))) >= len(list_filter(toks, x -> list_contains(['le','la','les','et','est','un','une','de','du','pour'], x)))
-        |          AND len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','it','that','for'], x))) >= len(list_filter(toks, x -> list_contains(['el','los','las','y','es','si','una','como','por','para'], x))) THEN 'en'
-        |         ELSE 'other' END AS predicted_lang
-        |  FROM t
-        |), r AS (
-        |  SELECT doc_id, CASE WHEN len(toks) = 0 THEN 0.0
-        |    ELSE round((len(toks) - len(list_distinct(toks)))::DOUBLE / len(toks), 6) END AS dup_token_frac
-        |  FROM t
-        |), s AS (
-        |  SELECT ('0x' || substr(md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))), 1, 15))::BIGINT AS f,
-        |    min(doc_id) AS survivor
-        |  FROM documents GROUP BY 1
-        |), kept AS (
+      s"""WITH $curationSignalCtes, kept AS (
         |  SELECT d.doc_id
         |  FROM documents d JOIN q USING (doc_id) JOIN l USING (doc_id) JOIN r USING (doc_id)
         |  WHERE l.predicted_lang = 'en' AND q.quality >= 0.45 AND r.dup_token_frac <= 0.65
@@ -16425,20 +15804,7 @@ object SparkEntry {
       // unrolled stage CTEs: each stage = first qualifying event
       // strictly after, and within 48h of, the previous stage's time;
       // µs integers on both engines
-      """WITH s1 AS (SELECT user_id, min(epoch_us(ts)) AS t FROM events
-        |  WHERE event_type = 'signup' AND user_id IS NOT NULL GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t FROM events e
-        |  JOIN s1 ON e.user_id = s1.user_id
-        |  WHERE e.event_type = 'view' AND epoch_us(e.ts) > s1.t
-        |    AND epoch_us(e.ts) <= s1.t + 172800000000 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t FROM events e
-        |  JOIN s2 ON e.user_id = s2.user_id
-        |  WHERE e.event_type = 'click' AND epoch_us(e.ts) > s2.t
-        |    AND epoch_us(e.ts) <= s2.t + 172800000000 GROUP BY 1),
-        |s4 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t FROM events e
-        |  JOIN s3 ON e.user_id = s3.user_id
-        |  WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s3.t
-        |    AND epoch_us(e.ts) <= s3.t + 172800000000 GROUP BY 1)
+      s"""WITH $funnelStageCtes
         |SELECT 1 AS step, 'signup' AS step_name, (SELECT count(*) FROM s1)::BIGINT AS n_users
         |UNION ALL SELECT 2, 'view', (SELECT count(*) FROM s2)::BIGINT
         |UNION ALL SELECT 3, 'click', (SELECT count(*) FROM s3)::BIGINT
@@ -16479,12 +15845,7 @@ object SparkEntry {
     "q146_scd2_history" ->
       // lag/filter/lead replay; IS DISTINCT FROM == Spark's <=>
       // negation (null-safe heartbeat collapse)
-      """WITH c AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us,
-        |    event_id FROM events),
-        |d AS (SELECT *, lag(event_type) OVER
-        |    (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev FROM c),
-        |k AS (SELECT user_id, event_type, ts_us, event_id FROM d
-        |  WHERE prev IS DISTINCT FROM event_type)
+      s"""WITH $statusChangeCtes
         |SELECT user_id, event_type, ts_us AS valid_from_us,
         |  lead(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
         |    AS valid_to_us
@@ -16492,12 +15853,7 @@ object SparkEntry {
     "q147_point_in_time" ->
       // interval-predicate formulation — same rows as the engine's
       // as-of union (versions partition the timeline per key)
-      """WITH c AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us,
-        |    event_id FROM events),
-        |d AS (SELECT *, lag(event_type) OVER
-        |    (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev FROM c),
-        |k AS (SELECT user_id, event_type, ts_us, event_id FROM d
-        |  WHERE prev IS DISTINCT FROM event_type),
+      s"""WITH $statusChangeCtes,
         |h AS (SELECT user_id, event_type AS status, ts_us AS vf,
         |    lead(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
         |      AS vt FROM k),
@@ -16727,12 +16083,7 @@ object SparkEntry {
         |FROM l""".stripMargin,
     "q159_time_travel" ->
       // q146's history CTE + the as-of-T validity filter
-      """WITH c AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us,
-        |    event_id FROM events),
-        |d AS (SELECT *, lag(event_type) OVER
-        |    (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev FROM c),
-        |k AS (SELECT user_id, event_type, ts_us, event_id FROM d
-        |  WHERE prev IS DISTINCT FROM event_type),
+      s"""WITH $statusChangeCtes,
         |h AS (SELECT user_id, event_type AS status, ts_us AS vf,
         |    lead(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
         |      AS vt FROM k)
@@ -17045,20 +16396,7 @@ object SparkEntry {
     "q125_funnel_latency" ->
       // q109's stage CTEs, then per-step delta percentiles (exact
       // percentile ⇄ quantile_cont, q39 parity)
-      """WITH s1 AS (SELECT user_id, min(epoch_us(ts)) AS t FROM events
-        |  WHERE event_type = 'signup' AND user_id IS NOT NULL GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t FROM events e
-        |  JOIN s1 ON e.user_id = s1.user_id
-        |  WHERE e.event_type = 'view' AND epoch_us(e.ts) > s1.t
-        |    AND epoch_us(e.ts) <= s1.t + 172800000000 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t FROM events e
-        |  JOIN s2 ON e.user_id = s2.user_id
-        |  WHERE e.event_type = 'click' AND epoch_us(e.ts) > s2.t
-        |    AND epoch_us(e.ts) <= s2.t + 172800000000 GROUP BY 1),
-        |s4 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t FROM events e
-        |  JOIN s3 ON e.user_id = s3.user_id
-        |  WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s3.t
-        |    AND epoch_us(e.ts) <= s3.t + 172800000000 GROUP BY 1),
+      s"""WITH $funnelStageCtes,
         |d2 AS (SELECT s2.t - s1.t AS d FROM s2 JOIN s1 ON s2.user_id = s1.user_id),
         |d3 AS (SELECT s3.t - s2.t AS d FROM s3 JOIN s2 ON s3.user_id = s2.user_id),
         |d4 AS (SELECT s4.t - s3.t AS d FROM s4 JOIN s3 ON s4.user_id = s3.user_id)
@@ -17153,19 +16491,7 @@ object SparkEntry {
     "q114_triangles" ->
       // identical degree-ordered orientation ((deg, id) lexicographic)
       // so wedge/closure joins replay exactly
-      """WITH raw AS (SELECT user_id AS a, event_id % 150 AS b FROM events
-        |  WHERE user_id IS NOT NULL AND event_id IS NOT NULL AND event_id % 13 = 0),
-        |und AS (SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v FROM raw WHERE a <> b),
-        |deg AS (SELECT node, count(*)::BIGINT AS dg FROM
-        |  (SELECT u AS node FROM und UNION ALL SELECT v FROM und) GROUP BY 1),
-        |dd AS (SELECT u, v, du.dg AS du, dv.dg AS dv FROM und
-        |  JOIN deg du ON und.u = du.node JOIN deg dv ON und.v = dv.node),
-        |o AS (SELECT CASE WHEN (du < dv) OR (du = dv AND u < v) THEN u ELSE v END AS x,
-        |             CASE WHEN (du < dv) OR (du = dv AND u < v) THEN v ELSE u END AS y,
-        |             CASE WHEN (du < dv) OR (du = dv AND u < v) THEN dv ELSE du END AS dy
-        |      FROM dd),
-        |w AS (SELECT e1.x, e1.y, e2.y AS z FROM o e1 JOIN o e2 ON e1.x = e2.x
-        |      WHERE (e1.dy < e2.dy) OR (e1.dy = e2.dy AND e1.y < e2.y)),
+      s"""WITH $triangleWedgeCtes,
         |tris AS (SELECT w.x, w.y, w.z FROM w JOIN o e3 ON w.y = e3.x AND w.z = e3.y)
         |SELECT node, count(*)::BIGINT AS n_triangles FROM
         |  (SELECT x AS node FROM tris UNION ALL SELECT y FROM tris UNION ALL SELECT z FROM tris)
@@ -17417,32 +16743,7 @@ object SparkEntry {
     "q71_quality_pipeline" ->
       // q21 quality + q22 langid + q59 dup-token + q07-style survivor
       // CTEs composed; thresholds compare the same rounded values
-      """WITH t AS (
-        |  SELECT doc_id, text, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), q AS (
-        |  SELECT doc_id,
-        |    round(least(length(text)::BIGINT / 500.0, 1.0) * 0.4 +
-        |      least(coalesce(len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','it','that','for'], x)))::DOUBLE / nullif(len(toks)::DOUBLE, 0), 0.0) * 5.0, 1.0) * 0.4 +
-        |      (1.0 - least(coalesce(len(regexp_extract_all(text, '[^a-zA-Z0-9\s]'))::DOUBLE / nullif(length(text)::DOUBLE, 0), 0.0) * 10.0, 1.0)) * 0.2, 6) AS quality
-        |  FROM t
-        |), l AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) > 0 THEN 'zh'
-        |         WHEN len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','it','that','for'], x))) >= len(list_filter(toks, x -> list_contains(['der','die','das','und','ist','ein','eine','zu','mit','von'], x)))
-        |          AND len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','it','that','for'], x))) >= len(list_filter(toks, x -> list_contains(['le','la','les','et','est','un','une','de','du','pour'], x)))
-        |          AND len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','it','that','for'], x))) >= len(list_filter(toks, x -> list_contains(['el','los','las','y','es','si','una','como','por','para'], x))) THEN 'en'
-        |         ELSE 'other' END AS predicted_lang
-        |  FROM t
-        |), r AS (
-        |  SELECT doc_id, CASE WHEN len(toks) = 0 THEN 0.0
-        |    ELSE round((len(toks) - len(list_distinct(toks)))::DOUBLE / len(toks), 6) END AS dup_token_frac
-        |  FROM t
-        |), s AS (
-        |  SELECT ('0x' || substr(md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), 1, 15))::BIGINT AS f,
-        |    min(doc_id) AS survivor
-        |  FROM documents GROUP BY 1
-        |)
+      s"""WITH $curationSignalCtes
         |SELECT d.doc_id
         |FROM documents d JOIN q USING (doc_id) JOIN l USING (doc_id) JOIN r USING (doc_id)
         |WHERE l.predicted_lang = 'en' AND q.quality >= 0.45 AND r.dup_token_frac <= 0.65
@@ -17694,18 +16995,7 @@ object SparkEntry {
       // window — the exact contract of graft.plans.RollingFingerprints
       // (the rolling update is algebraically identical to this direct
       // fold; all intermediates fit BIGINT).
-      s"""WITH nrm AS (
-        |  SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS t
-        |  FROM documents
-        |), win AS (
-        |  SELECT doc_id, $winnowHashSql AS wh
-        |  FROM (
-        |    SELECT doc_id, t, unnest(generate_series(1, length(t) - 7)) AS pos
-        |    FROM nrm WHERE length(t) >= 8
-        |  )
-        |), fp0 AS (
-        |  SELECT DISTINCT doc_id, wh AS fp FROM win WHERE wh % 64 = 0
-        |), keep AS (
+      s"""WITH $winnowFpCtes, keep AS (
         |  SELECT fp FROM fp0 GROUP BY fp HAVING count(*) <= 128
         |), fp AS (
         |  SELECT f.doc_id, f.fp FROM fp0 f JOIN keep USING (fp)
@@ -17717,28 +17007,12 @@ object SparkEntry {
     // [64i, 64i+64) ⇒ hex chars [128i+1, 128i+128]; both engines emit
     // uppercase hex, and an empty payload yields one empty frame row
     "q31_frame_sample" ->
-      """WITH b AS (
-        |  SELECT doc_id, to_hex(encode(text)) AS hx,
-        |    octet_length(encode(text))::BIGINT AS n_bytes
-        |  FROM documents
-        |), idx AS (
-        |  SELECT doc_id, hx,
-        |    unnest(generate_series(0, greatest(ceil(n_bytes / 64.0)::BIGINT - 1, 0), 2)) AS frame_idx
-        |  FROM b
-        |)
+      s"""WITH ${hexFrameCtes(2)}
         |SELECT doc_id, frame_idx,
         |  substring(hx, (frame_idx * 128 + 1)::BIGINT, 128) AS frame_hex
         |FROM idx""".stripMargin,
     "q70_frame_dedup" ->
-      """WITH b AS (
-        |  SELECT doc_id, to_hex(encode(text)) AS hx,
-        |    octet_length(encode(text))::BIGINT AS n_bytes
-        |  FROM documents
-        |), idx AS (
-        |  SELECT doc_id, hx,
-        |    unnest(generate_series(0, greatest(ceil(n_bytes / 64.0)::BIGINT - 1, 0), 2)) AS frame_idx
-        |  FROM b
-        |), f AS (
+      s"""WITH ${hexFrameCtes(2)}, f AS (
         |  SELECT doc_id, frame_idx,
         |    substring(hx, (frame_idx * 128 + 1)::BIGINT, 128) AS frame_hex
         |  FROM idx

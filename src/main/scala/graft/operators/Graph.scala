@@ -11,32 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Fixed-iteration PageRank over a directed edge list.
-    *
-    * r₀(v) = 1/N; rᵢ₊₁(v) = (1−d)/N + d·Σ_{u→v} rᵢ(u)/outdeg(u).
-    * Simplified (non-redistributing) dangling handling: sink nodes
-    * keep their base term and leak their mass — the standard
-    * fixed-iteration formulation; document or avoid sinks upstream if
-    * total-mass conservation matters. Returns (node, rank).
-    *
-    * Engine-exact by construction: each edge's contribution is
-    * quantized to int64 (`floor(r/outdeg·S + ½)`) BEFORE the per-node
-    * sum, so the only distributed reduction is integer addition —
-    * order-free, bit-identical on any engine or partitioning
-    * ([[Similarity.kmeansRefine]]'s trick); every remaining FP step
-    * is a fixed scalar expression sequence both engines evaluate
-    * identically. At S = 10⁹ the quantization error per edge is
-    * ≤ 5·10⁻¹⁰ — far below any ranking use — and a rank sum over
-    * ≤ 2⁵³/S ≈ 9M in-edges per node cannot overflow.
-    *
-    * Scale shape: outdegrees are one map-side-combinable count; each
-    * iteration is (rank ⋈ edges on src) + one dst-keyed integer sum.
-    * The rank table is nodes-sized — broadcast it while nodes fit
-    * (`broadcastRanks`, the common case: ranks are two columns even
-    * when edges are billions), and the per-iteration cost collapses
-    * to one edge scan + one dst shuffle of (dst, int64) pairs. For
-    * node sets past broadcast range, pre-partition edges by src once
-    * and the rank join is co-located every iteration. */
   /** Per-node triangle counts on the undirected simple graph induced
     * by the edge list (self-loops dropped, parallel edges collapsed).
     * Returns (node, n_triangles) for every node in ≥ 1 triangle.
@@ -84,6 +58,33 @@ object Graph {
       .groupBy("node").agg(count(lit(1)).as("n_triangles"))
   }
 
+  /** Fixed-iteration PageRank over a directed edge list.
+    *
+    * r₀(v) = 1/N; rᵢ₊₁(v) = (1−d)/N + d·Σ_{u→v} rᵢ(u)/outdeg(u).
+    * Simplified (non-redistributing) dangling handling: sink nodes
+    * keep their base term and leak their mass — the standard
+    * fixed-iteration formulation; document or avoid sinks upstream if
+    * total-mass conservation matters. Returns (node, rank).
+    *
+    * Engine-exact by construction: each edge's contribution is
+    * quantized to int64 (`floor(r/outdeg·S + ½)`) BEFORE the per-node
+    * sum, so the only distributed reduction is integer addition —
+    * order-free, bit-identical on any engine or partitioning
+    * ([[Similarity.kmeansRefine]]'s trick); every remaining FP step
+    * is a fixed scalar expression sequence both engines evaluate
+    * identically. At S = 10⁹ the quantization error per edge is
+    * ≤ 5·10⁻¹⁰ — far below any ranking use — and a rank sum over
+    * ≤ 2⁵³/S ≈ 9M in-edges per node cannot overflow.
+    *
+    * Scale shape: outdegrees are one map-side-combinable count; each
+    * iteration is (rank ⋈ edges on src) + one dst-keyed integer sum.
+    * The rank table is nodes-sized — broadcast it while nodes fit
+    * (`broadcastRanks`, the common case: ranks are two columns even
+    * when edges are billions), and the per-iteration cost collapses
+    * to one edge scan + one dst shuffle of (dst, int64) pairs. For
+    * node sets past broadcast range, `broadcastRanks = false` drops
+    * the hint and leaves the rank join to the planner's default
+    * strategy; edges are not pre-partitioned. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 3, damping: Double = 0.85,
                broadcastRanks: Boolean = true,
@@ -131,7 +132,7 @@ object Graph {
     * neighbor endpoint + one (node, label) count with map-side
     * combine + an integer argmax — all label values, no FP anywhere.
     * The label table is nodes-sized (two columns): broadcast while it
-    * fits, or pre-partition edges by `v` once for a co-located join.
+    * fits; `broadcastLabels = false` only drops the hint.
     * Like [[pageRank]], the loop builds one lazy plan with zero
     * driver actions. */
   def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
@@ -208,8 +209,8 @@ object Graph {
     *
     * Scale shape: per round ONE (frontier ⋈ edges) join + one
     * map-side-combinable `min` agg; the frontier is (node)-sized —
-    * broadcast while it fits (`broadcastFrontier`), else pre-partition
-    * edges by src once and every round's join is co-located. Rounds =
+    * broadcast while it fits (`broadcastFrontier`); `false` only drops
+    * the hint, edges are not pre-partitioned. Rounds =
     * `maxDepth`, a query constant: one lazy plan, zero driver
     * actions, nothing persisted. */
   def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
@@ -253,8 +254,8 @@ object Graph {
     * first discovery, so each round relaxes the FULL dist table:
     * one (dist ⋈ edges) join + one map-side-combinable `min` per
     * round. The dist table is nodes-sized (two columns) — broadcast
-    * while it fits (`broadcastDist`), else pre-partition edges by
-    * `_u` once for co-located joins. One lazy plan, zero driver
+    * while it fits (`broadcastDist`); `false` only drops the hint,
+    * edges are not pre-partitioned. One lazy plan, zero driver
     * actions. */
   def weightedDistances(edges: DataFrame, srcCol: String, dstCol: String,
                         weightCol: String, seeds: DataFrame,

@@ -4,7 +4,7 @@ import java.io.IOException
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.format.DateTimeFormatter
-import java.time.{Instant, ZoneOffset}
+import java.time.Instant
 import java.util.Base64
 
 /** The inReach feed's pure helpers and its fetch seam (SURVEY.md §2.1
@@ -31,11 +31,15 @@ object InReachSource {
     else if (raw.startsWith("share.garmin.com")) raw.replace("share.garmin.com/", "")
     else raw
 
+  /** The reference's fixed lookback window (`task.ts:80-82`). */
+  val LookbackMinutes: Long = 30L
+
   /** Feed URL with the lookback pushed down as `d1`
     * (reference `task.ts:78-82`). */
-  def feedUrl(shareId: String, now: Instant, lookbackMinutes: Long = 30): String = {
+  def feedUrl(shareId: String, now: Instant,
+              lookbackMinutes: Long = LookbackMinutes): String = {
     val d1 = DateTimeFormatter.ISO_INSTANT.format(
-      now.minusSeconds(lookbackMinutes * 60).atZone(ZoneOffset.UTC).toInstant)
+      now.minusSeconds(lookbackMinutes * 60))
     s"https://share.garmin.com/Feed/Share/$shareId?d1=$d1"
   }
 

@@ -24,7 +24,6 @@ import scala.util.Try
   *   .option("shares", "alpha,beta")
   *   .option("share.alpha.callsign", "Alpha Team")   // task.ts:75
   *   .option("share.alpha.password", "secret")        // task.ts:84-87
-  *   .option("lookbackMinutes", "30")
   *   .load()
   *   .filter($"whenRaw" >= "2026-08-12T05:00:00Z")  // ← pushed to the server
   * }}}
@@ -37,7 +36,8 @@ import scala.util.Try
   *   the executor and becomes the basic-auth header (`task.ts:84-87`);
   *   a missing callsign defaults to the ShareId (`task.ts:75`);
   * - `SupportsPushDownFilters`: a `whenRaw ≥ t` filter tightens the
-  *   server-side `d1` lookback parameter (`task.ts:80-82`) — genuine
+  *   server-side `d1` lookback parameter, otherwise the fixed
+  *   [[graft.sources.InReachSource.LookbackMinutes]] (`task.ts:80-82`) — genuine
   *   source-level predicate pushdown, visible in `explain` as
   *   `PushedFilters`;
   * - per-share failure isolation: fetch/parse errors yield an empty
@@ -149,7 +149,6 @@ final class InReachScanBuilder(options: CaseInsensitiveStringMap,
 
   override def build(): Scan = new InReachScan(
     shares = shareSpecs,
-    lookbackMinutes = Option(options.get("lookbackMinutes")).map(_.toLong).getOrElse(30L),
     nowIso = Option(options.get("now")),
     fetcher = fetcher,
     pushedTime = pushedTime.map(_.toString),
@@ -157,7 +156,7 @@ final class InReachScanBuilder(options: CaseInsensitiveStringMap,
     required = required)
 }
 
-final class InReachScan(shares: Seq[graft.model.Share], lookbackMinutes: Long,
+final class InReachScan(shares: Seq[graft.model.Share],
                         nowIso: Option[String], fetcher: InReachSource.Fetcher,
                         pushedTime: Option[String], debug: Boolean,
                         required: StructType) extends Scan with Batch {
@@ -168,7 +167,7 @@ final class InReachScan(shares: Seq[graft.model.Share], lookbackMinutes: Long,
       s"readSchema=${required.fieldNames.mkString(",")})"
 
   override def planInputPartitions(): Array[InputPartition] =
-    shares.map(s => InReachPartition(s, lookbackMinutes, nowIso, fetcher,
+    shares.map(s => InReachPartition(s, nowIso, fetcher,
       pushedTime, debug, required.fieldNames): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -183,20 +182,16 @@ final class InReachScan(shares: Seq[graft.model.Share], lookbackMinutes: Long,
     * in-memory Map. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new InReachMicroBatchStream(shares, lookbackMinutes, nowIso, fetcher,
-      pushedTime, debug, required)
+    new InReachMicroBatchStream(this)
 }
 
 /** One fetch round per microbatch. Offsets count rounds: batch
   * (start, end] re-fetches every share once (regardless of the gap —
   * a feed has no replayable history, exactly like the reference's
   * scheduled run; the lookback window is the only re-delivery
-  * buffer). Supports Trigger.AvailableNow (one round, then stop). */
-final class InReachMicroBatchStream(shares: Seq[graft.model.Share],
-                                    lookbackMinutes: Long, nowIso: Option[String],
-                                    fetcher: InReachSource.Fetcher,
-                                    pushedTime: Option[String], debug: Boolean,
-                                    required: StructType)
+  * buffer). Supports Trigger.AvailableNow (one round, then stop).
+  * Every round plans the same partitions as the batch `scan`. */
+final class InReachMicroBatchStream(scan: InReachScan)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.Offset
@@ -238,17 +233,16 @@ final class InReachMicroBatchStream(shares: Seq[graft.model.Share],
   override def reportLatestOffset(): Offset = RoundOffset(round)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    shares.map(s => InReachPartition(s, lookbackMinutes, nowIso, fetcher,
-      pushedTime, debug, required.fieldNames): InputPartition).toArray
+    scan.planInputPartitions()
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new InReachReaderFactory
+    scan.createReaderFactory()
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-final case class InReachPartition(share: graft.model.Share, lookbackMinutes: Long,
+final case class InReachPartition(share: graft.model.Share,
                                   nowIso: Option[String], fetcher: InReachSource.Fetcher,
                                   pushedTime: Option[String], debug: Boolean,
                                   requiredFields: Array[String]) extends InputPartition
@@ -269,9 +263,9 @@ final class InReachPartitionReader(p: InReachPartition)
     val shareId = InReachSource.normalizeShareId(p.share.ShareId)
     val callSign = p.share.CallSign.getOrElse(shareId) // task.ts:75
     val now = p.nowIso.map(Instant.parse).getOrElse(Instant.now())
-    // pushdown: the tighter of the configured lookback and any pushed
+    // pushdown: the tighter of the fixed lookback and any pushed
     // time filter wins (server's d1 is ≥-inclusive)
-    val lookbackStart = now.minusSeconds(p.lookbackMinutes * 60)
+    val lookbackStart = now.minusSeconds(InReachSource.LookbackMinutes * 60)
     val effectiveStart = p.pushedTime.map(Instant.parse)
       .filter(_.isAfter(lookbackStart)).getOrElse(lookbackStart)
     val effectiveLookbackMin =

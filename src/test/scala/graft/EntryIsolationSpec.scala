@@ -30,4 +30,14 @@ class EntryIsolationSpec extends SparkSpec {
         s"$name left persisted RDDs that survived an unpersist sweep")
     }
   }
+
+  // Verify ships oracleSql's keys to the DuckDB compare, which loops
+  // over duals only: a query without one would never be compared.
+  test("every registered query has exactly one DuckDB dual") {
+    val queries = SparkEntry.queries.keySet
+    val duals = SparkEntry.oracleSql.keySet
+    assert((queries -- duals).isEmpty, "queries without a dual")
+    assert((duals -- queries).isEmpty, "duals without a query")
+    assert(queries.size == 481)
+  }
 }

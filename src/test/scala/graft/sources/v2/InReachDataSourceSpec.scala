@@ -160,9 +160,9 @@ class InReachDataSourceSpec extends SparkSpec {
     // a restarted query hands the checkpoint's committed offset as
     // `start` while the rebuilt stream's counter is back at 0 — the
     // reported end must seed from start, not restart at 1
-    def stream() = new InReachMicroBatchStream(
-      Seq(graft.model.Share("alpha")), 30L, None, InReachSource.httpFetcher, None, false,
-      InReachDataSource.schema)
+    def stream() = new InReachMicroBatchStream(new InReachScan(
+      Seq(graft.model.Share("alpha")), None, InReachSource.httpFetcher, None, false,
+      InReachDataSource.schema))
     val st = stream()
     val end = st.latestOffset(st.deserializeOffset("5"), null)
     assert(end.json.toLong == 6L, s"restarted end = ${end.json}, want committed+1")
