@@ -14,13 +14,14 @@ import java.util.{Locale, UUID}
 
 /** The end-to-end reference pipeline, Spark-first (SURVEY.md §3.4):
   *
-  *   share config → `format("inreach")` scan, one partition per share
-  *   (lookback pushed down) → wide projection → latest-per-device
-  *   dedup → `format("featurecollection")` commit (one POST)
+  *   share config → `format("inreach")` scan, the shares dealt into
+  *   one partition per task slot (lookback pushed down) → wide
+  *   projection → latest-per-device dedup → `format("featurecollection")`
+  *   commit (one POST)
   *
   * The union across feeds (`task.ts:177-180`) is implicit — feeds are
-  * partitions of one scan, so there is no explicit union node. The
-  * dedup is global post-union rather than per-feed; since the key
+  * read by the partitions of one scan, so there is no explicit union
+  * node. The dedup is global post-union rather than per-feed; since the key
   * embeds the globally-unique IMEI this is semantically equivalent
   * and strictly more correct (SURVEY.md §2.4 scope note).
   *

@@ -11,8 +11,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * Scale notes: both forms are single-shuffle on the key.
   * `max_by`-style aggregation gets Spark's partial (map-side)
   * aggregation for free, so at 100 TB the shuffle carries one row per
-  * (partition, key), not one per input row — strictly better than the
-  * window-rank formulation when keys repeat a lot. The window variant
+  * (partition, key), not one per input row — better than the
+  * window-rank formulation when keys repeat a lot. It is a sort
+  * aggregate, not a hash aggregate (see [[latestPerKey]]). The window variant
   * is kept for callers that need the *whole* surviving row without
   * struct-repacking and for deterministic tiebreaks.
   */
@@ -25,11 +26,14 @@ object Dedup {
     * broken by `tiebreak` ascending-max to keep results deterministic
     * — pass a unique column (e.g. an id) for full determinism.
     *
-    * `max_by` (not window-rank) so Spark plans a hash aggregate with
-    * map-side partial aggregation: at 100 TB the shuffle carries one
-    * row per (map partition, key), not one row per input row, and no
-    * per-key sort happens. The row payload rides in the *value* slot
-    * of `max_by`, so non-orderable column types (maps) are fine. */
+    * `max_by` (not window-rank) so Spark plans map-side partial
+    * aggregation: at 100 TB the shuffle carries one row per (map
+    * partition, key), not one row per input row. The plan is a
+    * `SortAggregate` with a `Sort` before the partial and before the
+    * final aggregate: the struct buffer of `max_by` is not a mutable
+    * fixed-width type, so neither hash aggregate applies. The row
+    * payload rides in the *value* slot of `max_by`, so non-orderable
+    * column types (maps) are fine. */
   def latestPerKey(
       df: DataFrame,
       key: Seq[String],

@@ -4,7 +4,7 @@ import java.io.IOException
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.format.DateTimeFormatter
-import java.time.Instant
+import java.time.{Duration, Instant}
 import java.util.Base64
 
 /** The inReach feed's pure helpers and its fetch seam (SURVEY.md §2.1
@@ -48,19 +48,36 @@ object InReachSource {
   def basicAuth(password: String): String =
     "Basic " + Base64.getEncoder.encodeToString((":" + password).getBytes("UTF-8"))
 
-  /** Production fetcher (java.net.http). Defined as a static method so
-    * the closure that captures it stays serializable. A non-2xx status
-    * throws (`HTTP <code> for share feed`, naming neither the URL nor
-    * the credentials), so a 401 or 500 error page never reaches the
-    * parser; the source's failure isolation turns it into an empty
-    * partition plus a `FEED:` line. */
-  val httpFetcher: Fetcher = (url: String, password: Option[String]) => {
-    val client = HttpClient.newHttpClient()
-    val builder = HttpRequest.newBuilder(URI.create(url)).GET()
-    password.foreach(p => builder.header("Authorization", basicAuth(p)))
-    val response = client.send(builder.build(), HttpResponse.BodyHandlers.ofString())
-    if (response.statusCode / 100 != 2)
-      throw new IOException(s"HTTP ${response.statusCode} for share feed")
-    response.body()
-  }
+  /** Bound of the TCP connect of one feed fetch. */
+  val ConnectTimeout: Duration = Duration.ofSeconds(10)
+
+  /** Bound of the wait for one feed's response. The shares of a scan
+    * partition are fetched one after another, so a hung share holds
+    * back the ones queued behind it for at most this long. */
+  val RequestTimeout: Duration = Duration.ofSeconds(30)
+
+  /** Production fetcher (java.net.http), bounded by [[ConnectTimeout]]
+    * and [[RequestTimeout]]. A non-2xx status throws (`HTTP <code> for
+    * share feed`, naming neither the URL nor the credentials), so a
+    * 401 or 500 error page never reaches the parser; a timeout throws
+    * the JDK's `HttpTimeoutException`. The source's failure isolation
+    * turns either into no rows for that share plus a `FEED:` line. */
+  val httpFetcher: Fetcher = httpFetcherWithin(ConnectTimeout, RequestTimeout)
+
+  /** [[httpFetcher]] with the given bounds. One `HttpClient` per call:
+    * a client shared across a partition's fetches reuses keep-alive
+    * connections, which against a server that writes headers and body
+    * separately waits out the ~40 ms delayed ACK on every request.
+    * Defined in an object so the closure captures only the two
+    * durations and stays serializable. */
+  private[sources] def httpFetcherWithin(connect: Duration, request: Duration): Fetcher =
+    (url: String, password: Option[String]) => {
+      val client = HttpClient.newBuilder().connectTimeout(connect).build()
+      val builder = HttpRequest.newBuilder(URI.create(url)).timeout(request).GET()
+      password.foreach(p => builder.header("Authorization", basicAuth(p)))
+      val response = client.send(builder.build(), HttpResponse.BodyHandlers.ofString())
+      if (response.statusCode / 100 != 2)
+        throw new IOException(s"HTTP ${response.statusCode} for share feed")
+      response.body()
+    }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter, GreaterThan, GreaterThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -28,8 +29,13 @@ import scala.util.Try
   *   .filter($"whenRaw" >= "2026-08-12T05:00:00Z")  // ← pushed to the server
   * }}}
   *
-  * - one `InputPartition` per share — the reference's I/O-parallel
-  *   fan-out (`task.ts:66-68`) as Spark's own partition parallelism;
+  * - the shares dealt round-robin, in configured order, into
+  *   `min(#shares, defaultParallelism)` `InputPartition`s, read on the
+  *   driver at planning time: the reference's I/O-parallel fan-out
+  *   (`task.ts:66-68`) as one scan task per slot, each fetching and
+  *   parsing its shares one after another. A task of its own per
+  *   share would spend more on scheduling, partial aggregation and
+  *   shuffle write than on fetching and parsing a typical 15 kB feed;
   * - per-share credentials and CallSign via `share.<id>.password` /
   *   `share.<id>.callsign` options (`<id>` = normalized ShareId,
   *   matched case-insensitively): the password rides the partition to
@@ -40,8 +46,9 @@ import scala.util.Try
   *   [[graft.sources.InReachSource.LookbackMinutes]] (`task.ts:80-82`) — genuine
   *   source-level predicate pushdown, visible in `explain` as
   *   `PushedFilters`;
-  * - per-share failure isolation: fetch/parse errors yield an empty
-  *   partition plus a warning, never a failed stage (`task.ts:165-168`);
+  * - per-share failure isolation: fetch/parse errors yield no rows for
+  *   that share plus a `FEED:` warning, never a failed stage, and the
+  *   other shares of its partition are read as usual (`task.ts:165-168`);
   * - fetch seam: `option("fetcher", id)` names an
   *   [[graft.sources.InReachSource.Fetcher]] registered in
   *   [[InReachDataSource.fetchers]] (closures cannot ride string
@@ -166,9 +173,16 @@ final class InReachScan(shares: Seq[graft.model.Share],
     s"InReachScan(shares=${shares.size}, pushedTime=$pushedTime, " +
       s"readSchema=${required.fieldNames.mkString(",")})"
 
-  override def planInputPartitions(): Array[InputPartition] =
-    shares.map(s => InReachPartition(s, nowIso, fetcher,
-      pushedTime, debug, required.fieldNames): InputPartition).toArray
+  /** Share `i` goes to partition `i % slots`: partition sizes differ
+    * by at most one share, and each keeps the configured order. */
+  override def planInputPartitions(): Array[InputPartition] = {
+    val all = shares.toVector
+    val slots = math.min(all.size, SparkSession.active.sparkContext.defaultParallelism)
+    Array.tabulate[InputPartition](slots) { k =>
+      InReachPartition((k until all.size by slots).map(all), nowIso, fetcher,
+        pushedTime, debug, required.fieldNames)
+    }
+  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new InReachReaderFactory
@@ -242,7 +256,7 @@ final class InReachMicroBatchStream(scan: InReachScan)
   override def stop(): Unit = ()
 }
 
-final case class InReachPartition(share: graft.model.Share,
+final case class InReachPartition(shares: Seq[graft.model.Share],
                                   nowIso: Option[String], fetcher: InReachSource.Fetcher,
                                   pushedTime: Option[String], debug: Boolean,
                                   requiredFields: Array[String]) extends InputPartition
@@ -259,9 +273,13 @@ final class InReachPartitionReader(p: InReachPartition)
 
   private val utf8: Any => Any = s => UTF8String.fromString(s.asInstanceOf[String])
 
-  private val rows: Iterator[InternalRow] = {
-    val shareId = InReachSource.normalizeShareId(p.share.ShareId)
-    val callSign = p.share.CallSign.getOrElse(shareId) // task.ts:75
+  /** The partition's shares, fetched and parsed lazily one after
+    * another, each under its own `Try`. */
+  private val rows: Iterator[InternalRow] = p.shares.iterator.flatMap(readShare)
+
+  private def readShare(share: graft.model.Share): Iterator[InternalRow] = {
+    val shareId = InReachSource.normalizeShareId(share.ShareId)
+    val callSign = share.CallSign.getOrElse(shareId) // task.ts:75
     val now = p.nowIso.map(Instant.parse).getOrElse(Instant.now())
     // pushdown: the tighter of the fixed lookback and any pushed
     // time filter wins (server's d1 is ≥-inclusive)
@@ -273,7 +291,7 @@ final class InReachPartitionReader(p: InReachPartition)
     Try {
       val body = p.fetcher(
         InReachSource.feedUrl(shareId, now, effectiveLookbackMin),
-        p.share.Password) // basic-auth header, task.ts:84-87
+        share.Password) // basic-auth header, task.ts:84-87
       if (p.debug) System.err.println( // reference DEBUG, task.ts:190-192
         s"FEED-DEBUG: $callSign: fetched ${body.length} chars (d1 start $effectiveStart)")
       KmlParser.parse(body, shareId, callSign)

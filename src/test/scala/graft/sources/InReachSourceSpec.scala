@@ -5,26 +5,35 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.io.IOException
 import java.net.InetSocketAddress
+import java.net.http.HttpTimeoutException
 import java.nio.charset.StandardCharsets.UTF_8
+import java.time.Duration
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 /** [[InReachSource.httpFetcher]] against a loopback JDK `HttpServer`
-  * (no network): a 2xx body comes back as is, any other status throws
-  * without the share's password or auth header in the message. */
+  * (no network): a 2xx body comes back as is, any other status or a
+  * server that never answers throws without the share's password or
+  * auth header in the message. */
 class InReachSourceSpec extends AnyFunSuite {
 
-  /** Serves `/<status>` with that status and a short body, and records
-    * the last Authorization header it saw. */
+  /** Serves `/<status>` with that status and a short body; `/hang`
+    * reads the request and sends nothing until `body` returns. */
   def withServer[T](body: String => T): T = {
+    val release = new CountDownLatch(1)
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/", (ex: HttpExchange) => try {
-      val status = ex.getRequestURI.getPath.stripPrefix("/").toInt
-      val bytes = s"body $status".getBytes(UTF_8)
-      ex.sendResponseHeaders(status, bytes.length.toLong)
-      ex.getResponseBody.write(bytes)
+      val path = ex.getRequestURI.getPath.stripPrefix("/")
+      if (path == "hang") release.await(60, TimeUnit.SECONDS)
+      else {
+        val status = path.toInt
+        val bytes = s"body $status".getBytes(UTF_8)
+        ex.sendResponseHeaders(status, bytes.length.toLong)
+        ex.getResponseBody.write(bytes)
+      }
     } finally ex.close())
     server.start()
     try body(s"http://127.0.0.1:${server.getAddress.getPort}")
-    finally server.stop(0)
+    finally { release.countDown(); server.stop(0) }
   }
 
   test("httpFetcher returns the body of a 200") {
@@ -43,6 +52,21 @@ class InReachSourceSpec extends AnyFunSuite {
         assert(!err.getMessage.contains("s3cret-pw"))
         assert(!err.getMessage.contains(InReachSource.basicAuth("s3cret-pw").stripPrefix("Basic ")))
       }
+    }
+  }
+
+  test("httpFetcher gives up on a server that never answers, naming no credentials") {
+    val fetch = InReachSource.httpFetcherWithin(Duration.ofSeconds(5), Duration.ofMillis(300))
+    withServer { base =>
+      val t0 = System.nanoTime()
+      val err = intercept[HttpTimeoutException] {
+        fetch(s"$base/hang?d1=x", Some("s3cret-pw"))
+      }
+      val waitedMs = (System.nanoTime() - t0) / 1000000
+      assert(waitedMs < 5000, s"timed out after $waitedMs ms")
+      assert(!err.toString.contains("s3cret-pw"), err.toString)
+      assert(!err.toString.contains(InReachSource.basicAuth("s3cret-pw").stripPrefix("Basic ")),
+        err.toString)
     }
   }
 }

@@ -33,6 +33,80 @@ class InReachDataSourceSpec extends SparkSpec {
     }
   }
 
+  /** Feeds by share id: the `i`-th share serves `i + 1` placemarks of
+    * its own devices. */
+  def numberedFeeds(ids: Seq[String]): Map[String, String] = ids.zipWithIndex.map { case (s, i) =>
+    s -> PipelineFixtures.doc((0 to i).map(j =>
+      PipelineFixtures.placemark(s"$i-$j", "2026-08-12T05:20:00Z")).mkString)
+  }.toMap
+
+  def rowsPerShare(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+    df.groupBy("shareId").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  test("more shares than slots: one partition per slot, shares dealt round-robin, each read once") {
+    val ids = (0 until 10).map(i => s"s$i")
+    withFetcher(PipelineFixtures.serving(numberedFeeds(ids))) { id =>
+      val df = spark.read.format("inreach")
+        .option("shares", ids.mkString(","))
+        .option("now", "2026-08-12T05:30:00Z")
+        .option("fetcher", id)
+        .load()
+      assert(df.rdd.getNumPartitions == 4) // SparkSpec runs local[4]
+      assert(rowsPerShare(df) == ids.zipWithIndex.map { case (s, i) => s -> (i + 1L) }.toMap)
+      val imeis = df.select(element_at(col("extended"), "IMEI")).collect().map(_.getString(0))
+      assert(imeis.length == 55 && imeis.distinct.length == 55)
+    }
+    val planned = new InReachScan(ids.map(graft.model.Share(_)), None,
+      PipelineFixtures.fetcher, None, false, InReachDataSource.schema)
+      .planInputPartitions().map(_.asInstanceOf[InReachPartition].shares.map(_.ShareId))
+    assert(planned.toSeq == Seq(Seq("s0", "s4", "s8"), Seq("s1", "s5", "s9"),
+      Seq("s2", "s6"), Seq("s3", "s7")))
+  }
+
+  test("a failing share drops only its own rows, not its partition-mates'") {
+    // ghost (no feed: its fetch throws) sits at index 1, sharing its
+    // partition with s4 and s8 on 4 slots
+    withFetcher(PipelineFixtures.serving(numberedFeeds((0 until 9).map(i => s"s$i")))) { id =>
+      val shares = Seq("s0", "ghost", "s2", "s3", "s4", "s5", "s6", "s7", "s8")
+      val df = spark.read.format("inreach")
+        .option("shares", shares.mkString(","))
+        .option("now", "2026-08-12T05:30:00Z")
+        .option("fetcher", id)
+        .load()
+      assert(df.rdd.getNumPartitions == 4)
+      assert(rowsPerShare(df) ==
+        Map("s0" -> 1L, "s2" -> 3L, "s3" -> 4L, "s4" -> 5L, "s5" -> 6L,
+          "s6" -> 7L, "s7" -> 8L, "s8" -> 9L))
+    }
+  }
+
+  test("two password-protected shares in one partition each send their own password") {
+    // p1 and p2 are shares 0 and 4 of 5: one partition on 4 slots
+    val passwords = Map("p1" -> "pw-one", "p2" -> "pw-two")
+    val feeds = numberedFeeds(Seq("p1", "s1", "s2", "s3", "p2"))
+    val guarded: InReachSource.Fetcher = (url, pw) => {
+      val share = PipelineFixtures.shareIdOf(url)
+      if (passwords.get(share).forall(p => pw.contains(p))) feeds(share)
+      else throw new RuntimeException("HTTP 401 Unauthorized")
+    }
+    withFetcher(guarded) { id =>
+      val df = spark.read.format("inreach")
+        .option("shares", "p1,s1,s2,s3,p2")
+        .option("share.p1.password", "pw-one")
+        .option("share.p1.callsign", "One")
+        .option("share.p2.password", "pw-two")
+        .option("share.p2.callsign", "Two")
+        .option("now", "2026-08-12T05:30:00Z")
+        .option("fetcher", id)
+        .load()
+      assert(df.rdd.getNumPartitions == 4)
+      val callSigns = df.groupBy("shareId", "callSign").count().collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).sorted.toSeq
+      assert(callSigns == Seq(("p1", "One", 1L), ("p2", "Two", 5L),
+        ("s1", "s1", 2L), ("s2", "s2", 3L), ("s3", "s3", 4L)))
+    }
+  }
+
   test("an unknown fetcher id fails at load() and names the id") {
     val err = intercept[IllegalArgumentException] {
       spark.read.format("inreach")
