@@ -1,11 +1,14 @@
 package graft.sources
 
 import java.io.IOException
-import java.net.URI
-import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.net.http.{HttpConnectTimeoutException, HttpTimeoutException}
+import java.net.{HttpURLConnection, SocketTimeoutException, URI}
+import java.nio.charset.Charset
+import java.nio.charset.StandardCharsets.UTF_8
 import java.time.format.DateTimeFormatter
 import java.time.{Duration, Instant}
-import java.util.Base64
+import java.util.{Base64, Locale}
+import scala.util.Try
 
 /** The inReach feed's pure helpers and its fetch seam (SURVEY.md §2.1
   * S1–S8). The source itself is [[graft.sources.v2.InReachDataSource]]
@@ -18,6 +21,13 @@ import java.util.Base64
   * `Fetcher` is the networkless test seam (SURVEY.md §7.1): production
   * uses [[InReachSource.httpFetcher]], tests inject KML strings.
   * Fetchers must be Serializable — they run inside executor tasks.
+  *
+  * `httpFetcher` makes one plain GET per share over one
+  * `HttpURLConnection` of its own, sent with `Connection: close`: no
+  * connection is reused, because a reused one can wait out the
+  * server's delayed ACK on every small feed, and no thread is started.
+  * Its read timeout bounds each read, not the whole response; the body
+  * is decoded with the `Content-Type` charset, else UTF-8.
   */
 object InReachSource {
 
@@ -51,33 +61,72 @@ object InReachSource {
   /** Bound of the TCP connect of one feed fetch. */
   val ConnectTimeout: Duration = Duration.ofSeconds(10)
 
-  /** Bound of the wait for one feed's response. The shares of a scan
-    * partition are fetched one after another, so a hung share holds
-    * back the ones queued behind it for at most this long. */
+  /** Bound of each wait for bytes of one feed's response: for the
+    * status line and headers, then for every read of the body. A
+    * server that keeps trickling bytes is not cut off by it. The
+    * shares of a scan partition are fetched one after another, so a
+    * share that hangs holds back the ones queued behind it for about
+    * this long. */
   val RequestTimeout: Duration = Duration.ofSeconds(30)
 
-  /** Production fetcher (java.net.http), bounded by [[ConnectTimeout]]
-    * and [[RequestTimeout]]. A non-2xx status throws (`HTTP <code> for
-    * share feed`, naming neither the URL nor the credentials), so a
-    * 401 or 500 error page never reaches the parser; a timeout throws
-    * the JDK's `HttpTimeoutException`. The source's failure isolation
-    * turns either into no rows for that share plus a `FEED:` line. */
+  /** Largest feed body the fetcher reads; a longer one fails that
+    * share. A fleet share with thousands of placemarks is a few MB. */
+  val MaxFeedBytes: Int = 64 << 20
+
+  /** Production fetcher: one plain HTTP/1.1 GET (reference
+    * `task.ts:78-90`) over a connection of its own, bounded by
+    * [[ConnectTimeout]], [[RequestTimeout]] and [[MaxFeedBytes]].
+    * A non-2xx status throws (`HTTP <code> for share feed`, naming
+    * neither the URL nor the credentials), so a 401 or 500 error page
+    * never reaches the parser, and a redirect is not followed; a
+    * timeout throws the JDK's `HttpTimeoutException`
+    * (`HttpConnectTimeoutException` for the connect); a longer body
+    * throws `feed body over <N> bytes`. The body is decoded with the
+    * charset its `Content-Type` names, UTF-8 when it names none or an
+    * unknown one. The source's failure isolation turns any of these
+    * into no rows for that share plus a `FEED:` line. */
   val httpFetcher: Fetcher = httpFetcherWithin(ConnectTimeout, RequestTimeout)
 
-  /** [[httpFetcher]] with the given bounds. One `HttpClient` per call:
-    * a client shared across a partition's fetches reuses keep-alive
-    * connections, which against a server that writes headers and body
-    * separately waits out the ~40 ms delayed ACK on every request.
-    * Defined in an object so the closure captures only the two
-    * durations and stays serializable. */
-  private[sources] def httpFetcherWithin(connect: Duration, request: Duration): Fetcher =
+  /** [[httpFetcher]] with the given bounds. Each call opens one TCP
+    * connection through the JVM's default proxy selection, sends
+    * `Connection: close` and disconnects when done, so no connection
+    * is ever reused and no thread is started. Reuse is what hurts: a
+    * kept-alive connection to a server that writes headers and body
+    * separately without TCP_NODELAY waits out the ~40 ms delayed ACK
+    * on every small response. Defined in an object so the closure
+    * captures only the bounds and stays serializable. */
+  private[sources] def httpFetcherWithin(connect: Duration, request: Duration,
+                                         maxBytes: Int = MaxFeedBytes): Fetcher =
     (url: String, password: Option[String]) => {
-      val client = HttpClient.newBuilder().connectTimeout(connect).build()
-      val builder = HttpRequest.newBuilder(URI.create(url)).timeout(request).GET()
-      password.foreach(p => builder.header("Authorization", basicAuth(p)))
-      val response = client.send(builder.build(), HttpResponse.BodyHandlers.ofString())
-      if (response.statusCode / 100 != 2)
-        throw new IOException(s"HTTP ${response.statusCode} for share feed")
-      response.body()
+      val conn = URI.create(url).toURL.openConnection().asInstanceOf[HttpURLConnection]
+      try {
+        conn.setConnectTimeout(connect.toMillis.toInt)
+        conn.setReadTimeout(request.toMillis.toInt)
+        conn.setInstanceFollowRedirects(false)
+        conn.setRequestProperty("Connection", "close")
+        password.foreach(p => conn.setRequestProperty("Authorization", basicAuth(p)))
+        try conn.connect()
+        catch { case _: SocketTimeoutException =>
+          throw new HttpConnectTimeoutException("HTTP connect timed out") }
+        try {
+          val status = conn.getResponseCode
+          if (status / 100 != 2) throw new IOException(s"HTTP $status for share feed")
+          val in = conn.getInputStream
+          val bytes = try in.readNBytes(maxBytes + 1) finally in.close()
+          if (bytes.length > maxBytes) throw new IOException(s"feed body over $maxBytes bytes")
+          new String(bytes, charsetOf(conn.getContentType))
+        } catch { case _: SocketTimeoutException =>
+          throw new HttpTimeoutException("request timed out") }
+      } finally conn.disconnect()
     }
+
+  /** The `charset` parameter of a `Content-Type` value, or UTF-8 when
+    * there is none or it names no charset this JVM knows (as the JDK's
+    * `BodyHandlers.ofString` decodes). */
+  private def charsetOf(contentType: String): Charset =
+    Option(contentType).toSeq.flatMap(_.split(';').drop(1)).map(_.trim)
+      .collectFirst { case p if p.toLowerCase(Locale.ROOT).startsWith("charset=") =>
+        p.drop("charset=".length).trim.stripPrefix("\"").stripSuffix("\"") }
+      .flatMap(name => Try(Charset.forName(name)).toOption)
+      .getOrElse(UTF_8)
 }
