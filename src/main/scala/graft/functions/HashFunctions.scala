@@ -84,15 +84,6 @@ object HashFunctions {
   def baseHash30(s: Column): Column =
     conv(substring(md5(s), 1, 15), 16, 10).cast("long").bitwiseAND(lit(MinhashMask))
 
-  /** ENGINE-PRIVATE 30-bit base hash (xxhash64, Spark-native codegen):
-    * NOT oracle-reproducible — exists solely so [[graft.HashProfile]]
-    * can PRICE the md5 determinism tax (SCALING.md round 11: what a
-    * single-engine production deployment would reclaim by dropping
-    * cross-engine replayability). Every registered query stays on
-    * [[baseHash30]]; nothing in SparkEntry may reference this. */
-  def xxBase30(s: Column): Column =
-    xxhash64(s).bitwiseAND(lit(MinhashMask))
-
   /** Permuted hash i of a base hash. */
   def affine(h: Column, i: Int): Column =
     (lit(MinhashA(i)) * h + lit(MinhashB(i))) % lit(MinhashP)

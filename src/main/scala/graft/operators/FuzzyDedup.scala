@@ -125,10 +125,9 @@ object FuzzyDedup {
     * + k affine permutations) and the min-aggregate are whole-stage-
     * codegen'd with map-side partial aggregation — same values, an
     * order of magnitude faster, one shuffle keyed on doc_id. */
-  def minhashSignatures(sh: DataFrame, k: Int,
-                        base: Column => Column = baseHash30): DataFrame =
+  def minhashSignatures(sh: DataFrame, k: Int): DataFrame =
     sh.select(col("doc_id"), explode(col("sh")).as("s"))
-      .withColumn("h", base(col("s")))
+      .withColumn("h", baseHash30(col("s")))
       .select(col("doc_id") +: (0 until k).map(i => affine(col("h"), i).as(s"mh$i")): _*)
       .groupBy("doc_id")
       .agg(min(col("mh0")).as("mh0"),
@@ -143,9 +142,8 @@ object FuzzyDedup {
     * connected through downstream Jaccard verification without the
     * quadratic expansion. */
   def lshCandidates(sh: DataFrame, k: Int = 12, bands: Int = 4,
-                    maxBucket: Option[Int] = None,
-                    base: Column => Column = baseHash30): DataFrame =
-    bucketPairs(bandRowsOf(minhashSignatures(sh, k, base), k, bands),
+                    maxBucket: Option[Int] = None): DataFrame =
+    bucketPairs(bandRowsOf(minhashSignatures(sh, k), k, bands),
         Seq("band", "sig"), col("doc_id"), maxBucket,
         starOnOverflow = true)
       .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
@@ -271,12 +269,11 @@ object FuzzyDedup {
   def minhashNearDups(docs: DataFrame, idCol: String = "doc_id",
                       textCol: String = "text", n: Int = 3, k: Int = 12,
                       bands: Int = 4, threshold: Double = 0.8,
-                      maxBucket: Int = Int.MaxValue,
-                      base: Column => Column = baseHash30): DataFrame = {
+                      maxBucket: Int = Int.MaxValue): DataFrame = {
     val sh = shingled(docs, idCol, textCol, n)
     val cand =
-      if (maxBucket == Int.MaxValue) lshCandidates(sh, k, bands, None, base)
-      else bucketPairs(bandRowsOf(minhashSignatures(sh, k, base), k, bands),
+      if (maxBucket == Int.MaxValue) lshCandidates(sh, k, bands, None)
+      else bucketPairs(bandRowsOf(minhashSignatures(sh, k), k, bands),
           Seq("band", "sig"), col("doc_id"), Some(maxBucket),
           starOnOverflow = false)
         .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))

@@ -45,12 +45,15 @@ object InReachSource {
   val LookbackMinutes: Long = 30L
 
   /** Feed URL with the lookback pushed down as `d1`
-    * (reference `task.ts:78-82`). */
+    * (reference `task.ts:78-82`): the window's start is `now` less
+    * [[LookbackMinutes]], or `from` when that is later, sent as that
+    * exact instant (the server's `d1` is ≥-inclusive, so no fix at or
+    * after `from` is dropped). */
   def feedUrl(shareId: String, now: Instant,
-              lookbackMinutes: Long = LookbackMinutes): String = {
-    val d1 = DateTimeFormatter.ISO_INSTANT.format(
-      now.minusSeconds(lookbackMinutes * 60))
-    s"https://share.garmin.com/Feed/Share/$shareId?d1=$d1"
+              from: Option[Instant] = None): String = {
+    val lookbackStart = now.minusSeconds(LookbackMinutes * 60)
+    val start = from.filter(_.isAfter(lookbackStart)).getOrElse(lookbackStart)
+    s"https://share.garmin.com/Feed/Share/$shareId?d1=${DateTimeFormatter.ISO_INSTANT.format(start)}"
   }
 
   /** Basic-auth header value for password-protected shares:

@@ -127,16 +127,16 @@ final class InReachScanBuilder(options: CaseInsensitiveStringMap,
     * ≥-inclusive, i.e. approximate for `>`), so Spark re-applies them
     * post-scan — the same belt-and-braces contract file sources use. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val accepted = filters.filter {
-      case GreaterThan("whenRaw", v: String) => Try(Instant.parse(v)).isSuccess
-      case GreaterThanOrEqual("whenRaw", v: String) => Try(Instant.parse(v)).isSuccess
-      case _ => false
+    val accepted = filters.flatMap { f =>
+      val bound = f match {
+        case GreaterThan("whenRaw", v: String) => Some(v)
+        case GreaterThanOrEqual("whenRaw", v: String) => Some(v)
+        case _ => None
+      }
+      bound.flatMap(v => Try(Instant.parse(v)).toOption).map(f -> _)
     }
-    pushedTime = accepted.collect {
-      case GreaterThan("whenRaw", v: String) => Instant.parse(v)
-      case GreaterThanOrEqual("whenRaw", v: String) => Instant.parse(v)
-    }.sorted(Ordering.by[Instant, Long](_.toEpochMilli)).lastOption
-    pushed = accepted
+    pushedTime = accepted.map(_._2).maxOption
+    pushed = accepted.map(_._1)
     filters // all residual: source pushdown narrows I/O, Spark keeps exactness
   }
   override def pushedFilters(): Array[Filter] = pushed
@@ -156,16 +156,19 @@ final class InReachScanBuilder(options: CaseInsensitiveStringMap,
 
   override def build(): Scan = new InReachScan(
     shares = shareSpecs,
-    nowIso = Option(options.get("now")),
+    now = Option(options.get("now")).map(Instant.parse),
     fetcher = fetcher,
-    pushedTime = pushedTime.map(_.toString),
+    pushedTime = pushedTime,
     debug = options.getBoolean("debug", false),
     required = required)
 }
 
+/** `now` is the `now` option; without it each planned round reads
+  * the driver's clock once, so every share of the round asks for the
+  * same window and each microbatch round for a fresh one. */
 final class InReachScan(shares: Seq[graft.model.Share],
-                        nowIso: Option[String], fetcher: InReachSource.Fetcher,
-                        pushedTime: Option[String], debug: Boolean,
+                        now: Option[Instant], fetcher: InReachSource.Fetcher,
+                        pushedTime: Option[Instant], debug: Boolean,
                         required: StructType) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -178,8 +181,9 @@ final class InReachScan(shares: Seq[graft.model.Share],
   override def planInputPartitions(): Array[InputPartition] = {
     val all = shares.toVector
     val slots = math.min(all.size, SparkSession.active.sparkContext.defaultParallelism)
+    val roundNow = now.getOrElse(Instant.now())
     Array.tabulate[InputPartition](slots) { k =>
-      InReachPartition((k until all.size by slots).map(all), nowIso, fetcher,
+      InReachPartition((k until all.size by slots).map(all), roundNow, fetcher,
         pushedTime, debug, required.fieldNames)
     }
   }
@@ -257,8 +261,8 @@ final class InReachMicroBatchStream(scan: InReachScan)
 }
 
 final case class InReachPartition(shares: Seq[graft.model.Share],
-                                  nowIso: Option[String], fetcher: InReachSource.Fetcher,
-                                  pushedTime: Option[String], debug: Boolean,
+                                  now: Instant, fetcher: InReachSource.Fetcher,
+                                  pushedTime: Option[Instant], debug: Boolean,
                                   requiredFields: Array[String]) extends InputPartition
 
 final class InReachReaderFactory extends PartitionReaderFactory {
@@ -280,20 +284,13 @@ final class InReachPartitionReader(p: InReachPartition)
   private def readShare(share: graft.model.Share): Iterator[InternalRow] = {
     val shareId = InReachSource.normalizeShareId(share.ShareId)
     val callSign = share.CallSign.getOrElse(shareId) // task.ts:75
-    val now = p.nowIso.map(Instant.parse).getOrElse(Instant.now())
     // pushdown: the tighter of the fixed lookback and any pushed
     // time filter wins (server's d1 is ≥-inclusive)
-    val lookbackStart = now.minusSeconds(InReachSource.LookbackMinutes * 60)
-    val effectiveStart = p.pushedTime.map(Instant.parse)
-      .filter(_.isAfter(lookbackStart)).getOrElse(lookbackStart)
-    val effectiveLookbackMin =
-      math.max(0L, (now.toEpochMilli - effectiveStart.toEpochMilli) / 60000L)
+    val url = InReachSource.feedUrl(shareId, p.now, p.pushedTime)
     Try {
-      val body = p.fetcher(
-        InReachSource.feedUrl(shareId, now, effectiveLookbackMin),
-        share.Password) // basic-auth header, task.ts:84-87
+      val body = p.fetcher(url, share.Password) // basic-auth header, task.ts:84-87
       if (p.debug) System.err.println( // reference DEBUG, task.ts:190-192
-        s"FEED-DEBUG: $callSign: fetched ${body.length} chars (d1 start $effectiveStart)")
+        s"FEED-DEBUG: $callSign: fetched ${body.length} chars from $url")
       KmlParser.parse(body, shareId, callSign)
     }.fold(
       err => { System.err.println(s"FEED: $callSign: $err"); Iterator.empty },

@@ -876,9 +876,10 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("cross-layout identity IN-REGIME: partitioned and bucketed serves return identical rows at cells=64") {
-    // LayoutProfile's interchangeability require(), promoted to CI at
-    // an in-regime cell count (cells=64 ≫ 16 buckets, sf0.01 corpus —
-    // VERDICT r12 item 6): the registered q476-vs-q326 oracle equality
+    // The interchangeability require() of the deleted LayoutProfile
+    // main (`git show 99a2547:src/main/scala/graft/LayoutProfile.scala`),
+    // kept here in CI at an in-regime cell count (cells=64 ≫ 16
+    // buckets, sf0.01 corpus — VERDICT r12 item 6): the registered q476-vs-q326 oracle equality
     // covers only the 8-cell parity build, the layout's degenerate
     // regime. Identical ROWS from both physical layouts is the
     // property the production story swaps layouts on.

@@ -135,6 +135,36 @@ class InReachDataSourceSpec extends SparkSpec {
     }
   }
 
+  test("a pushed whenRaw ≥ t filter asks the server for fixes from exactly t") {
+    val key = s"d1-${java.util.UUID.randomUUID()}"
+    withFetcher(InReachDataSourceSpec.recording(key)) { id =>
+      spark.read.format("inreach")
+        .option("shares", "alpha")
+        .option("now", "2026-08-12T05:30:00Z")
+        .option("fetcher", id)
+        .load()
+        .filter(col("whenRaw") >= "2026-08-12T05:06:30Z")
+        .collect()
+    }
+    // not the next whole minute (05:07:00), which would drop the fixes
+    // in [05:06:30, 05:07:00) before Spark's residual filter sees them
+    assert(InReachDataSourceSpec.urls(key) ==
+      Seq("https://share.garmin.com/Feed/Share/alpha?d1=2026-08-12T05:06:30Z"))
+  }
+
+  test("without a now option, every share of one scan asks for the same window") {
+    val key = s"clock-${java.util.UUID.randomUUID()}"
+    withFetcher(InReachDataSourceSpec.recording(key)) { id =>
+      spark.read.format("inreach")
+        .option("shares", "alpha,beta,gamma")
+        .option("fetcher", id)
+        .load()
+        .collect()
+    }
+    val d1s = InReachDataSourceSpec.urls(key).map(_.split("d1=")(1))
+    assert(d1s.size == 3 && d1s.distinct.size == 1, s"d1 per share: $d1s")
+  }
+
   test("column pruning reaches the scan: ReadSchema drops unselected fields") {
     withFetcher() { id =>
       val df = spark.read.format("inreach")
@@ -319,4 +349,20 @@ class InReachDataSourceSpec extends SparkSpec {
     assert(deduped.select("id").collect().map(_.getString(0)).sorted.toSeq ==
       Seq("inreach-111", "inreach-222", "inreach-333"))
   }
+}
+
+object InReachDataSourceSpec {
+  private val recorded =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.ConcurrentLinkedQueue[String]]()
+
+  /** A fixture fetcher that also records each URL it is asked for
+    * under `key`. The record lives here, not in the fetcher, because
+    * each partition reads its own deserialized copy of the fetcher. */
+  def recording(key: String): InReachSource.Fetcher = {
+    recorded.put(key, new java.util.concurrent.ConcurrentLinkedQueue[String]())
+    (url, pw) => { recorded.get(key).add(url); PipelineFixtures.fetcher(url, pw) }
+  }
+
+  /** The URLs recorded under `key`, in the order they were asked for. */
+  def urls(key: String): Seq[String] = recorded.get(key).asScala.toSeq
 }
