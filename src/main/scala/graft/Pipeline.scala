@@ -25,6 +25,16 @@ import java.util.{Locale, UUID}
   * embeds the globally-unique IMEI this is semantically equivalent
   * and strictly more correct (SURVEY.md §2.4 scope note).
   *
+  * The projected rows are hash-partitioned by `id` into one partition
+  * per task slot before the dedup, so the dedup's one shuffle is that
+  * exchange and its width does not follow the caller's
+  * `spark.sql.shuffle.partitions` (200 in a plain session: map output
+  * for 200 reduce partitions, each run, for a few thousand rows). AQE
+  * leaves a shuffle of a given count alone, so the aggregate and the
+  * sink's serialization run on every slot. The cost is the map-side
+  * partial aggregation: every projected row is shuffled, not one per
+  * (map partition, key), which one run's feeds afford.
+  *
   * Closures cannot ride string options, so the fetcher and the post
   * effect pass through the sources' registries under a per-call id.
   * The fetcher entry lives only for the `load()` that resolves it; the
@@ -61,6 +71,7 @@ object Pipeline {
       .load()
     finally InReachDataSource.fetchers.remove(fetcherId)
     val projected = FeatureProjection.project(raw.as(Encoders.product[RawPlacemark]))
+      .repartition(spark.sparkContext.defaultParallelism, col("id"))
     Dedup.latestPerKey(projected, Seq("id"), col("properties").getField("time"))
   }
 

@@ -10,9 +10,13 @@ import org.apache.spark.sql.{Column, DataFrame}
   *
   * Scale notes: both forms are single-shuffle on the key.
   * `max_by`-style aggregation gets Spark's partial (map-side)
-  * aggregation for free, so at 100 TB the shuffle carries one row per
-  * (partition, key), not one per input row — better than the
-  * window-rank formulation when keys repeat a lot. It is a sort
+  * aggregation for free where Spark plans the exchange, so at 100 TB
+  * the shuffle carries one row per (partition, key), not one per input
+  * row — better than the window-rank formulation when keys repeat a
+  * lot. An input already hash-partitioned on the key needs no exchange
+  * here, so its rows were shuffled before any partial step: `Pipeline`
+  * repartitions its projected rows by `id` first, which fixes the
+  * shuffle's width at one partition per slot. It is a sort
   * aggregate, not a hash aggregate (see [[latestPerKey]]). The window variant
   * is kept for callers that need the *whole* surviving row without
   * struct-repacking and for deterministic tiebreaks.
@@ -27,8 +31,10 @@ object Dedup {
     * — pass a unique column (e.g. an id) for full determinism.
     *
     * `max_by` (not window-rank) so Spark plans map-side partial
-    * aggregation: at 100 TB the shuffle carries one row per (map
-    * partition, key), not one row per input row. The plan is a
+    * aggregation where it plans the exchange: at 100 TB the shuffle
+    * carries one row per (map partition, key), not one row per input
+    * row. `Pipeline` repartitions by the key before calling this, so
+    * there the exchange comes first and carries every row. The plan is a
     * `SortAggregate` with a `Sort` before the partial and before the
     * final aggregate: the struct buffer of `max_by` is not a mutable
     * fixed-width type, so neither hash aggregate applies. The row

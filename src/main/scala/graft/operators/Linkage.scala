@@ -132,9 +132,9 @@ object Linkage {
     require(agreeCols.nonEmpty && agreeCols.size <= 10 && iters >= 1)
     val pat = pairs.groupBy(agreeCols.map(col): _*)
       .agg(count(lit(1)).as("_cnt"))
-    var params = broadcast(pat.sparkSession.range(1).select(
+    var params = pat.sparkSession.range(1).select(
       lit(lambda0).as("_lam") +: agreeCols.indices.flatMap(i =>
-        Seq(lit(m0).as(s"_m$i"), lit(u0).as(s"_u$i"))): _*))
+        Seq(lit(m0).as(s"_m$i"), lit(u0).as(s"_u$i"))): _*)
     // quantize the BOUNDED p (∈[0,1], so p·10¹² ≤ 10¹² fits long),
     // then multiply by the exact count in decimal(38,0) — the old
     // floor(cnt·p·10¹²) form saturated Long.MaxValue once a pattern
@@ -149,7 +149,7 @@ object Linkage {
       val pu = agreeCols.zipWithIndex.map { case (c, i) =>
         when(col(c), col(s"_u$i")).otherwise(lit(1.0) - col(s"_u$i")) }
         .foldLeft(lit(1.0) - col("_lam"))(_ * _)
-      val wp = pat.crossJoin(params).withColumn("_p", pm / (pm + pu))
+      val wp = pat.crossJoin(broadcast(params)).withColumn("_p", pm / (pm + pu))
       val cp = q12(col("_p")) * col("_cnt")
       val cu = q12(lit(1.0) - col("_p")) * col("_cnt")
       val aggs = Seq(
@@ -160,13 +160,13 @@ object Linkage {
           sum(when(col(c), cp).otherwise(zero)).as(s"_sg$i"),
           sum(when(col(c), cu).otherwise(zero)).as(s"_sug$i")) }
       val red = wp.agg(aggs.head, aggs.tail: _*)
-      params = broadcast(red.select(
+      params = red.select(
         ((col("_sp").cast("double") / 1e12) / col("_n")).as("_lam") +:
           agreeCols.indices.flatMap(i => Seq(
             (col(s"_sg$i").cast("double") / col("_sp").cast("double"))
               .as(s"_m$i"),
             (col(s"_sug$i").cast("double") / col("_su").cast("double"))
-              .as(s"_u$i"))): _*))
+              .as(s"_u$i"))): _*)
     }
     agreeCols.zipWithIndex.map { case (c, i) =>
       // degenerate fields (a comparison that never/always agrees

@@ -460,9 +460,9 @@ object Similarity {
     require(numCells >= 1 && multiAssign >= 1 && coarseProbe >= 1)
     val nCoarse = math.max(1, math.sqrt(numCells.toDouble).toInt)
     val fine = ivfSeeds(corpus, numCells, idCol, vecCol)
-    val co = broadcast(ivfSeeds(corpus, nCoarse, idCol, vecCol)
+    val co = ivfSeeds(corpus, nCoarse, idCol, vecCol)
       .select(col("seed_id").as("co_id"), col("sv").as("cov"),
-        col("sn").as("con")))
+        col("sn").as("con"))
     // fine seed → its 2 nearest supercells (bounded: cells × √cells),
     // UNIONED with the identity rows (each coarse seed is a member of
     // its own supercell): cosine ties at rounded 1.0 can otherwise
@@ -470,7 +470,7 @@ object Similarity {
     // supercell empty — and a vector probing only empty supercells
     // would silently drop out of the assignment, a coverage guarantee
     // flat ivfAssign always gives (spec-pinned below)
-    val f2cPairs = fine.crossJoin(co)
+    val f2cPairs = fine.crossJoin(broadcast(co))
       .withColumn("fs",
         round(dot(col("sv"), col("cov")) / (col("sn") * col("con")), 6))
       .groupBy("seed_id")
@@ -486,7 +486,7 @@ object Similarity {
     val vc = corpus
       .select(col(idCol).as("cand_id"), col(vecCol).as("cv"),
         norm(col(vecCol)).as("cn"))
-      .crossJoin(co)
+      .crossJoin(broadcast(co))
       .withColumn("cs",
         round(dot(col("cv"), col("cov")) / (col("cn") * col("con")), 6))
       .groupBy("cand_id")
@@ -1106,8 +1106,10 @@ object Similarity {
   /** The PQ index-build core shared by [[pqCodebook]] (audit surface)
     * and [[ivfPqSearch]] (the composed search, which needs the fitted
     * centroids for ADC scoring, not just the codes). Returns
-    * (codes = (_id, _s, _c, _qd), centroids = (_s, _c, _i, _mx)
-    * broadcast-wrapped — m·k·(dim/m) rows). */
+    * (codes = (_id, _s, _c, _qd), centroids = (_s, _c, _mv) —
+    * m·k·(dim/m) rows, unhinted: a join that reads them broadcasts
+    * them itself, since a hint on a frame a union also reads does
+    * nothing there but log a `HintErrorLogger` warning). */
   /** Quantized L2² between two equal-width double arrays: the SAME
     * ×10¹²-int64 per-coordinate terms the coordinate-exploded
     * formulation summed through a groupBy, folded left-to-right by a
@@ -1157,11 +1159,11 @@ object Similarity {
       .withColumn("_c", row_number().over(
         Window.orderBy(md5Long(col("_sid").cast("string")), col("_sid")))
         .cast("long") - 1)
-    val seedComps = broadcast(subvecs
+    val seedComps = subvecs
       .join(seedIds, col("_id") === col("_sid"))
-      .select(col("_s"), col("_c"), col("_sv").as("_mv")))
+      .select(col("_s"), col("_c"), col("_sv").as("_mv"))
     def assign(comps: DataFrame) = subvecs
-      .join(comps, Seq("_s"))
+      .join(broadcast(comps), Seq("_s"))
       .select(col("_id"), col("_s"), col("_c"),
         qdist12(col("_sv"), col("_mv")).as("_qd"))
       .groupBy("_id", "_s")
@@ -1171,7 +1173,7 @@ object Similarity {
     val a0 = assign(seedComps)
     // refined centroid means re-expand to coordinates ONCE, over the
     // bounded (subspace, code, i) key space, then regroup to arrays
-    val refined = broadcast(subvecs
+    val refined = subvecs
       .join(a0.select("_id", "_s", "_c"), Seq("_id", "_s"))
       .select(col("_s"), col("_c"), posexplode(col("_sv")).as(Seq("_i", "_x")))
       .groupBy("_s", "_c", "_i")
@@ -1181,7 +1183,7 @@ object Similarity {
       .agg(transform(
         array_sort(collect_list(struct(col("_i"), col("_sx"), col("_n")))),
         t => t.getField("_sx").cast("double") / t.getField("_n")
-          / 1000000.0).as("_mv")))
+          / 1000000.0).as("_mv"))
     (assign(refined), refined)
   }
 
@@ -1216,7 +1218,7 @@ object Similarity {
           slice(col("_v"), s * sub + 1, sub).as("sv"))): _*)).as("e"))
       .select(col("_id"), col("e.s").as("_s"),
         transform(col("e.sv"), x => x.cast("double")).as("_sv"))
-    val codesB = subB.join(cents, Seq("_s"))
+    val codesB = subB.join(broadcast(cents), Seq("_s"))
       .select(col("_id"), col("_s"), col("_c"),
         qdist12(col("_sv"), col("_mv")).as("_qd"))
       .groupBy("_id", "_s")

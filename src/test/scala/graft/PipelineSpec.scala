@@ -4,6 +4,10 @@ import graft.model.{EngineConfig, Share}
 import graft.sinks.v2.FeatureCollectionDataSource
 import graft.sources.InReachSource
 import graft.sources.v2.InReachDataSource
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 
 import java.time.Instant
@@ -64,7 +68,7 @@ object PipelineFixtures extends Serializable {
   val now = Instant.parse("2026-08-12T05:30:00Z")
 }
 
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import PipelineFixtures._
 
   test("end-to-end: three deduped features, later fix wins") {
@@ -163,6 +167,36 @@ class PipelineSpec extends SparkSpec {
     assert(ids() == Seq("inreach-111", "inreach-222", "inreach-333"))
     assert(ids() == Seq("inreach-111", "inreach-222", "inreach-333"))
     Pipeline.run(spark, config, fetcher, post = _ => (), now = now)
+    assert(InReachDataSource.fetchers.isEmpty)
+    assert(FeatureCollectionDataSource.posts.isEmpty)
+  }
+
+  test("the dedup shuffles by id into one partition per slot, whatever the session's shuffle partitions") {
+    val child = spark.newSession()
+    child.conf.set("spark.sql.shuffle.partitions", "200")
+    val out = Pipeline.features(child, config, fetcher, now)
+    val rows = out.collect().sortBy(_.getString(0)).toSeq
+    val exchanges = collect(out.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1, out.queryExecution.executedPlan.treeString)
+    val e = exchanges.head
+    assert(e.shuffleOrigin == REPARTITION_BY_NUM)
+    e.outputPartitioning match {
+      case HashPartitioning(Seq(key: AttributeReference), n) =>
+        assert(key.name == "id")
+        assert(n == spark.sparkContext.defaultParallelism)
+      case other => fail(s"dedup exchange partitions as $other")
+    }
+    assert(child.conf.get("spark.sql.shuffle.partitions") == "200")
+    assert(rows == Pipeline.features(spark, config, fetcher, now).collect().sortBy(_.getString(0)).toSeq)
+  }
+
+  test("a failed POST surfaces from run after one attempt and leaves both registries empty") {
+    var calls = 0
+    val err = intercept[RuntimeException](Pipeline.run(spark, config, fetcher,
+      post = _ => { calls += 1; throw new RuntimeException("HTTP 503 from the sink") }, now = now))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == "HTTP 503 from the sink"), err)
+    assert(calls == 1)
     assert(InReachDataSource.fetchers.isEmpty)
     assert(FeatureCollectionDataSource.posts.isEmpty)
   }
