@@ -8,6 +8,12 @@ import org.apache.spark.sql.functions._
   * iterative operator here the loop builds ONE lazy plan (fixed,
   * small iteration count — a query constant), with no driver-side
   * actions inside the loop.
+  *
+  * Broadcast hints: the nodes-sized side tables (ranks, labels,
+  * frontiers, distances) always join hinted `broadcast`. For graphs
+  * past broadcast range, set `spark.sql.optimizer.disableHints=true`
+  * and `spark.sql.autoBroadcastJoinThreshold=-1` on the session: the
+  * analyzer then drops every hint and those joins shuffle instead.
   */
 object Graph {
 
@@ -78,16 +84,13 @@ object Graph {
     *
     * Scale shape: outdegrees are one map-side-combinable count; each
     * iteration is (rank ⋈ edges on src) + one dst-keyed integer sum.
-    * The rank table is nodes-sized — broadcast it while nodes fit
-    * (`broadcastRanks`, the common case: ranks are two columns even
-    * when edges are billions), and the per-iteration cost collapses
-    * to one edge scan + one dst shuffle of (dst, int64) pairs. For
-    * node sets past broadcast range, `broadcastRanks = false` drops
-    * the hint and leaves the rank join to the planner's default
-    * strategy; edges are not pre-partitioned. */
+    * The rank table is nodes-sized and always hinted `broadcast`
+    * (ranks are two columns even when edges are billions), so the
+    * per-iteration cost collapses to one edge scan + one dst shuffle
+    * of (dst, int64) pairs. Past broadcast range, set the two session
+    * confs in the object doc; edges are not pre-partitioned. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 3, damping: Double = 0.85,
-               broadcastRanks: Boolean = true,
                quantScale: Long = 1000000000L): DataFrame = {
     require(iters >= 0 && damping > 0 && damping < 1 && quantScale >= 1)
     val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
@@ -101,10 +104,10 @@ object Graph {
     var ranks = nodes.crossJoin(n)
       .select(col("node"), (lit(1.0) / col("_n")).as("rank"))
     for (_ <- 1 to iters) {
-      val r = if (broadcastRanks) broadcast(ranks) else ranks
       val sums = e
-        .join(r.select(col("node").as("_src"), col("rank")), Seq("_src"))
-        .join(if (broadcastRanks) broadcast(outdeg) else outdeg, Seq("_src"))
+        .join(broadcast(ranks).select(col("node").as("_src"), col("rank")),
+          Seq("_src"))
+        .join(broadcast(outdeg), Seq("_src"))
         .select(col("_dst").as("node"),
           floor(col("rank") / col("_outdeg") * lit(quantScale.toDouble) +
             lit(0.5)).as("_qc"))
@@ -131,13 +134,12 @@ object Graph {
     * Scale shape: per iteration ONE (edge ⋈ label) join on the
     * neighbor endpoint + one (node, label) count with map-side
     * combine + an integer argmax — all label values, no FP anywhere.
-    * The label table is nodes-sized (two columns): broadcast while it
-    * fits; `broadcastLabels = false` only drops the hint.
+    * The label table is nodes-sized (two columns), always hinted
+    * `broadcast`; past broadcast range, set the object doc's confs.
     * Like [[pageRank]], the loop builds one lazy plan with zero
     * driver actions. */
   def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
-                       iters: Int = 3,
-                       broadcastLabels: Boolean = true): DataFrame = {
+                       iters: Int = 3): DataFrame = {
     require(iters >= 1)
     val e = edges.select(col(aCol).as("_a"), col(bCol).as("_b"))
       .filter(col("_a").isNotNull && col("_b").isNotNull).distinct()
@@ -146,9 +148,9 @@ object Graph {
     var labels = sym.select(col("u").as("node")).distinct()
       .withColumn("label", col("node").cast("long"))
     for (_ <- 1 to iters) {
-      val l = if (broadcastLabels) broadcast(labels) else labels
       labels = sym
-        .join(l.select(col("node").as("v"), col("label")), Seq("v"))
+        .join(broadcast(labels).select(col("node").as("v"), col("label")),
+          Seq("v"))
         .groupBy(col("u"), col("label")).agg(count(lit(1)).as("_c"))
         // integer argmax, min-label tiebreak: max(struct(cnt, −label))
         .groupBy(col("u"))
@@ -208,15 +210,14 @@ object Graph {
     * frontier. Integer hops — no FP anywhere, engine-exact.
     *
     * Scale shape: per round ONE (frontier ⋈ edges) join + one
-    * map-side-combinable `min` agg; the frontier is (node)-sized —
-    * broadcast while it fits (`broadcastFrontier`); `false` only drops
-    * the hint, edges are not pre-partitioned. Rounds =
+    * map-side-combinable `min` agg; the frontier is (node)-sized and
+    * always hinted `broadcast` (past broadcast range, set the object
+    * doc's confs); edges are not pre-partitioned. Rounds =
     * `maxDepth`, a query constant: one lazy plan, zero driver
     * actions, nothing persisted. */
   def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
                    seeds: DataFrame, seedCol: String, maxDepth: Int,
-                   directed: Boolean = false,
-                   broadcastFrontier: Boolean = true): DataFrame = {
+                   directed: Boolean = false): DataFrame = {
     require(maxDepth >= 0)
     val e0 = edges.select(col(srcCol).as("_u"), col(dstCol).as("_v"))
       .filter(col("_u").isNotNull && col("_v").isNotNull)
@@ -229,9 +230,8 @@ object Graph {
     for (d <- 1 to maxDepth) {
       val frontier = dist.filter(col("dist") === (d - 1).toLong)
         .select(col("node").as("_u"))
-      val f = if (broadcastFrontier) broadcast(frontier) else frontier
       dist = dist.unionByName(
-          sym.join(f, Seq("_u"))
+          sym.join(broadcast(frontier), Seq("_u"))
             .select(col("_v").as("node"), lit(d.toLong).as("dist")))
         .groupBy("node").agg(min("dist").as("dist"))
     }
@@ -253,15 +253,14 @@ object Graph {
     * Scale shape: unlike BFS, a node's distance can improve after
     * first discovery, so each round relaxes the FULL dist table:
     * one (dist ⋈ edges) join + one map-side-combinable `min` per
-    * round. The dist table is nodes-sized (two columns) — broadcast
-    * while it fits (`broadcastDist`); `false` only drops the hint,
-    * edges are not pre-partitioned. One lazy plan, zero driver
-    * actions. */
+    * round. The dist table is nodes-sized (two columns) and always
+    * hinted `broadcast` (past broadcast range, set the object doc's
+    * confs); edges are not pre-partitioned. One lazy plan, zero
+    * driver actions. */
   def weightedDistances(edges: DataFrame, srcCol: String, dstCol: String,
                         weightCol: String, seeds: DataFrame,
                         seedCol: String, rounds: Int,
-                        directed: Boolean = false,
-                        broadcastDist: Boolean = true): DataFrame = {
+                        directed: Boolean = false): DataFrame = {
     require(rounds >= 0)
     val e0 = edges.select(col(srcCol).as("_u"), col(dstCol).as("_v"),
         col(weightCol).cast("long").as("_w"))
@@ -274,9 +273,9 @@ object Graph {
       .filter(col("node").isNotNull)
       .withColumn("dist", lit(0L))
     for (_ <- 1 to rounds) {
-      val d = if (broadcastDist) broadcast(dist) else dist
       dist = dist.unionByName(
-          sym.join(d.select(col("node").as("_u"), col("dist")), Seq("_u"))
+          sym.join(broadcast(dist).select(col("node").as("_u"), col("dist")),
+              Seq("_u"))
             .select(col("_v").as("node"),
               (col("dist") + col("_w")).as("dist")))
         .groupBy("node").agg(min("dist").as("dist"))
@@ -296,11 +295,11 @@ object Graph {
     * Synchronous deletion + integer degrees ⇒ engine-exact and
     * partitioning-independent. Scale shape: per round one map-side
     * degree count + one semi-join of edges against surviving nodes
-    * (node table is 1 column — broadcast while it fits). One lazy
-    * plan, zero driver actions. */
+    * (node table is 1 column, always hinted `broadcast`; past
+    * broadcast range, set the object doc's confs). One lazy plan,
+    * zero driver actions. */
   def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
-            rounds: Int,
-            broadcastNodes: Boolean = true): DataFrame = {
+            rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1)
     val raw = edges.select(col(aCol).as("_a"), col(bCol).as("_b"))
       .filter(col("_a").isNotNull && col("_b").isNotNull &&
@@ -312,8 +311,7 @@ object Graph {
       deg = live.select(explode(array(col("_u"), col("_v"))).as("node"))
         .groupBy("node").agg(count(lit(1)).as("degree"))
         .filter(col("degree") >= k)
-      val keep = if (broadcastNodes) broadcast(deg.select("node")) else
-        deg.select("node")
+      val keep = broadcast(deg.select("node"))
       live = live
         .join(keep.select(col("node").as("_u")), Seq("_u"), "left_semi")
         .join(keep.select(col("node").as("_v")), Seq("_v"), "left_semi")
@@ -359,29 +357,29 @@ object Graph {
     * pageRank posture (per-iteration quantized normalize) — the
     * scaladoc'd scale path, not a silent overflow.
     *
-    * Scale shape: per round, one edge→score equi-join (scores
-    * broadcast when `broadcastScores`, else shuffle-join on the node
-    * key) and one map-side-combinable sum per side. Totals are 1-row
-    * broadcasts; nothing driver-side. */
+    * Scale shape: per round, one edge→score equi-join (scores always
+    * hinted `broadcast`; past broadcast range, the object doc's confs
+    * make it a shuffle join on the node key) and one
+    * map-side-combinable sum per side. Totals are 1-row broadcasts;
+    * nothing driver-side. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-           iters: Int = 2, broadcastScores: Boolean = true): DataFrame = {
+           iters: Int = 2): DataFrame = {
     require(iters >= 1)
     val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
       .filter(col("_src").isNotNull && col("_dst").isNotNull).distinct()
     val nodes = e.select(col("_src").as("node"))
       .union(e.select(col("_dst"))).distinct()
-    val bc = (df: DataFrame) => if (broadcastScores) broadcast(df) else df
     var hub = nodes.select(col("node"), lit(1L).as("hub"))
     var auth = nodes.select(col("node"), lit(0L).as("auth"))
     for (_ <- 1 to iters) {
       auth = nodes.join(
-          e.join(bc(hub.select(col("node").as("_src"), col("hub"))),
+          e.join(broadcast(hub.select(col("node").as("_src"), col("hub"))),
               Seq("_src"))
             .groupBy(col("_dst").as("node")).agg(sum("hub").as("_a")),
           Seq("node"), "left")
         .select(col("node"), coalesce(col("_a"), lit(0L)).as("auth"))
       hub = nodes.join(
-          e.join(bc(auth.select(col("node").as("_dst"), col("auth"))),
+          e.join(broadcast(auth.select(col("node").as("_dst"), col("auth"))),
               Seq("_dst"))
             .groupBy(col("_src").as("node")).agg(sum("auth").as("_h")),
           Seq("node"), "left")
@@ -713,14 +711,14 @@ object Graph {
     * Integer-only, partitioning-independent (the H-index is an
     * order statistic — ties don't matter: min(value, rank) is
     * invariant under permuting equal values). Scale shape: each
-    * round is one values ⋈ adjacency join (values is nodes-sized —
-    * broadcast while it fits) plus ONE shuffle on node for the
+    * round is one values ⋈ adjacency join (values is nodes-sized,
+    * always hinted `broadcast`; past broadcast range, set the object
+    * doc's confs) plus ONE shuffle on node for the
     * rank window; per-node work is its degree, total Σdeg = 2m per
     * round, hub skew bounded by the max-degree partition exactly
     * like any degree histogram. */
   def coreness(edges: DataFrame, aCol: String, bCol: String,
-               rounds: Int,
-               broadcastValues: Boolean = true): DataFrame = {
+               rounds: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(rounds >= 1)
     val raw = edges.select(col(aCol).as("_a"), col(bCol).as("_b"))
@@ -732,9 +730,8 @@ object Graph {
       .union(und.select(col("_v"), col("_u")))
     var vals = adj.groupBy("node").agg(count(lit(1)).as("value"))
     for (_ <- 1 to rounds) {
-      val v = if (broadcastValues) broadcast(vals) else vals
       val nbv = adj.join(
-        v.select(col("node").as("nb"), col("value").as("_nv")), Seq("nb"))
+        broadcast(vals).select(col("node").as("nb"), col("value").as("_nv")), Seq("nb"))
       val w = Window.partitionBy("node")
         .orderBy(col("_nv").desc, col("nb"))
       vals = nbv
@@ -762,13 +759,13 @@ object Graph {
     *
     * Scale shape: state is ≤ |seeds|·reached rows — the sample rate
     * is the knob that keeps it linear in nodes; per round one
-    * frontier ⋈ edges join (frontier broadcast while it fits) and a
+    * frontier ⋈ edges join (frontier always hinted `broadcast`; past
+    * broadcast range, set the object doc's confs) and a
     * map-side-combinable integer min. One lazy plan. */
   def harmonicCentrality(edges: DataFrame, srcCol: String,
                          dstCol: String, seeds: DataFrame,
                          seedCol: String, maxDepth: Int,
-                         directed: Boolean = false,
-                         broadcastFrontier: Boolean = true): DataFrame = {
+                         directed: Boolean = false): DataFrame = {
     require(maxDepth >= 1)
     val e0 = edges.select(col(srcCol).as("_u"), col(dstCol).as("_v"))
       .filter(col("_u").isNotNull && col("_v").isNotNull)
@@ -781,9 +778,8 @@ object Graph {
     for (d <- 1 to maxDepth) {
       val frontier = dist.filter(col("dist") === (d - 1).toLong)
         .select(col("seed"), col("node").as("_u"))
-      val f = if (broadcastFrontier) broadcast(frontier) else frontier
       dist = dist.unionByName(
-          sym.join(f, Seq("_u"))
+          sym.join(broadcast(frontier), Seq("_u"))
             .select(col("seed"), col("_v").as("node"),
               lit(d.toLong).as("dist")))
         .groupBy("seed", "node").agg(min("dist").as("dist"))
@@ -822,11 +818,13 @@ object Graph {
     * anti-join against the seen set (all keyed (seed, node) — the
     * seed sample rate bounds state exactly as in
     * [[harmonicCentrality]]); backward = maxDepth−1 level ⋈ edges ⋈
-    * level joins + integer sums. One lazy plan, no driver actions. */
+    * level joins + integer sums; the level sides are always hinted
+    * `broadcast` (past broadcast range, set the object doc's confs).
+    * Every level is checkpointed eagerly, so the call itself runs
+    * 2·maxDepth − 1 checkpoint jobs and the returned plan reads them. */
   def betweennessSampled(edges: DataFrame, srcCol: String,
                          dstCol: String, seeds: DataFrame,
-                         seedCol: String, maxDepth: Int = 3,
-                         broadcastLevels: Boolean = true): DataFrame = {
+                         seedCol: String, maxDepth: Int = 3): DataFrame = {
     require(maxDepth >= 2)
     val e0 = edges.select(col(srcCol).as("_u"), col(dstCol).as("_v"))
       .filter(col("_u").isNotNull && col("_v").isNotNull)
@@ -838,7 +836,7 @@ object Graph {
     var levels = Vector(l0)
     var seen = l0.select("seed", "node")
     for (_ <- 1 to maxDepth) {
-      val prev = if (broadcastLevels) broadcast(levels.last) else levels.last
+      val prev = broadcast(levels.last)
       // eager checkpoint per level (the kTruss posture): the backward
       // pass re-reads every level twice; without truncation each read
       // re-derives the whole forward lineage
@@ -863,8 +861,7 @@ object Graph {
       val dl = levels(l)
         .select(col("seed"), col("node").as("_u"), col("sigma").as("_sv"))
         .join(sym, Seq("_u"))
-        .join(if (broadcastLevels) broadcast(wSide) else wSide,
-          Seq("seed", "_v"))
+        .join(broadcast(wSide), Seq("seed", "_v"))
         .select(col("seed"), col("_u").as("node"),
           floor(col("_sv").cast("double") / col("_sw") *
             (lit(1000000000L) + col("_dw")) + lit(0.5))
@@ -899,12 +896,12 @@ object Graph {
     *
     * Scale shape: identical to [[pageRank]] — per iteration one
     * (rank ⋈ edges) join + one dst-keyed integer sum, rank table
-    * nodes-sized and broadcast while it fits. */
+    * nodes-sized and always hinted `broadcast` (past broadcast range,
+    * set the object doc's confs). */
   def personalizedPageRank(edges: DataFrame, srcCol: String,
                            dstCol: String, seeds: DataFrame,
                            seedCol: String, iters: Int = 3,
                            damping: Double = 0.85,
-                           broadcastRanks: Boolean = true,
                            quantScale: Long = 1000000000L): DataFrame = {
     require(iters >= 0 && damping > 0 && damping < 1 && quantScale >= 1)
     val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
@@ -923,11 +920,10 @@ object Graph {
     val outdeg = e.groupBy(col("_src")).agg(count(lit(1)).as("_outdeg"))
     var ranks = tele.select(col("node"), col("_tele").as("rank"))
     for (_ <- 1 to iters) {
-      val r = if (broadcastRanks) broadcast(ranks) else ranks
       val sums = e
-        .join(r.select(col("node").as("_src"), col("rank")), Seq("_src"))
-        .join(if (broadcastRanks) broadcast(outdeg) else outdeg,
+        .join(broadcast(ranks).select(col("node").as("_src"), col("rank")),
           Seq("_src"))
+        .join(broadcast(outdeg), Seq("_src"))
         .select(col("_dst").as("node"),
           floor(col("rank") / col("_outdeg") * lit(quantScale.toDouble) +
             lit(0.5)).as("_qc"))
@@ -946,11 +942,12 @@ object Graph {
     * the standard lower-bound diameter estimate, and a seed whose
     * n_reached is far below its peers sits in a fragment
     * ([[harmonicCentrality]]'s BFS, read per SEED instead of per
-    * node). Returns (seed, n_reached, eccentricity). Integer-only. */
+    * node). Returns (seed, n_reached, eccentricity). Integer-only.
+    * The frontier is always hinted `broadcast`; past broadcast range,
+    * set the object doc's confs. */
   def seedDistanceProfile(edges: DataFrame, srcCol: String,
                           dstCol: String, seeds: DataFrame,
-                          seedCol: String, maxDepth: Int = 3,
-                          broadcastFrontier: Boolean = true): DataFrame = {
+                          seedCol: String, maxDepth: Int = 3): DataFrame = {
     require(maxDepth >= 1)
     val e0 = edges.select(col(srcCol).as("_u"), col(dstCol).as("_v"))
       .filter(col("_u").isNotNull && col("_v").isNotNull)
@@ -962,9 +959,8 @@ object Graph {
     for (d <- 1 to maxDepth) {
       val frontier = dist.filter(col("dist") === (d - 1).toLong)
         .select(col("seed"), col("node").as("_u"))
-      val f = if (broadcastFrontier) broadcast(frontier) else frontier
       dist = dist.unionByName(
-          sym.join(f, Seq("_u"))
+          sym.join(broadcast(frontier), Seq("_u"))
             .select(col("seed"), col("_v").as("node"),
               lit(d.toLong).as("dist")))
         .groupBy("seed", "node").agg(min("dist").as("dist"))
@@ -986,13 +982,13 @@ object Graph {
     * (label, n_nodes, volume, cut_edges, conductance) — integer
     * counts, one rounded division.
     *
-    * Scale shape: two broadcast joins of the nodes-sized label map
-    * onto the edge list, then map-side-combinable integer sums per
-    * label; 2m rides as a broadcast 1-row total. No iteration. */
+    * Scale shape: two joins of the nodes-sized label map onto the
+    * edge list, always hinted `broadcast` (past broadcast range, set
+    * the object doc's confs), then map-side-combinable integer sums
+    * per label; 2m rides as a broadcast 1-row total. No iteration. */
   def communityConductance(edges: DataFrame, aCol: String, bCol: String,
                            labels: DataFrame, nodeCol: String,
-                           labelCol: String,
-                           broadcastLabels: Boolean = true): DataFrame = {
+                           labelCol: String): DataFrame = {
     val raw = edges.select(col(aCol).as("_a"), col(bCol).as("_b"))
       .filter(col("_a").isNotNull && col("_b").isNotNull &&
         col("_a") =!= col("_b"))
@@ -1000,7 +996,7 @@ object Graph {
       greatest(col("_a"), col("_b")).as("_v")).distinct()
     val lab0 = labels.select(col(nodeCol).as("node"),
       col(labelCol).as("_lab"))
-    val lab = if (broadcastLabels) broadcast(lab0) else lab0
+    val lab = broadcast(lab0)
     val e2 = und
       .join(lab.select(col("node").as("_u"), col("_lab").as("_lu")),
         Seq("_u"), "left")

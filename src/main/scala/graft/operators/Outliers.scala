@@ -15,23 +15,28 @@ import org.apache.spark.sql.functions._
   * over INTEGER-valued columns are exact in double arithmetic (every
   * partial sum < 2^53), so z-scores are reproducible across engines
   * and partitionings; constant groups (variance 0) flag nothing.
+  *
+  * Broadcast hints: [[zscore]], [[robustZscore]] and [[winsorize]]
+  * always join their groups-sized stats hinted `broadcast`. Past
+  * broadcast range, set `spark.sql.optimizer.disableHints=true` and
+  * `spark.sql.autoBroadcastJoinThreshold=-1` on the session for a
+  * plain shuffled equi-join: same result, no driver collect, at the
+  * cost of shuffling the corpus once on the group key.
   */
 object Outliers {
 
-  /** @param broadcastStats when true (default), the per-group moment
-    *         table is broadcast back over the corpus — right up to
-    *         ~10⁷ groups (3 doubles/group ≈ a few hundred MB of
-    *         driver/executor memory). Beyond that, pass false for a
-    *         plain shuffled equi-join: same result, no driver
-    *         collect, at the cost of shuffling the corpus once on the
-    *         group key.
+  /** The per-group moment table is always hinted `broadcast` back
+    * over the corpus — right up to ~10⁷ groups (3 doubles/group ≈ a
+    * few hundred MB of driver/executor memory); beyond that, set the
+    * object doc's confs.
+    *
     * @return the input plus `z` (rounded 6) and `is_outlier`. Rows
     *         whose group key is NULL are dropped (equi-join
     *         semantics) — pre-coalesce the group column to a sentinel
     *         if unknown-group rows should be scored as their own
     *         stratum. */
   def zscore(df: DataFrame, valueCol: String, groupCols: Seq[String],
-             threshold: Double = 3.0, broadcastStats: Boolean = true): DataFrame = {
+             threshold: Double = 3.0): DataFrame = {
     require(groupCols.nonEmpty && threshold > 0)
     val v = col(valueCol).cast("double")
     val g = groupCols.map(col)
@@ -46,10 +51,7 @@ object Outliers {
     // route the clamped value into the constant-group branch.
     val variance = greatest(col("_sv2") / col("_n") - mean * mean, lit(0.0))
     val z = (v - mean) / sqrt(variance)
-    val withStats =
-      if (broadcastStats) df.join(broadcast(stats), groupCols)
-      else df.join(stats, groupCols)
-    withStats
+    df.join(broadcast(stats), groupCols)
       .withColumn("z",
         when(col("_n") === 0 || variance === 0.0, lit(0.0))
           .otherwise(round(z, 6)))
@@ -69,20 +71,18 @@ object Outliers {
     *
     * Scale shape: two grouped EXACT percentiles (each sorts only
     * within its group — the same cost class as q39) with the
-    * groups-sized stats broadcast back between and after; the corpus
+    * groups-sized stats always hinted `broadcast` back between and
+    * after (past broadcast range, set the object doc's confs); the corpus
     * itself is scanned twice, shuffled at most twice on the group
     * key, and never sorted globally. For corpora where exact
     * per-group sort is too much, swap the percentile for the
     * mergeable histogram sketch ([[Sketches]]) — same shape, bounded
     * state. */
   def robustZscore(df: DataFrame, valueCol: String, groupCols: Seq[String],
-                   threshold: Double = 3.5,
-                   broadcastStats: Boolean = true): DataFrame = {
+                   threshold: Double = 3.5): DataFrame = {
     require(groupCols.nonEmpty && threshold > 0)
     val v = col(valueCol).cast("double")
-    def bjoin(d: DataFrame, stats: DataFrame) =
-      if (broadcastStats) d.join(broadcast(stats), groupCols)
-      else d.join(stats, groupCols)
+    def bjoin(d: DataFrame, stats: DataFrame) = d.join(broadcast(stats), groupCols)
     val meds = df.groupBy(groupCols.map(col): _*)
       .agg(expr(s"percentile($valueCol, 0.5)").as("_med"))
     val mads = bjoin(df, meds).groupBy(groupCols.map(col): _*)
@@ -144,19 +144,16 @@ object Outliers {
     * `<valueCol>_w` (rounded 6); original column untouched.
     *
     * Scale shape: one grouped exact-percentile agg (groups-sized,
-    * broadcast back), then a scan-speed projection — the corpus is
-    * never shuffled when the stats broadcast. */
+    * always hinted `broadcast` back; past broadcast range, set the
+    * object doc's confs), then a scan-speed projection — the corpus
+    * is never shuffled while the stats broadcast. */
   def winsorize(df: DataFrame, valueCol: String, groupCols: Seq[String],
-                pLo: Double = 0.05, pHi: Double = 0.95,
-                broadcastStats: Boolean = true): DataFrame = {
+                pLo: Double = 0.05, pHi: Double = 0.95): DataFrame = {
     require(groupCols.nonEmpty && pLo >= 0 && pHi <= 1 && pLo <= pHi)
     val bounds = df.groupBy(groupCols.map(col): _*)
       .agg(expr(s"percentile($valueCol, $pLo)").as("_wlo"),
         expr(s"percentile($valueCol, $pHi)").as("_whi"))
-    val joined =
-      if (broadcastStats) df.join(broadcast(bounds), groupCols)
-      else df.join(bounds, groupCols)
-    joined.withColumn(s"${valueCol}_w",
+    df.join(broadcast(bounds), groupCols).withColumn(s"${valueCol}_w",
         round(least(greatest(col(valueCol).cast("double"), col("_wlo")),
           col("_whi")), 6))
       .drop("_wlo", "_whi")

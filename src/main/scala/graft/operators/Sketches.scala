@@ -237,15 +237,16 @@ object Sketches {
     * per-event-type latency percentiles at corpus scale). Same
     * two-scans-total shape as the global operator; every window is
     * partitioned by the group columns, so nothing ever converges on
-    * one partition. Group bounds join back via broadcast by default
+    * one partition. Group bounds join back always hinted `broadcast`
     * (bounded by the group-key cardinality — fine to ~10^7 groups at
-    * 3 doubles/group); pass `broadcastBounds = false` above that for
-    * a plain shuffled equi-join: identical result, no driver collect,
+    * 3 doubles/group); above that, set
+    * `spark.sql.optimizer.disableHints=true` and
+    * `spark.sql.autoBroadcastJoinThreshold=-1` on the session for a
+    * plain shuffled equi-join: identical result, no driver collect,
     * one extra corpus shuffle on the group key. */
   def histogramQuantilesBy(rows: DataFrame, valueCol: String,
                            groupCols: Seq[String], bins: Int = 64,
-                           qs: Seq[Double] = Seq(0.25, 0.5, 0.9, 0.99),
-                           broadcastBounds: Boolean = true): DataFrame = {
+                           qs: Seq[Double] = Seq(0.25, 0.5, 0.9, 0.99)): DataFrame = {
     require(bins >= 1 && qs.nonEmpty && groupCols.nonEmpty)
     val v = col(valueCol).cast("double")
     val g = groupCols.map(col)
@@ -255,7 +256,7 @@ object Sketches {
       .otherwise(least(floor((col("v") - col("lo")) /
         ((col("hi") - col("lo")) / bins)).cast("long"), lit(bins - 1L)))
     val bucketed = rows.select((g :+ v.as("v")): _*).where(col("v").isNotNull)
-      .join(if (broadcastBounds) broadcast(bounds) else bounds, groupCols)
+      .join(broadcast(bounds), groupCols)
       .select((g :+ bucket.as("bucket") :+ col("lo") :+ col("hi") :+ col("n")): _*)
       .groupBy((g :+ col("bucket")): _*).agg(count(lit(1)).as("cnt"),
         min("lo").as("lo"), min("hi").as("hi"), min("n").as("n"))

@@ -15,10 +15,11 @@ import java.util
   * run, `task.ts:172-182`):
   *
   * {{{
+  * FeatureCollectionDataSource.posts.put(id, post)
   * FeatureCollectionSink.toFeatureJson(features)
   *   .write.format("featurecollection")
-  *   .option("targetPath", "/out/fc.json")   // or option("postId", ...)
-  *   .mode("overwrite").save()
+  *   .option("postId", id)
+  *   .mode("append").save()
   * }}}
   *
   * Executors serialize their partition's features into a JSON fragment
@@ -31,11 +32,11 @@ import java.util
   * partial POST ever happens.
   *
   * Input contract: exactly one string column (the pre-rendered feature
-  * JSON from `toFeatureJson`). Effects: `targetPath` writes the
-  * document to a file; `postId` looks up a programmatic effect
-  * registered in [[FeatureCollectionDataSource.posts]] (closures
-  * cannot ride string options; `Pipeline.run` registers its `post`
-  * under a per-call id and removes it after the write).
+  * JSON from `toFeatureJson`). Effect: the required `postId` names a
+  * programmatic effect registered in
+  * [[FeatureCollectionDataSource.posts]] (closures cannot ride string
+  * options; `Pipeline.run` registers its `post` under a per-call id
+  * and removes it after the write).
   *
   * Scale note: the assembled document is one string on the driver —
   * appropriate for the reference's payloads (single POST is the API's
@@ -72,18 +73,18 @@ final class FcTable(options: CaseInsensitiveStringMap)
         s"(FeatureCollectionSink.toFeatureJson output), got ${s.simpleString}")
     import scala.jdk.CollectionConverters._
     val merged = (options.asScala ++ info.options().asScala).toMap
-    new FcWriteBuilder(merged.get("targetpath"), merged.get("postid"))
+    val postId = merged.get("postid")
+    require(postId.isDefined, "featurecollection sink needs option postId")
+    new FcWriteBuilder(postId.get)
   }
 }
 
-final class FcWriteBuilder(targetPath: Option[String], postId: Option[String])
+final class FcWriteBuilder(postId: String)
     extends WriteBuilder with SupportsTruncate {
-  require(targetPath.isDefined || postId.isDefined,
-    "featurecollection sink needs option targetPath or postId")
   // the sink emits ONE document per run; overwrite == append semantics
   override def truncate(): WriteBuilder = this
   override def build(): Write = new Write {
-    override def toBatch: BatchWrite = new FcBatchWrite(targetPath, postId)
+    override def toBatch: BatchWrite = new FcBatchWrite(postId)
   }
 }
 
@@ -92,21 +93,16 @@ final class FcWriteBuilder(targetPath: Option[String], postId: Option[String])
 case class FcFragment(partitionId: Int, json: String, n: Long)
     extends WriterCommitMessage
 
-final class FcBatchWrite(targetPath: Option[String], postId: Option[String])
-    extends BatchWrite {
+final class FcBatchWrite(postId: String) extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     FcWriterFactory
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val doc = messages.collect { case f: FcFragment if f.n > 0 => f }
       .sortBy(_.partitionId).map(_.json)
       .mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
-    targetPath.foreach(p => java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(p), doc))
-    postId.foreach { id =>
-      val post = FeatureCollectionDataSource.posts.get(id)
-      require(post != null, s"no post effect registered under '$id'")
-      post(doc)
-    }
+    val post = FeatureCollectionDataSource.posts.get(postId)
+    require(post != null, s"no post effect registered under '$postId'")
+    post(doc)
   }
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }

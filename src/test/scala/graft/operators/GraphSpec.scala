@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 class GraphSpec extends SparkSpec {
@@ -38,11 +39,13 @@ class GraphSpec extends SparkSpec {
   test("pageRank: partitioning-independent (integer-sum order freedom)") {
     val base = Graph.pageRank(edges.toDF("s", "d"), "s", "d", iters = 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    val shuffled = Graph.pageRank(
-        edges.toDF("s", "d").repartition(7), "s", "d",
-        iters = 3, broadcastRanks = false)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+    val (shuffled, offHinted) = withoutBroadcastHints {
+      val df = Graph.pageRank(
+        edges.toDF("s", "d").repartition(7), "s", "d", iters = 3)
+      (df.collect().map(r => (r.getLong(0), r.getDouble(1))).toMap, hinted(df))
+    }
     assert(base == shuffled)
+    assert(!offHinted)
   }
 
   test("triangleCounts: known triangles; loops/parallel/reversed edges collapse") {
@@ -152,10 +155,13 @@ class GraphSpec extends SparkSpec {
       .toDF("s", "d")
     val base = Graph.bfsDistances(e, "s", "d", Seq(1L).toDF("n"), "n", 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val shuf = Graph.bfsDistances(e.repartition(7), "s", "d",
-        Seq(1L).toDF("n"), "n", 4, broadcastFrontier = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (shuf, offHinted) = withoutBroadcastHints {
+      val df = Graph.bfsDistances(e.repartition(7), "s", "d",
+        Seq(1L).toDF("n"), "n", 4)
+      (df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, hinted(df))
+    }
     assert(base == shuf)
+    assert(!offHinted)
   }
 
   test("weightedDistances: cheap 2-hop beats direct edge once rounds allow it") {
@@ -250,9 +256,12 @@ class GraphSpec extends SparkSpec {
     import spark.implicits._
     val e = (1L to 60L).map(i => (i % 7, i % 13)).toDF("s", "d")
     val a = Graph.hits(e, "s", "d").collect().map(_.toString).sorted.toSeq
-    val b = Graph.hits(e.repartition(11), "s", "d", broadcastScores = false)
-      .collect().map(_.toString).sorted.toSeq
+    val (b, offHinted) = withoutBroadcastHints {
+      val df = Graph.hits(e.repartition(11), "s", "d")
+      (df.collect().map(_.toString).sorted.toSeq, hinted(df))
+    }
     assert(a == b && a.nonEmpty)
+    assert(!offHinted)
   }
 
   test("modularity: hand-computed directed weighted partition quality") {
@@ -361,10 +370,13 @@ class GraphSpec extends SparkSpec {
     assert(out == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L,
       5L -> 1L, 6L -> 1L), s"$out")
     // partitioning independence (order statistics are order-free)
-    val shuf = Graph.coreness(e.toDF("a", "b").repartition(7), "a", "b",
-      rounds = 3, broadcastValues = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (shuf, offHinted) = withoutBroadcastHints {
+      val df = Graph.coreness(e.toDF("a", "b").repartition(7), "a", "b",
+        rounds = 3)
+      (df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, hinted(df))
+    }
     assert(shuf == out)
+    assert(!offHinted)
   }
 
   test("harmonicCentrality: path graph from two seeds, exact 1/d sums") {
@@ -427,4 +439,42 @@ class GraphSpec extends SparkSpec {
     assert(out(1L) == 0.15 && out(2L) > out(3L) && out(2L) > 0.1, s"$out")
   }
 
+  test("hinted operators: hints-off path returns the default rows, with no hint in its plan") {
+    val e = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 4L, 2L), (4L, 5L, 1L),
+      (3L, 6L, 5L), (6L, 1L, 2L), (2L, 4L, 4L)).toDF("s", "d", "w")
+    val seeds = Seq(1L, 4L).toDF("n")
+    val labels = Seq((1L, 0L), (2L, 0L), (3L, 0L), (4L, 1L), (5L, 1L), (6L, 1L))
+      .toDF("node", "label")
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "personalizedPageRank" -> (() =>
+        Graph.personalizedPageRank(e, "s", "d", seeds, "n")),
+      "labelPropagation" -> (() => Graph.labelPropagation(e, "s", "d")),
+      "communityConductance" -> (() =>
+        Graph.communityConductance(e, "s", "d", labels, "node", "label")),
+      "weightedDistances" -> (() =>
+        Graph.weightedDistances(e, "s", "d", "w", seeds, "n", rounds = 3)),
+      "kCore" -> (() => Graph.kCore(e, "s", "d", k = 2, rounds = 2)),
+      "harmonicCentrality" -> (() =>
+        Graph.harmonicCentrality(e, "s", "d", seeds, "n", maxDepth = 3)),
+      "seedDistanceProfile" -> (() =>
+        Graph.seedDistanceProfile(e, "s", "d", seeds, "n")),
+      "betweennessSampled" -> (() =>
+        Graph.betweennessSampled(e, "s", "d", seeds, "n")))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val bad = ops.flatMap { case (name, op) =>
+      val on = op()
+      val (offRows, offHinted) = withoutBroadcastHints {
+        val off = op()
+        (rows(off), hinted(off))
+      }
+      Seq(
+        // betweennessSampled checkpoints every level eagerly: its hints
+        // live in the checkpoint jobs, never in the returned plan
+        (!hinted(on) && name != "betweennessSampled") -> "default plan has no hint",
+        offHinted -> "hint survived disableHints",
+        (offRows != rows(on) || offRows.isEmpty) -> "rows differ")
+        .collect { case (true, why) => s"$name: $why" }
+    }
+    assert(bad.isEmpty, bad.mkString("; "))
+  }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 class OutliersSpec extends SparkSpec {
@@ -37,11 +38,12 @@ class OutliersSpec extends SparkSpec {
     val rows = (1 to 400).map(i => (i.toLong, s"g${i % 4}", (i * 53 % 307).toLong))
     val df = rows.toDF("id", "grp", "v")
     val bc = Outliers.zscore(df, "v", Seq("grp"))
-    val sh = Outliers.zscore(df, "v", Seq("grp"), broadcastStats = false)
-    assert(bc.orderBy("id").collect().map(_.toSeq).toSeq ==
-      sh.orderBy("id").collect().map(_.toSeq).toSeq)
-    // the flag really drops the broadcast hint (analyzed plan — AQE may
-    // still auto-broadcast a small side at execution, which is fine)
+    val (sh, shRows) = withoutBroadcastHints {
+      val sh = Outliers.zscore(df, "v", Seq("grp"))
+      (sh, sh.orderBy("id").collect().map(_.toSeq).toSeq)
+    }
+    assert(bc.orderBy("id").collect().map(_.toSeq).toSeq == shRows)
+    // hints off really drops the broadcast hint (analyzed plan)
     assert(bc.queryExecution.analyzed.toString.contains("ResolvedHint"))
     assert(!sh.queryExecution.analyzed.toString.contains("ResolvedHint"))
   }
@@ -123,5 +125,26 @@ class OutliersSpec extends SparkSpec {
       .toMap
     assert(out("g1") == ((5L, 3.0, 1.0, 1L)), s"$out")
     assert(out("g2") == ((4L, 5.0, 0.0, 1L)), s"$out")
+  }
+
+  test("robustZscore and winsorize: hints-off path returns the default rows, with no hint in its plan") {
+    val df = (1 to 300).map(i => (i.toLong, s"g${i % 3}", (i * 41 % 97).toLong))
+      .toDF("id", "grp", "v")
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "robustZscore" -> (() => Outliers.robustZscore(df, "v", Seq("grp"))),
+      "winsorize" -> (() => Outliers.winsorize(df, "v", Seq("grp"))))
+    def rows(d: DataFrame) = d.orderBy("id").collect().map(_.toSeq).toSeq
+    val bad = ops.flatMap { case (name, op) =>
+      val on = op()
+      val (offRows, offHinted) = withoutBroadcastHints {
+        val off = op()
+        (rows(off), hinted(off))
+      }
+      Seq(!hinted(on) -> "default plan has no hint",
+        offHinted -> "hint survived disableHints",
+        (offRows != rows(on)) -> "rows differ")
+        .collect { case (true, why) => s"$name: $why" }
+    }
+    assert(bad.isEmpty, bad.mkString("; "))
   }
 }

@@ -22,11 +22,11 @@ class FeatureCollectionDataSourceSpec extends SparkSpec {
       """{"id":"inreach-2","speed":1.25,"time":"2026-08-12T05:12:00.000Z"},""" +
       """{"id":"inreach-3","speed":0.0,"time":"2026-08-12T05:14:00.000Z"}]}"""
     val json = FeatureCollectionSink.toFeatureJson(features)
-    val out = graft.TempDirs.create("fc-sink")
-      .resolve("fc.json").toString
-    json.write.format("featurecollection")
-      .option("targetPath", out).mode("overwrite").save()
-    val got = java.nio.file.Files.readString(java.nio.file.Paths.get(out))
+    var got: String = null
+    FeatureCollectionDataSource.posts.put("spec-doc", s => got = s)
+    try json.write.format("featurecollection")
+      .option("postId", "spec-doc").mode("overwrite").save()
+    finally FeatureCollectionDataSource.posts.remove("spec-doc")
     assert(got == want, s"\n$got\n!=\n$want")
     assert(got.startsWith("""{"type":"FeatureCollection","features":[{"""))
   }
@@ -52,7 +52,7 @@ class FeatureCollectionDataSourceSpec extends SparkSpec {
     // the engine layer
     val err = intercept[Exception] {
       features.write.format("featurecollection")
-        .option("targetPath", "/tmp/never.json").mode("overwrite").save()
+        .option("postId", "never").mode("overwrite").save()
     }
     assert(err.getMessage.contains("TOO_MANY_DATA_COLUMNS") ||
       err.getMessage.contains("ONE string column"))
