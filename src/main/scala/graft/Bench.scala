@@ -147,18 +147,9 @@ object Bench {
     // price the host, not share a window with engine work
     val canarySec = canary()
     val pcanarySec = parallelCanary(spark)
-    // optional subset for local iteration: SPARK_GRAFT_ONLY=q35,q36
-    // (qNN ids or full names — mirrors Verify's filter). Match the
-    // qNN id EXACTLY, not by startsWith: "q47" must select only q47,
-    // not q470-q475 — the BASELINE.md solo-rerun adjudication protocol
-    // depends on a one-query run actually being one query
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    def keep(name: String): Boolean =
-      only.forall(o => o.contains(name) || o.contains(name.takeWhile(_ != '_')))
     // stable order + cache isolation: operators that persist
     // intermediates (LSH) must not squeeze later queries' memory.
-    // clearCache runs OUTSIDE the timed window — a query must not be
+    // SparkEntry.release runs OUTSIDE the timed window — a query must not be
     // charged for tearing down its own caches.
     // CONTENTION DEFENSE: each query runs `passes` times (default 2)
     // and reports the MIN. The round-4 official artifact recorded
@@ -231,17 +222,11 @@ object Bench {
       } else Map.empty[String, Double]
     } catch { case _: Throwable => Map.empty[String, Double] }
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => keep(name) }
+      // optional subset for local iteration: SPARK_GRAFT_ONLY=q35,q36.
+      // The BASELINE.md solo-rerun adjudication protocol depends on a
+      // one-query run actually being one query
+      .filter { case (name, _) => SparkEntry.picked(name) }
       .map { case (name, fn) =>
-        def cleanup(): Unit = {
-          // full isolation between timed windows: SQL cache AND raw
-          // persisted RDDs (iterative operators checkpoint; their
-          // blocks are invisible to catalog.clearCache and would
-          // squeeze every later query's memory — EntryIsolationSpec
-          // pins this cleanup as sufficient)
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        }
         def onePass(): (Double, Option[String]) = {
           val t0 = System.nanoTime()
           // a failing query must poison the bench output, not shrink
@@ -250,7 +235,7 @@ object Bench {
             case e: Throwable => Some(Option(e.getMessage).getOrElse(e.getClass.getName))
           }
           val dt = (System.nanoTime() - t0) / 1e9
-          cleanup()
+          SparkEntry.release(spark)
           (dt, err)
         }
         // an erroring first pass is not retried (a deterministic
@@ -284,11 +269,7 @@ object Bench {
           } else (dt, false)
         (name, dtG, err, contended)
       }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
+    def jstr(s: String): String = SparkEntry.jsonString(s)
     // The harness keeps only the LAST ~2000 chars of this program's
     // output; a line longer than that loses its head (round-3 artifact
     // had parsed:null for exactly this reason). Keep the whole line
@@ -377,8 +358,8 @@ object Bench {
       // BenchArtifactSpec: a subset/errored/contended run at a
       // non-canonical corpus also diverts, composing both suffixes —
       // only an env override is silent, being deliberate)
-      val (detailPath, divertWhy) = detailRoute(sfDir, cpus, only.nonEmpty,
-        errs.nonEmpty, contended.nonEmpty, hasDrift,
+      val (detailPath, divertWhy) = detailRoute(sfDir, cpus,
+        sys.env.contains("SPARK_GRAFT_ONLY"), errs.nonEmpty, contended.nonEmpty, hasDrift,
         sys.env.get("GRAFT_BENCH_DETAIL"))
       divertWhy.foreach { why =>
         System.err.println(s"[bench] $why run - detail diverted " +

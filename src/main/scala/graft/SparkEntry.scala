@@ -727,6 +727,32 @@ object SparkEntry {
       Instant.parse("2026-08-12T05:30:00Z"))
   }
 
+  /** Whether a comma-separated pick list (`SPARK_GRAFT_ONLY`, Prof's
+    * queries) selects query `name`: by full name or exact `qNN` id, so
+    * "q47" never selects q470. */
+  def selects(picks: String, name: String): Boolean = {
+    val p = picks.split(",").map(_.trim).toSet
+    p.contains(name) || p.contains(name.takeWhile(_ != '_'))
+  }
+
+  /** Whether `SPARK_GRAFT_ONLY`, Bench's and Verify's optional subset for
+    * local iteration, selects query `name` (all of them when unset). */
+  def picked(name: String): Boolean = sys.env.get("SPARK_GRAFT_ONLY").forall(selects(_, name))
+
+  /** The cleanup between queries: the SQL cache, and the persisted RDDs
+    * (checkpoint blocks) that `clearCache` cannot see. */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+  }
+
+  /** `s` as a JSON string. Every control character is escaped: a tab or
+    * CR in the oracle SQL would otherwise break the driver's json.load. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"; case '\r' => "\\r"; case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+  } + "\""
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ── Reference-surface operators (SURVEY.md §2) ──────────────────
     // P1/P9 + S5: predicate + wide projection (filter pushes to scan).

@@ -13,13 +13,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // optional subset for local iteration (mirrors Bench):
     // SPARK_GRAFT_ONLY=q49,q53. The driver never sets it.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    // exact qNN-id or full-name match (mirrors Bench): "q47" must
-    // select only q47, never q470-q476
-    def keep(name: String): Boolean =
-      only.forall(o => o.contains(name) || o.contains(name.takeWhile(_ != '_')))
-    SparkEntry.queries.filter(q => keep(q._1)).foreach { case (name, fn) =>
+    SparkEntry.queries.filter(q => SparkEntry.picked(q._1)).foreach { case (name, fn) =>
       // coalesce(1) is harness-only: DuckDB diffs one file per query at
       // sf0.01. Product writes stay partitioned — never copy this shape.
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -27,24 +21,11 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      spark.catalog.clearCache()
-      // checkpoint blocks (e.g. connected components) outlive clearCache
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      SparkEntry.release(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.oracleSql.filter(kv => SparkEntry.picked(kv._1))
+      .map { case (k, v) => s"${SparkEntry.jsonString(k)}: ${SparkEntry.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

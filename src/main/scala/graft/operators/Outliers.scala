@@ -21,7 +21,9 @@ import org.apache.spark.sql.functions._
   * broadcast range, set `spark.sql.optimizer.disableHints=true` and
   * `spark.sql.autoBroadcastJoinThreshold=-1` on the session for a
   * plain shuffled equi-join: same result, no driver collect, at the
-  * cost of shuffling the corpus once on the group key.
+  * cost of shuffling the corpus once on the group key. Spark 4.1.2 then
+  * logs one expected `WARN HintErrorLogger: Unrecognized hint:
+  * broadcast()` per dropped hint.
   */
 object Outliers {
 

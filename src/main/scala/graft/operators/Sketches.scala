@@ -243,7 +243,9 @@ object Sketches {
     * `spark.sql.optimizer.disableHints=true` and
     * `spark.sql.autoBroadcastJoinThreshold=-1` on the session for a
     * plain shuffled equi-join: identical result, no driver collect,
-    * one extra corpus shuffle on the group key. */
+    * one extra corpus shuffle on the group key. Spark 4.1.2 then logs
+    * one expected `WARN HintErrorLogger: Unrecognized hint: broadcast()`
+    * per dropped hint. */
   def histogramQuantilesBy(rows: DataFrame, valueCol: String,
                            groupCols: Seq[String], bins: Int = 64,
                            qs: Seq[Double] = Seq(0.25, 0.5, 0.9, 0.99)): DataFrame = {

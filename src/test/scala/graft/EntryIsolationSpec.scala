@@ -40,4 +40,18 @@ class EntryIsolationSpec extends SparkSpec {
     assert((duals -- queries).isEmpty, "duals without a query")
     assert(queries.size == 481)
   }
+
+  // Bench, Verify (SPARK_GRAFT_ONLY) and Prof (its query argument)
+  // all pick queries with SparkEntry.selects; a one-query run must
+  // actually be one query
+  test("a qNN id selects exactly that query, never q470-q479; a full name selects itself") {
+    val names = SparkEntry.queries.keys.toSeq
+    def chosen(picks: String*) = names.filter(SparkEntry.selects(picks.mkString(","), _)).sorted
+    assert(names.count(_.startsWith("q47")) > 1)
+    assert(chosen("q47") == Seq("q47_dedup_clusters"))
+    assert(chosen("q470_tpch_q2") == Seq("q470_tpch_q2"))
+    assert(chosen("q47", "q476") == Seq("q476_ivfpq_serve_bucketed", "q47_dedup_clusters"))
+    assert(chosen("q47_dedup") == Nil, "a name prefix is neither an id nor a name")
+    assert(names.forall(n => chosen(n) == Seq(n)))
+  }
 }

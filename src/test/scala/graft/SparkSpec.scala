@@ -1,5 +1,6 @@
 package graft
 
+import graft.plans.GraftMeter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -28,6 +29,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Runs `body` with a fresh [[GraftMeter]] on the shared session and
+    * unregisters the meter afterwards. */
+  def withMeter[T](body: GraftMeter => T): T = {
+    val m = new GraftMeter(spark)
+    try body(m)
+    finally {
+      spark.listenerManager.unregister(m)
+      spark.sparkContext.removeSparkListener(m)
     }
   }
 

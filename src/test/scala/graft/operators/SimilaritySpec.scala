@@ -390,49 +390,20 @@ class SimilaritySpec extends SparkSpec {
   // the corpus file exactly iters+1 times for assignment plus once
   // for the seed sample
   test("kmeansRefine: lazy construction (no driver actions), iters+2 file scans") {
-    // job ids are assigned monotonically per app, so "no job STARTED
-    // between marker m1 and marker m2" is exactly "no recorded id in
-    // (id(m1), id(m2))" — immune to listener-bus lag from earlier
-    // suites (their jobs carry smaller ids regardless of when their
-    // events arrive)
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        seen.add((js.jobId,
-          Option(js.properties.getProperty("spark.jobGroup.id")).getOrElse("")))
-        ()
-      }
-    }
-    def marker(tag: String): Int = {
-      spark.sparkContext.setJobGroup(tag, tag)
-      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
-      var waited = 0
-      import scala.jdk.CollectionConverters._
-      def find() = seen.iterator().asScala.collectFirst {
-        case (id, g) if g == tag => id
-      }
-      while (find().isEmpty && waited < 10000) { Thread.sleep(100); waited += 100 }
-      find().getOrElse(fail(s"marker job $tag never observed"))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    // the meter ends a measured block with a marker job and returns only
+    // once the bus has delivered the marker's end, so every job started
+    // during construction has been seen: zero jobs in the construction's
+    // group is exactly "no driver action", immune to listener-bus lag
+    withMeter { meter =>
       val iters = 2
-      val m1 = marker("kmeans-lazy-m1")
-      val df = Similarity.kmeansRefine(emb, k = 8, iters = iters)
-      val m2 = marker("kmeans-lazy-m2")
-      import scala.jdk.CollectionConverters._
-      // a marker count() may itself emit several jobs (AQE) — exclude
-      // by group tag; anything else with an id between the markers
-      // was started during plan construction
-      val between = seen.iterator().asScala
-        .filter { case (id, g) =>
-          id > m1 && id < m2 && !g.startsWith("kmeans-lazy-m") }.toList
-      assert(between.isEmpty,
-        s"plan construction must be fully lazy; jobs ran: $between")
+      val corpus = emb // reading the parquet schema runs a job of its own
+      val df = meter.measure("kmeans-lazy")(
+        Similarity.kmeansRefine(corpus, k = 8, iters = iters))
+      assert(meter("kmeans-lazy").jobs == 0,
+        s"plan construction must be fully lazy; jobs ran: ${meter("kmeans-lazy").jobTable.values}")
       df.collect()
-      // count runtime file scans with the same AQE descent the metrics
-      // listener uses; ReusedExchange = a shared subtree that runs once
+      // count runtime file scans with the same AQE descent the meter's
+      // planCounts uses; ReusedExchange = a shared subtree that runs once
       import org.apache.spark.sql.execution.{FileSourceScanLike, SparkPlan}
       import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
       import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
@@ -445,7 +416,7 @@ class SimilaritySpec extends SparkSpec {
       }
       val n = scans(df.queryExecution.executedPlan)
       assert(n == iters + 2, s"expected ${iters + 2} corpus scans, plan has $n")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("srpSearch: null vectors get null signatures and never surface as candidates") {
